@@ -233,6 +233,42 @@ def _probe_cells(queries_df: DataFrame, cents, n_probe: int, id_col: str, vec_co
     return rows, sorted(probed), id_type
 
 
+def _where_in(df: DataFrame, filters: dict | None) -> DataFrame:
+    """Apply ``filters`` (metadata column -> value or list of values) as
+    LITERAL ``isin`` predicates: over partition columns they prune
+    directories at planning time, over row columns they push down to
+    parquet row groups. ``None``/``{}`` leaves ``df`` unfiltered."""
+    for col, vals in (filters or {}).items():
+        vals = list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
+        df = df.filter(F.col(col).isin(vals))
+    return df
+
+
+def _probe_scan(
+    spark: SparkSession, cells: DataFrame, rows, id_type: str, id_name: str
+) -> DataFrame:
+    """The candidate stage of every served IVF form (static, filtered,
+    exact-pruned, stream-maintained): the probe ``rows``
+    ``(query_id, qvec, cell)`` from :func:`_probe_cells` broadcast-join
+    ``cells`` under a LITERAL ``cell IN (...)`` over the probed cells
+    (partition pruning), minus self-pairs. Returns the
+    ``(query_id, qvec, neighbor_id, cvec)`` candidates
+    ``similarity.cosine_rank_topk`` scores."""
+    if not rows:
+        raise ValueError("queries_df is empty")
+    probes = spark.createDataFrame(
+        rows, f"query_id {id_type}, qvec array<double>, cell int"
+    )
+    corpus = cells.filter(
+        F.col("cell").isin(sorted({r[2] for r in rows}))  # literal -> pruning
+    ).select(
+        F.col(id_name).alias("neighbor_id"), F.col("embedding").alias("cvec"), "cell"
+    )
+    return corpus.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+
+
 def ivf_topk_from_index(
     spark: SparkSession,
     index_dir: str,
@@ -241,96 +277,34 @@ def ivf_topk_from_index(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    filters: dict | None = None,
 ) -> DataFrame:
     """IVF ANN served from the materialized index: probe cells are
     computed driver-side from the persisted centroids, and the corpus
     scan carries a LITERAL ``cell IN (...)`` predicate — Spark prunes
     the non-probed partitions at planning time (PartitionFilters), so
     the read is ∝ probed cells, not corpus size. Scoring matches
-    ``similarity.ivf_topk`` exactly."""
-    meta = load_ann_meta(index_dir)
-    rows, probed, id_type = _probe_cells(
-        queries_df, meta["centroids"], n_probe, id_col, vec_col
-    )
-    if not rows:
-        raise ValueError("queries_df is empty")
-    probes = spark.createDataFrame(
-        rows, f"query_id {id_type}, qvec array<double>, cell int"
-    )
-    corpus = (
-        spark.read.parquet(os.path.join(index_dir, "cells"))
-        .filter(F.col("cell").isin(probed))  # literal -> partition pruning
-        .select(
-            F.col(meta["id_col"]).alias("neighbor_id"),
-            F.col("embedding").alias("cvec"),
-            "cell",
-        )
-    )
-    cands = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return similarity.cosine_rank_topk(cands, k)
+    ``similarity.ivf_topk`` exactly.
 
-
-def ivf_filtered_topk_from_index(
-    spark: SparkSession,
-    index_dir: str,
-    queries_df: DataFrame,
-    filters: dict,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """FILTERED vector search (VERDICT r7 #5): a metadata predicate
-    composed with the served IVF probe — the modern-retrieval staple
-    ("nearest neighbors WHERE label = x"). ``filters`` maps metadata
+    ``filters`` (VERDICT r7 #5, filtered vector search) maps metadata
     column -> value or list of values (equality/IN — the
-    partition-prunable class); post-filtering a plain top-k instead
-    would under-fill k whenever the filter is selective, which is why
-    the predicate belongs INSIDE the candidate scan.
-
-    When the index was materialized with the filter columns in
-    ``meta_cols``, both the probe set and the predicate are LITERALS
-    over partition columns, so the scan prunes to the cell ∩ predicate
-    directories at planning time (``PartitionFilters: cell IN (...)
-    AND label IN (...)`` — asserted by test). Filter columns not in
-    the partitioning still push down to parquet row groups.
-
-    Probing every cell degrades exactly to FILTERED BRUTE FORCE, which
-    is what gives the served query its full value-level oracle (the
-    established degenerate-config idiom). Scoring is
-    ``similarity.cosine_rank_topk``, identical to the unfiltered path.
-    """
-    if not filters:
-        raise ValueError(
-            "filters must name at least one metadata column; use "
-            "ivf_topk_from_index for unfiltered search"
-        )
+    partition-prunable class) and composes the predicate INSIDE the
+    candidate scan: post-filtering a plain top-k would under-fill k
+    whenever the filter is selective. When the index was materialized
+    with the filter columns in ``meta_cols``, the scan prunes to the
+    cell ∩ predicate directories (``PartitionFilters: cell IN (...)
+    AND label IN (...)`` — asserted by test); other columns push down
+    to parquet row groups. Probing every cell degrades exactly to
+    FILTERED BRUTE FORCE, which gives the served query its full
+    value-level oracle (the degenerate-config idiom)."""
     meta = load_ann_meta(index_dir)
-    rows, probed, id_type = _probe_cells(
+    rows, _, id_type = _probe_cells(
         queries_df, meta["centroids"], n_probe, id_col, vec_col
     )
-    if not rows:
-        raise ValueError("queries_df is empty")
-    probes = spark.createDataFrame(
-        rows, f"query_id {id_type}, qvec array<double>, cell int"
+    cells = _where_in(spark.read.parquet(os.path.join(index_dir, "cells")), filters)
+    return similarity.cosine_rank_topk(
+        _probe_scan(spark, cells, rows, id_type, meta["id_col"]), k
     )
-    corpus = spark.read.parquet(os.path.join(index_dir, "cells")).filter(
-        F.col("cell").isin(probed)  # literal -> partition pruning
-    )
-    for col, vals in filters.items():
-        vals = list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
-        corpus = corpus.filter(F.col(col).isin(vals))  # literal -> pruning too
-    corpus = corpus.select(
-        F.col(meta["id_col"]).alias("neighbor_id"),
-        F.col("embedding").alias("cvec"),
-        "cell",
-    )
-    cands = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return similarity.cosine_rank_topk(cands, k)
 
 
 def pq_topk_from_index(
@@ -342,6 +316,7 @@ def pq_topk_from_index(
     n_probe: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    filters: dict | None = None,
 ) -> DataFrame:
     """PQ ANN served from the materialized codes: ADC lookup-table scan
     over ``codes/`` (m ints per row), shortlist, exact rerank against
@@ -355,7 +330,14 @@ def pq_topk_from_index(
     lakehouse layout. ``None`` scans all codes (plain PQ), matching
     ``similarity.pq_topk`` exactly. The ADC expression, shortlist
     tie-break and exact rerank are the SHARED
-    ``similarity.adc_shortlist_rerank`` definition."""
+    ``similarity.adc_shortlist_rerank`` definition.
+
+    ``filters`` (as in :func:`ivf_topk_from_index`) applies to the codes
+    scan: the codes table mirrors the (cell, *meta) partitioning, so the
+    predicate prunes code directories before any lookup-table
+    arithmetic runs, and the shortlist is taken over predicate-passing
+    candidates only. A corpus-wide ``shortlist`` degrades the ADC stage
+    to filtered brute force, the oracle idiom."""
     import numpy as np
 
     meta = load_ann_meta(index_dir)
@@ -368,87 +350,13 @@ def pq_topk_from_index(
     codebook = np.asarray(meta["pq_codebook"], dtype=np.float64)
     queries = similarity.pq_query_tables(queries_df, codebook, id_col, vec_col)
 
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    codes = _where_in(spark.read.parquet(os.path.join(index_dir, "codes")), filters)
     if n_probe is not None:
         rows, probed, id_type = _probe_cells(
             queries_df, meta["centroids"], n_probe, id_col, vec_col
         )
         # union filter = partition pruning for the SCAN; per-query
         # bound = the (query, cell) probe join below
-        codes = codes.filter(F.col("cell").isin(probed))
-        probe_pairs = spark.createDataFrame(
-            [(r[0], r[2]) for r in rows], f"query_id {id_type}, cell int"
-        )
-        cands = (
-            codes.select(F.col(meta["id_col"]).alias("neighbor_id"), "code", "cell")
-            .join(F.broadcast(probe_pairs), "cell")
-            .join(F.broadcast(queries), "query_id")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    else:
-        cands = (
-            codes.select(F.col(meta["id_col"]).alias("neighbor_id"), "code")
-            .crossJoin(F.broadcast(queries))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    vectors = spark.read.parquet(os.path.join(index_dir, "cells")).select(
-        F.col(meta["id_col"]).alias("neighbor_id"), F.col("embedding").alias("cvec")
-    )
-    return similarity.adc_shortlist_rerank(
-        cands, vectors, codebook.shape[0], k, shortlist
-    )
-
-
-def pq_filtered_topk_from_index(
-    spark: SparkSession,
-    index_dir: str,
-    queries_df: DataFrame,
-    filters: dict,
-    k: int = 5,
-    shortlist: int = 32,
-    n_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Filtered vector search on the COMPRESSED path: the metadata
-    predicate composes with the ADC codes scan exactly as
-    :func:`ivf_filtered_topk_from_index` composes it with the cells
-    scan — when the index was materialized with the filter columns in
-    ``meta_cols``, the codes table is partitioned by (cell, *meta), so
-    the predicate prunes code directories before any lookup-table
-    arithmetic runs, and the exact rerank only ever sees
-    predicate-passing ids (the shortlist is taken over filtered
-    candidates — post-filtering a plain PQ top-k would under-fill k).
-
-    A corpus-wide ``shortlist`` degrades the ADC stage to "exact rerank
-    of every filtered candidate" == filtered brute force, the oracle
-    idiom. ``n_probe`` bounds the scan to probed cells (filtered
-    IVF-PQ)."""
-    import numpy as np
-
-    if not filters:
-        raise ValueError(
-            "filters must name at least one metadata column; use "
-            "pq_topk_from_index for unfiltered search"
-        )
-    meta = load_ann_meta(index_dir)
-    if meta.get("pq_codebook") is None:
-        raise ValueError(
-            f"index at {index_dir} was built without PQ codes "
-            "(materialize_ann_index(include_pq=False)); rebuild with "
-            "include_pq=True to serve PQ queries"
-        )
-    codebook = np.asarray(meta["pq_codebook"], dtype=np.float64)
-    queries = similarity.pq_query_tables(queries_df, codebook, id_col, vec_col)
-
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    for col, vals in filters.items():
-        vals = list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
-        codes = codes.filter(F.col(col).isin(vals))  # literal -> pruning
-    if n_probe is not None:
-        rows, probed, id_type = _probe_cells(
-            queries_df, meta["centroids"], n_probe, id_col, vec_col
-        )
         codes = codes.filter(F.col("cell").isin(probed))
         probe_pairs = spark.createDataFrame(
             [(r[0], r[2]) for r in rows], f"query_id {id_type}, cell int"
@@ -481,6 +389,7 @@ def sq_topk_from_index(
     shortlist: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    filters: dict | None = None,
 ) -> DataFrame:
     """SQ8 ANN served from the materialized int8 codes (``sq/``): the
     third probe style over the one train-once artifact — no codebook at
@@ -493,7 +402,13 @@ def sq_topk_from_index(
     (same quantizer, same integer ordering, same rerank — asserted by
     test), so the served query inherits the fit-inline form's
     value-level oracle ON THE PRUNED PATH — no degenerate full-probe
-    config needed, unlike the served IVF/PQ forms."""
+    config needed, unlike the served IVF/PQ forms.
+
+    ``filters`` (as in :func:`ivf_topk_from_index`) prunes the
+    (cell, *meta)-partitioned ``sq/`` directories before any integer
+    arithmetic runs, and the rerank reads ``cells/`` under the same
+    predicate. Exact row selection plus an exact BIGINT shortlist key
+    keeps the PRUNED filtered path value-level-checkable too."""
     meta = load_ann_meta(index_dir)
     if not meta.get("sq"):
         raise ValueError(
@@ -501,7 +416,7 @@ def sq_topk_from_index(
             "(materialize_ann_index(include_sq=False)); rebuild with "
             "include_sq=True to serve SQ queries"
         )
-    codes = spark.read.parquet(os.path.join(index_dir, "sq")).select(
+    codes = _where_in(spark.read.parquet(os.path.join(index_dir, "sq")), filters).select(
         F.col(meta["id_col"]).alias("neighbor_id"), F.col("q_vec").alias("ccode")
     )
     qcodes = similarity.quantize_int8(queries_df, id_col, vec_col).select(
@@ -517,72 +432,9 @@ def sq_topk_from_index(
         .select("query_id", "qvec", "neighbor_id", "idot")
     )
     short = similarity._per_query_topk(cands, "idot", shortlist).drop("rank", "idot")
-    vectors = spark.read.parquet(os.path.join(index_dir, "cells")).select(
-        F.col(meta["id_col"]).alias("neighbor_id"), F.col("embedding").alias("cvec")
-    )
-    return similarity.cosine_rank_topk(short.join(vectors, "neighbor_id"), k)
-
-
-def sq_filtered_topk_from_index(
-    spark: SparkSession,
-    index_dir: str,
-    queries_df: DataFrame,
-    filters: dict,
-    k: int = 5,
-    shortlist: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Filtered vector search on the SQ8 path: the metadata predicate
-    prunes (cell, *meta)-partitioned ``sq/`` code directories before
-    any integer arithmetic runs (same literal-predicate pruning as the
-    IVF/PQ filtered forms), the shortlist is taken over FILTERED
-    candidates only (post-filtering a plain top-k would under-fill k),
-    and the exact rerank reads ``cells/`` under the same predicate.
-
-    The strongest oracle in the filtered family: the predicate is exact
-    row selection and the shortlist key is an exact BIGINT, so the
-    PRUNED filtered path is value-level-checkable directly — the
-    IVF/PQ filtered forms need their full-probe/full-shortlist
-    degenerate configs, this one doesn't."""
-    if not filters:
-        raise ValueError(
-            "filters must name at least one metadata column; use "
-            "sq_topk_from_index for unfiltered search"
-        )
-    meta = load_ann_meta(index_dir)
-    if not meta.get("sq"):
-        raise ValueError(
-            f"index at {index_dir} was built without SQ codes "
-            "(materialize_ann_index(include_sq=False)); rebuild with "
-            "include_sq=True to serve SQ queries"
-        )
-
-    def filtered(df):
-        for col, vals in filters.items():
-            vs = list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
-            df = df.filter(F.col(col).isin(vs))  # literal -> pruning
-        return df
-
-    codes = filtered(spark.read.parquet(os.path.join(index_dir, "sq"))).select(
-        F.col(meta["id_col"]).alias("neighbor_id"), F.col("q_vec").alias("ccode")
-    )
-    qcodes = similarity.quantize_int8(queries_df, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("q_vec").alias("qcode")
-    )
-    qvecs = queries_df.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
-    )
-    q = qcodes.join(qvecs, "query_id")
-    cands = (
-        codes.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("idot", similarity.int_dot(F.col("qcode"), F.col("ccode")))
-        .select("query_id", "qvec", "neighbor_id", "idot")
-    )
-    short = similarity._per_query_topk(cands, "idot", shortlist).drop("rank", "idot")
-    vectors = filtered(spark.read.parquet(os.path.join(index_dir, "cells"))).select(
-        F.col(meta["id_col"]).alias("neighbor_id"), F.col("embedding").alias("cvec")
-    )
+    vectors = _where_in(
+        spark.read.parquet(os.path.join(index_dir, "cells")), filters
+    ).select(F.col(meta["id_col"]).alias("neighbor_id"), F.col("embedding").alias("cvec"))
     return similarity.cosine_rank_topk(short.join(vectors, "neighbor_id"), k)
 
 
@@ -800,31 +652,9 @@ def ivf_exact_topk_from_index(
     meta = load_ann_meta(index_dir)
     bounds = ensure_cell_bounds(spark, index_dir)
     cents = meta["centroids"]
-    rows, probed, id_type = _probe_cells(
-        queries_df, cents, n_probe, id_col, vec_col
-    )
-    if not rows:
-        raise ValueError("queries_df is empty")
-    probes = spark.createDataFrame(
-        rows, f"query_id {id_type}, qvec array<double>, cell int"
-    )
-    corpus_path = os.path.join(index_dir, "cells")
-
-    def scan(cell_set, probe_df):
-        corpus = (
-            spark.read.parquet(corpus_path)
-            .filter(F.col("cell").isin(sorted(cell_set)))
-            .select(
-                F.col(meta["id_col"]).alias("neighbor_id"),
-                F.col("embedding").alias("cvec"),
-                "cell",
-            )
-        )
-        return corpus.join(F.broadcast(probe_df), "cell").filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-
-    phase1 = scan(set(probed), probes)
+    rows, _, id_type = _probe_cells(queries_df, cents, n_probe, id_col, vec_col)
+    cells = spark.read.parquet(os.path.join(index_dir, "cells"))
+    phase1 = _probe_scan(spark, cells, rows, id_type, meta["id_col"])
     # per-query probed set + query vectors from the probe rows
     probed_by_q: dict = {}
     qvec_by_q: dict = {}
@@ -915,8 +745,5 @@ def ivf_exact_topk_from_index(
     ]
     if not extra_rows:
         return similarity.cosine_rank_topk(phase1, k)
-    probes2 = spark.createDataFrame(
-        extra_rows, f"query_id {id_type}, qvec array<double>, cell int"
-    )
-    phase2 = scan({c for _, _, c in extra_rows}, probes2)
+    phase2 = _probe_scan(spark, cells, extra_rows, id_type, meta["id_col"])
     return similarity.cosine_rank_topk(phase1.unionByName(phase2), k)

@@ -899,9 +899,13 @@ def banded_candidate_pairs(
       broadcast anti-join (map-side, no extra shuffle): cold buckets
       all-pairs, hot buckets star rows from the broadcast hub;
     - pathologically many hot buckets fall back to the fully
-      distributed sizing window, whose exchange the join reuses.
+      distributed sizing window, whose exchange the join reuses;
+    - ``max_bucket_size >= 2**31 - 1`` declares the guard off: the
+      sizing job is skipped and the zero-hot plain self-join runs;
+      ``stats["n_hot"]`` is 0 by construction (no bucket can exceed
+      the cap), not measured.
 
-    All three emit identical pair sets for the same input. Callers are
+    All four emit identical pair sets for the same input and cap. Callers are
     batch-context (the streaming user runs inside foreachBatch), so the
     sizing job at build time is legal.
 
@@ -1211,7 +1215,11 @@ def prefix_filter_near_duplicates(
     # once PER JOIN SIDE. With the unbounded-cap sizing job skipped
     # (see banded_candidate_pairs), the checkpoint is materialized by
     # the one survivors job and both join sides read its blocks —
-    # chain once, no extra job (guide §5).
+    # chain once, no extra job (guide §5). Like ``hsets``, this
+    # executor-local state grows with the corpus (one row per kept
+    # prefix shingle per doc). Once it materializes the lineage is cut:
+    # losing an executor that holds its blocks fails the job instead of
+    # recomputing them.
     prefix = checkpoint_audited(
         ranked.withColumn("_pos", F.row_number().over(w))
         .filter(

@@ -269,12 +269,15 @@ def ivf_topk(
 
 
 def cosine_rank_topk(cands: DataFrame, k: int) -> DataFrame:
-    """The IVF serving tail — exact cosine over candidate pairs, then
-    the per-query rank window with the (sim desc, neighbor asc)
-    tie-break and round-6 score. ONE definition shared by the
-    fit-inline (``ivf_topk``), served (``ann_index.ivf_topk_from_index``)
-    and stream-maintained (``streaming/ann.ivf_search``) forms, so a
-    tie-break or rounding fix applies to all three by construction.
+    """The exact-rerank tail of every ANN form — exact cosine over
+    candidate pairs, then the per-query rank window with the (sim desc,
+    neighbor asc) tie-break and round-6 score. ONE definition shared by
+    the fit-inline (``ivf_topk``, ``sq_topk``), served
+    (``ann_index.{ivf,sq}_topk_from_index``, filtered or not, and
+    ``ivf_exact_topk_from_index``), stream-maintained
+    (``streaming/ann.ivf_search``) and PQ-rerank
+    (``adc_shortlist_rerank``) forms, so a tie-break or rounding fix
+    applies to all of them by construction.
     ``cands``: ``(query_id, qvec, neighbor_id, cvec)`` rows. The
     ``rank <= k`` filter rewrites to WindowGroupLimit (map-side partial
     top-k per query, never a full per-query sort)."""
@@ -965,8 +968,9 @@ def adc_shortlist_rerank(
     cands: DataFrame, vectors: DataFrame, m: int, k: int, shortlist: int
 ) -> DataFrame:
     """ADC-shortlist-then-exact-rerank over prepared candidates: one
-    definition of the asymmetric-distance expression, the shortlist
-    tie-break and the exact-cosine rerank, used by both the fit-inline
+    definition of the asymmetric-distance expression and the shortlist
+    tie-break, then the exact-cosine rerank of ``cosine_rank_topk``,
+    used by both the fit-inline
     (``pq_topk``) and served (``ann_index.pq_topk_from_index``) forms —
     a parity fix to either applies to both by construction.
 
@@ -992,14 +996,7 @@ def adc_shortlist_rerank(
         .filter(F.col("_rk") <= shortlist)
         .select("query_id", "qvec", "neighbor_id")
     )
-    exact = short.join(vectors, "neighbor_id")
-    sims = exact.withColumn("sim", cosine_sim(F.col("qvec"), F.col("cvec")))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
-    )
+    return cosine_rank_topk(short.join(vectors, "neighbor_id"), k)
 
 
 def ivf_probe_recall_report(
@@ -1138,9 +1135,9 @@ def hard_negatives(
     exact cosine, per-query window top-k — with the label-mismatch
     predicate fused into the join so mined negatives can never be
     positives. At scale the served path is the filtered ANN family
-    (`ivf_filtered_topk_from_index` with the label complement as the
-    IN-list): labels are bounded, so "label != q" is partition pruning,
-    not a scan predicate.
+    (`ann_index.ivf_topk_from_index(filters={label: complement})`):
+    labels are bounded, so "label != q" is partition pruning, not a
+    scan predicate.
     """
     q = queries_df.select(
         F.col(id_col).alias("query_id"),

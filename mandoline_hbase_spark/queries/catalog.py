@@ -98,11 +98,6 @@ def oracle_sql_map() -> dict[str, str]:
 _REVERIFY_FIRST = {
     # round 4: split-boundary literal corrected e6666665 -> e6666666
     "dataset_split_assign": 4,
-    "split_leakage_report": 4,
-    # round 5: unbounded hot-bucket cap (oracle equality unconditional);
-    # round 8: PPJoin positional filter inside the candidate self-join
-    # (exact-preserving bound) — same output both times, plan changed
-    "dedup_prefix_filter": 8,
     # round 5: quota joins made null-safe (same output on null-free
     # fixtures; plan changed)
     "domain_quota_sample": 5,
@@ -112,25 +107,17 @@ _REVERIFY_FIRST = {
     # round 5: length-band block added before the levenshtein verify
     # (exact-preserving; plan changed)
     "search_spell_suggest": 5,
-    # round 5: df(t) became a single-row conditional aggregate (zero-
-    # Exchange serving) — integer-identical counts, plan changed
-    "bm25_search_topk": 5,
-    "search_bm25_rerank_cosine": 5,
     # round 6: both served queries now build their artifact through the
     # shared operators/served.py lifecycle (bm25's cache fingerprint
     # format changed -> fresh slot). Served output and plans identical,
     # re-swept MATCH locally, but the r5 green predates the change.
     "sim_ivf_served_topk": 6,
     "bm25_served_topk": 6,
-    # round 7: both gained value-level oracles (VERDICT r6 #6 —
-    # planted-pair recall form / degenerate-config form). They have no
-    # prior green rows at all (were no-oracle), so last_green=0 already
-    # ranks them first; the pins record the change round for the audit
-    # trail.
-    # round 7: gained the planted-pair recall oracle; round 8: loud
-    # max(doc_id) < 1e6 guard before the planted-pair union (output
-    # unchanged on the fixtures; the plan gained an aggregate)
-    "dedup_simhash": 8,
+    # round 7: gained a degenerate-config value-level oracle (VERDICT
+    # r6 #6; dedup_simhash gained its planted-pair recall oracle in the
+    # same round, pinned below). No prior green rows at all (was
+    # no-oracle), so last_green=0 already ranks it first; the pin
+    # records the change round for the audit trail.
     "dedup_semantic_kmeans": 7,
     # round 8: re-expressed over integer micro-units — first-ever
     # oracle (never green before; the pin records the change round)
@@ -154,6 +141,7 @@ _REVERIFY_FIRST = {
     # the sf0.1 record entries were invalidated for re-derivation.
     "dedup_minhash_lsh": 9,
     "dedup_cluster_assign": 9,
+    # (round 4: split-boundary literal corrected, as dataset_split_assign)
     "split_leakage_report": 9,
     "cluster_aware_split": 9,
     "er_entity_clusters": 9,
@@ -161,9 +149,30 @@ _REVERIFY_FIRST = {
     # banded_candidate_pairs (hot-bucket sizing job skipped — these two
     # are the unbounded-cap callers) + lazy prefix-table checkpoint in
     # the PPJoin path. Pair sets identical (re-swept MATCH); job
-    # structure changed, so re-verify first.
+    # structure changed, so re-verify first. Earlier changes, same
+    # output each time: dedup_prefix_filter — round 5 unbounded
+    # hot-bucket cap, round 8 PPJoin positional filter inside the
+    # candidate self-join; dedup_simhash — round 7 planted-pair recall
+    # oracle, round 8 loud max(doc_id) < 1e6 guard before the
+    # planted-pair union.
     "dedup_prefix_filter": 11,
     "dedup_simhash": 11,
+    # round 11: search from text scored map-side off the token arrays
+    # (no per-query inverted index; scores bit-identical to the served
+    # twins). bm25_search_topk and search_bm25_rerank_cosine were first
+    # pinned at round 5, when df(t) became a single-row conditional
+    # aggregate (zero-Exchange serving).
+    "bm25_search_topk": 11,
+    "search_ql_dirichlet_topk": 11,
+    "search_bm25_rerank_cosine": 11,
+    # round 11: quadratic dedup anchors compare 8-byte shingle hashes
+    # first and verify survivors on the exact strings; capped fuzzy
+    # matching uses lead(1..K) instead of a self-join
+    "dedup_ngram_jaccard": 11,
+    "dedup_containment": 11,
+    "dedup_fuzzy_segments_capped": 11,
+    # round 11: fewer BPE jobs (byte-identical merge rules)
+    "text_bpe_token_counts": 11,
 }
 
 

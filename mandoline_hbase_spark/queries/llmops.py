@@ -1272,7 +1272,8 @@ def _served_filtered_ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """,
     description=(
         "FILTERED vector search (VERDICT r7 #5): metadata predicate "
-        "(label = 2) composed with the served IVF path — the cells "
+        "(label = 2) composed with the served IVF path "
+        "(ann_index.ivf_topk_from_index(filters=...)) — the cells "
         "table is partitioned by (cell, label), so the predicate prunes "
         "directories alongside the probe set (PartitionFilters: cell "
         "AND label, plan-asserted in tests/test_ann_index.py) instead "
@@ -1289,8 +1290,8 @@ def sim_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     index_dir = _served_filtered_ann_index_dir(spark, sf_dir)
-    return ann_index.ivf_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": 2}, k=5, n_probe=8
+    return ann_index.ivf_topk_from_index(
+        spark, index_dir, queries, k=5, n_probe=8, filters={"label": 2}
     )
 
 
@@ -1315,7 +1316,8 @@ def sim_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank <= 5
     """,
     description=(
-        "Filtered vector search on the COMPRESSED path: the label "
+        "Filtered vector search on the COMPRESSED path "
+        "(ann_index.pq_topk_from_index(filters=...)): the label "
         "predicate prunes (cell, label)-partitioned PQ code directories "
         "before any ADC lookup-table arithmetic, and the exact rerank "
         "only ever sees predicate-passing ids — the shortlist is taken "
@@ -1335,8 +1337,8 @@ def sim_pq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     index_dir = _served_filtered_ann_index_dir(spark, sf_dir)
-    return ann_index.pq_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": 2}, k=5, shortlist=1 << 20
+    return ann_index.pq_topk_from_index(
+        spark, index_dir, queries, k=5, shortlist=1 << 20, filters={"label": 2}
     )
 
 
@@ -1383,15 +1385,15 @@ def sim_pq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank <= 5
     """,
     description=(
-        "Filtered vector search on the SQ8 path: the label predicate "
+        "Filtered vector search on the SQ8 path "
+        "(ann_index.sq_topk_from_index(filters=...)): the label predicate "
         "prunes (cell, label)-partitioned sq/ code directories before "
         "any integer arithmetic, the int8 shortlist is taken over "
         "FILTERED candidates only, exact rerank under the same "
         "predicate. The strongest oracle in the filtered family: exact "
         "predicate + exact BIGINT shortlist key = the PRUNED filtered "
         "path is value-level-checked directly (IVF/PQ filtered need "
-        "degenerate full-probe/full-shortlist configs; this doesn't). "
-        "operators/ann_index.py::sq_filtered_topk_from_index"
+        "degenerate full-probe/full-shortlist configs; this doesn't)."
     ),
     tags=("llm", "similarity", "ann", "sq", "filtered", "served"),
 )
@@ -1401,8 +1403,8 @@ def sim_sq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     index_dir = _served_filtered_ann_index_dir(spark, sf_dir)
-    return ann_index.sq_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": 2}, k=5, shortlist=32
+    return ann_index.sq_topk_from_index(
+        spark, index_dir, queries, k=5, shortlist=32, filters={"label": 2}
     )
 
 

@@ -41,8 +41,8 @@ Layout under ``index_dir``:
   disk (a racing reader may still be serving from one — never rmtree
   a served dir); ``gc_ann_generations`` removes them after a quiesce.
 
-Serving (``ivf_search``) reuses the probe computation and scoring of
-the static path, so stream-maintained results equal a fit-inline
+Serving (``ivf_search``) reuses the probe computation, pruned cell scan
+and scoring of the static path, so stream-maintained results equal a fit-inline
 ``similarity.ivf_topk`` over the union corpus — asserted by tests.
 """
 
@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mandoline_hbase_spark.lease import maintenance_lease
-from mandoline_hbase_spark.operators.ann_index import _probe_cells
+from mandoline_hbase_spark.operators.ann_index import _probe_cells, _probe_scan
 from mandoline_hbase_spark.operators.similarity import (
     _as_double,
     _cell_scores,
@@ -719,21 +719,8 @@ def ivf_search(
     swap landing mid-query cannot pair one generation's centroids with
     another generation's assignments."""
     meta = _load_meta(index_dir)
-    id_col = meta["id_col"]
-    rows, probed, id_type = _probe_cells(
-        queries_df, meta["centroids"], n_probe, id_col, vec_col
+    rows, _, id_type = _probe_cells(
+        queries_df, meta["centroids"], n_probe, meta["id_col"], vec_col
     )
-    if not rows:
-        raise ValueError("queries_df is empty")
-    probes = spark.createDataFrame(
-        rows, f"query_id {id_type}, qvec array<double>, cell int"
-    )
-    corpus = (
-        read_cells(spark, index_dir, dedup=dedup, meta=meta)
-        .filter(F.col("cell").isin(probed))
-        .select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("cvec"), "cell")
-    )
-    cands = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return cosine_rank_topk(cands, k)
+    cells = read_cells(spark, index_dir, dedup=dedup, meta=meta)
+    return cosine_rank_topk(_probe_scan(spark, cells, rows, id_type, meta["id_col"]), k)

@@ -78,8 +78,8 @@ def test_filtered_ivf_full_probe_equals_filtered_brute_force(spark, built_filter
         similarity.cosine_topk(emb.filter(F.col("label") == 2), queries, k=5)
     )
     got = _rows(
-        ann_index.ivf_filtered_topk_from_index(
-            spark, index_dir, queries, filters={"label": 2}, k=5, n_probe=8
+        ann_index.ivf_topk_from_index(
+            spark, index_dir, queries, k=5, n_probe=8, filters={"label": 2}
         )
     )
     assert got == want and got
@@ -90,8 +90,8 @@ def test_filtered_ivf_prunes_on_cell_AND_predicate(spark, built_filtered):
     metadata predicate (cells table partitioned by (cell, label))."""
     emb, index_dir = built_filtered
     queries = emb.filter(F.col("vec_id") < 2)
-    out = ann_index.ivf_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": [1, 2]}, k=3, n_probe=2
+    out = ann_index.ivf_topk_from_index(
+        spark, index_dir, queries, k=3, n_probe=2, filters={"label": [1, 2]}
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
@@ -110,8 +110,8 @@ def test_filtered_pq_full_shortlist_equals_filtered_brute_force(spark, built_fil
         similarity.cosine_topk(emb.filter(F.col("label") == 2), queries, k=5)
     )
     got = _rows(
-        ann_index.pq_filtered_topk_from_index(
-            spark, index_dir, queries, filters={"label": 2}, k=5, shortlist=1 << 20
+        ann_index.pq_topk_from_index(
+            spark, index_dir, queries, k=5, shortlist=1 << 20, filters={"label": 2}
         )
     )
     assert got == want and got
@@ -123,9 +123,9 @@ def test_filtered_pq_codes_scan_prunes_on_predicate(spark, built_filtered):
     at planning time."""
     emb, index_dir = built_filtered
     queries = emb.filter(F.col("vec_id") < 2)
-    out = ann_index.pq_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": [1, 2]}, k=3,
-        shortlist=8, n_probe=2,
+    out = ann_index.pq_topk_from_index(
+        spark, index_dir, queries, k=3, shortlist=8, n_probe=2,
+        filters={"label": [1, 2]},
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
@@ -144,8 +144,8 @@ def test_filtered_sq_equals_filtered_fit_inline(spark, built_filtered):
         similarity.sq_topk(emb.filter(F.col("label") == 2), queries, k=5, shortlist=16)
     )
     got = _rows(
-        ann_index.sq_filtered_topk_from_index(
-            spark, index_dir, queries, filters={"label": 2}, k=5, shortlist=16
+        ann_index.sq_topk_from_index(
+            spark, index_dir, queries, k=5, shortlist=16, filters={"label": 2}
         )
     )
     assert got == want and got
@@ -156,20 +156,71 @@ def test_filtered_sq_codes_scan_prunes_on_predicate(spark, built_filtered):
     predicate prunes int8-code directories at planning time."""
     emb, index_dir = built_filtered
     queries = emb.filter(F.col("vec_id") < 2)
-    out = ann_index.sq_filtered_topk_from_index(
-        spark, index_dir, queries, filters={"label": [1, 2]}, k=3, shortlist=8
+    out = ann_index.sq_topk_from_index(
+        spark, index_dir, queries, k=3, shortlist=8, filters={"label": [1, 2]}
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("label" in ln and " IN " in ln for ln in scan_lines), plan[:4000]
 
 
-def test_filtered_ivf_rejects_empty_filters(spark, built_filtered):
-    emb, index_dir = built_filtered
-    with pytest.raises(ValueError, match="filters"):
-        ann_index.ivf_filtered_topk_from_index(
-            spark, index_dir, emb.limit(1), filters={}, k=3
+def test_served_plans_prune_on_cell_and_filters(spark, tmp_path):
+    """Default-tier plan-shape smoke test over a tiny in-test index: each
+    served codec prunes partitions on the probed cells (IVF, IVF-PQ)
+    and, only when ``filters`` is given, on the metadata predicate —
+    on every table that codec scans. Planning only: nothing executes
+    past the driver-side probe and lookup-table collects."""
+    import re
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (i, [float(x) for x in rng.standard_normal(8)], i % 4) for i in range(48)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>, label int"
+    )
+    index_dir = str(tmp_path / "index")
+    ann_index.materialize_ann_index(
+        emb, index_dir, dim=8, n_centroids=4, seed=7, pq_m=2, pq_k=4,
+        pq_sample_n=48, include_sq=True, meta_cols=("label",),
+    )
+    queries = emb.filter(F.col("vec_id") < 2)
+
+    def partition_filters(df):
+        # the formatted explain prints each scan's PartitionFilters in
+        # full (the one-line tree form elides them behind "...")
+        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
         )
+        return [ln for ln in plan.splitlines() if ln.startswith("PartitionFilters")]
+
+    serve = {
+        "ivf": lambda **kw: ann_index.ivf_topk_from_index(
+            spark, index_dir, queries, k=3, n_probe=2, **kw
+        ),
+        "ivfpq": lambda **kw: ann_index.pq_topk_from_index(
+            spark, index_dir, queries, k=3, shortlist=8, n_probe=2, **kw
+        ),
+        "sq": lambda **kw: ann_index.sq_topk_from_index(
+            spark, index_dir, queries, k=3, shortlist=8, **kw
+        ),
+    }
+    def has_in(col, ln):
+        return re.search(rf"\b{col}#\d+ IN \(", ln) is not None
+
+    for name, fn in serve.items():
+        lines = partition_filters(fn(filters={"label": [1, 2]}))
+        labelled = [ln for ln in lines if has_in("label", ln)]
+        # sq applies the predicate to both sq/ and the cells/ rerank read
+        assert len(labelled) >= (2 if name == "sq" else 1), (name, lines)
+        if name != "sq":
+            assert any(has_in("cell", ln) for ln in labelled), (name, lines)
+        plain = partition_filters(fn())
+        assert not any("label" in ln for ln in plain), (name, plain)
+        if name != "sq":
+            assert any(has_in("cell", ln) for ln in plain), (name, plain)
 
 
 def test_served_pq_equals_fit_inline(spark, built):

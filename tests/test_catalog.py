@@ -153,6 +153,26 @@ def test_driver_prefix_leads_with_stalest_verification():
             assert n in names[:n_rank0], f"{n} (changed oracle) not in the rank-0 prefix"
 
 
+def test_reverify_pins_have_no_duplicate_keys():
+    """A repeated key in the _REVERIFY_FIRST literal silently keeps only
+    its last value, so an older pin (and its comment) would read as
+    live while doing nothing. Parse the literal and refuse repeats."""
+    import ast
+
+    from mandoline_hbase_spark.queries import catalog
+
+    tree = ast.parse(open(catalog.__file__, encoding="utf-8").read())
+    (node,) = [
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Assign)
+        and any(getattr(t, "id", None) == "_REVERIFY_FIRST" for t in n.targets)
+    ]
+    keys = [k.value for k in node.keys]
+    dups = sorted({k for k in keys if keys.count(k) > 1})
+    assert not dups, f"duplicate _REVERIFY_FIRST keys: {dups}"
+
+
 def test_sweep_driver_prefix_flag_prints_the_queries_head():
     """VERDICT r7 #8: `tools/sweep.py --driver-prefix N` is the rotation
     dry-run — its output must be EXACTLY the first N names of

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -13,11 +14,24 @@ def test_manifest_loads_and_names_real_tests():
     manifest = _tiering.load_manifest()
     assert len(manifest) > 50
     here = os.path.dirname(os.path.abspath(__file__))
-    files = {nid.split("::")[0] for nid in manifest}
-    for f in files:
-        assert os.path.exists(os.path.join(os.path.dirname(here), f)), f
     # every entry is a node id, not a bare file
     assert all("::" in nid for nid in manifest)
+    # ... naming a test function that still exists: a renamed or deleted
+    # test would otherwise drop out of the heavy tier silently
+    defs: dict[str, set[str]] = {}
+    for nid in sorted(manifest):
+        f, name = nid.split("::", 1)
+        path = os.path.join(os.path.dirname(here), f)
+        assert os.path.exists(path), f
+        if f not in defs:
+            tree = ast.parse(open(path, encoding="utf-8").read())
+            defs[f] = {
+                n.name
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            }
+        # Class::method ids name both; a [param] suffix is not a def
+        assert set(name.split("[", 1)[0].split("::")) <= defs[f], nid
 
 
 def test_daily_sample_is_deterministic_and_rotates():
