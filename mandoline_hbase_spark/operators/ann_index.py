@@ -4,9 +4,10 @@
 they fit/assign/encode the corpus inside the query, which is right for
 one-shot curation jobs and for the oracle harness. A deployed
 similarity-search stack does what a deployed text-search stack does
-(see ``operators/search.bm25_topk_from_postings``): it pays the
-training/encode cost ONCE, persists the index as tables, and serves
-every query from those tables alone.
+(see the postings source of ``operators/search.py``, served by
+``bm25_topk_from_postings``): it pays the training/encode cost ONCE,
+persists the index as tables, and serves every query from those
+tables alone.
 
 Index layout under ``index_dir`` (all parquet, executor-written):
 

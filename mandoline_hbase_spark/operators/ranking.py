@@ -22,6 +22,9 @@ before the counts job: both the offsets and the ranked output must see
 the SAME partition boundaries, and range-partitioner sampling across two
 separate jobs is not contractually stable. The checkpoint is the same
 executor-side materialization the connected-components rounds use.
+
+A global top-k needs none of this: :func:`topk_with_rank` limits first
+and stamps the rank over the ``k`` survivors only.
 """
 
 from __future__ import annotations
@@ -73,6 +76,21 @@ def with_global_row_number(
     of a single-partition global window."""
     ranked, _ = _ranked_with_total(df, order, out_col, num_partitions)
     return ranked
+
+
+def topk_with_rank(df: DataFrame, order: list[Column], k: int) -> DataFrame:
+    """The ``k`` first rows of ``df`` under ``order`` (a total order),
+    returned as ``(rank, <df's columns>)`` with a dense 1-based rank
+    (``df`` must not already hold a ``rank`` column).
+
+    ``limit`` comes first, so the plan is TakeOrderedAndProject
+    (per-partition heaps, never a global sort); the single-partition
+    ``row_number`` window then runs over only the ``k`` surviving rows.
+    Stamping the rank before the limit would move the whole input to
+    one partition."""
+    top = df.orderBy(*order).limit(int(k))
+    rank = F.row_number().over(Window.orderBy(*order)).cast("bigint")
+    return top.select(rank.alias("rank"), *top.columns)
 
 
 def ntile_from_rank(rank: Column, n_rows: int, n_buckets: int) -> Column:

@@ -28,6 +28,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mandoline_hbase_spark.operators.ranking import topk_with_rank
 from mandoline_hbase_spark.plans.audit import checkpoint_audited
 
 _HEX_SPACE = 16**8
@@ -223,17 +224,9 @@ def sample_weighted_topk(
         + F.lit(1.0)
     ) / F.lit(float(_HEX_SPACE))
     key = F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double"))
-    staged = (
-        df.filter(F.col(weight_col).cast("double") > 0)
-        .withColumn("_aes_key", key)
-        .orderBy(F.desc("_aes_key"), F.asc(id_col))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("_aes_key"), F.asc(id_col))
-    return (
-        staged.withColumn("sample_rank", F.row_number().over(w).cast("bigint"))
-        .drop("_aes_key")
-    )
+    keyed = df.filter(F.col(weight_col).cast("double") > 0).withColumn("_aes_key", key)
+    top = topk_with_rank(keyed, [F.desc("_aes_key"), F.asc(id_col)], k)
+    return top.select(*df.columns, F.col("rank").alias("sample_rank"))
 
 
 def mix_to_token_budget(

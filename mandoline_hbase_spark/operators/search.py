@@ -1,4 +1,5 @@
-"""Full-text search: inverted-index postings and BM25 ranking.
+"""Full-text search: inverted-index postings, BM25 and query-likelihood
+ranking.
 
 The reference engine's only query surface is coordinate lookup
 (hbase.clj:184-198 ``find-index``); a training-data store additionally
@@ -8,8 +9,14 @@ provides the standard IR primitives as DataFrame plans:
 
 - :func:`postings` — the inverted index ``(term, doc_id, tf)`` plus a
   doc-length table, the same two aggregates every search engine builds;
-- :func:`bm25_topk` — Okapi BM25 ranking (Lucene's positive-idf
-  variant) for a bounded set of query terms.
+- :func:`bm25_topk` / :func:`ql_dirichlet_topk` — Okapi BM25 (Lucene's
+  positive-idf variant) and Dirichlet-smoothed query likelihood for a
+  bounded set of query terms, straight from document text;
+  :func:`bm25_topk_from_postings` serves BM25 from materialized
+  ``postings`` tables. Every form is one pipeline: a source yields
+  per-doc query-term counts plus one row of corpus scalars, one
+  expression per model scores them, and ``ranking.topk_with_rank``
+  ranks.
 
 Scale design (100 TB corpus, 1000 executors):
 
@@ -18,17 +25,19 @@ Scale design (100 TB corpus, 1000 executors):
   filter is applied *before* the tf shuffle, so the per-query work
   after the one corpus-wide length pass is proportional to the
   postings of the queried terms, not the corpus.
-- Corpus scalars (N, total length) and per-term document frequencies
-  are term-grain aggregates — tiny — and join back via broadcast;
-  nothing larger than the vocabulary ever concentrates.
+- Corpus scalars (N, total length) and per-term document and
+  collection frequencies are ONE single-row conditional aggregate —
+  never a term-grain groupBy — broadcast back; nothing larger than a
+  row ever concentrates.
 - The final score is a per-doc fold over a FIXED, ordered list of
-  query terms (one pivoted column per term, coalesced then added
+  query terms (one integer column per term, contributions added
   left-to-right), so the floating-point summation order is
   deterministic and engine-independent — the property the DuckDB
   oracle hash-compare requires. Ranking ties break on doc_id.
 - In a served deployment the ``postings`` output is the thing you
-  materialize (partitioned by term) and ``bm25_topk`` becomes a
-  broadcast-join against it; the plan shape is identical.
+  materialize and :func:`bm25_topk_from_postings` pivots the queried
+  terms' postings per doc; the scores are bit-identical to the
+  from-text form.
 """
 
 from __future__ import annotations
@@ -36,9 +45,11 @@ from __future__ import annotations
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from mandoline_hbase_spark.operators.ranking import topk_with_rank
 from mandoline_hbase_spark.operators.text import _spread, term_frequencies
+from mandoline_hbase_spark.plans.audit import checkpoint_audited
 
 
 def postings(
@@ -114,13 +125,7 @@ def bm25_rerank_cosine(
         .withColumn("cosine", F.round(cosine_sim(F.col("_cv"), F.col("_qv")), 6))
         .select(id_col, "bm25_score", "cosine")
     )
-    from pyspark.sql import Window
-
-    top = cand.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k_final)
-    w = Window.orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "rank", id_col, "bm25_score", "cosine"
-    )
+    return topk_with_rank(cand, [F.col("cosine").desc(), F.col(id_col).asc()], k_final)
 
 
 def positional_postings(
@@ -375,8 +380,6 @@ def spell_suggest(
         .withColumn("distance", F.levenshtein("probe", "term").cast("bigint"))
         .filter(F.col("distance") <= int(max_distance))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("probe").orderBy(
         F.col("distance").asc(), F.col("df_t").desc(), F.col("term").asc()
     )
@@ -385,6 +388,157 @@ def spell_suggest(
         .filter(F.col("rank") <= k)
         .select("probe", "rank", F.col("term").alias("suggestion"), "distance", "df_t")
     )
+
+
+# --- Lexical scoring: one pipeline, two sources -----------------------------
+#
+# Both sources reduce a query to the same pair of frames over a fixed,
+# ordered, de-duplicated list of query terms:
+#
+# - per-doc candidates with ``id``, ``dl`` and ``_tf0 … _tf{n-1}``: the
+#   docs holding at least one query term, integer counts, absent terms 0;
+# - ONE single-row scalars frame ``(n_docs, sum_dl, _df0…, _cf0…)``: N,
+#   Σdl and each term's document and collection frequency, all exact
+#   integer aggregates (never a term-grain groupBy, so no term shuffle).
+#
+# Each model is then one column expression over those columns, folded
+# over the terms in query order (engine-deterministic float summation),
+# and every ranking ends in ``ranking.topk_with_rank``. Same integers and
+# same expression, so the two sources score bit-identically by
+# construction. Scalars a model never reads are pruned from the
+# aggregate by the optimizer.
+
+
+def _query_terms(query_terms: Sequence[str]) -> list[str]:
+    terms = list(dict.fromkeys(query_terms))  # dedup, preserve order
+    if not terms:
+        raise ValueError("query_terms must be non-empty")
+    return terms
+
+
+def _term_counts_from_text(
+    df: DataFrame, terms: Sequence[str], id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The frame pair computed map-side off the token array — the exact
+    integers ``postings`` produces for these terms (same tokenizer:
+    split/trim/lower, empty tokens dropped, NULL and empty text ->
+    ``dl = 0``), without the explode or a token-grain shuffle. The text
+    is spread once for tokenize parallelism (the small-file fixture
+    coalesces to a handful of scan partitions otherwise) and the
+    resulting NARROW int table is locally checkpointed: both consumers
+    (the scalar aggregate and the candidate filter) reuse one tokenize
+    pass instead of re-running it per subtree."""
+    toks = F.filter(
+        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
+        lambda w: F.length(w) > 0,
+    )
+    # stage the token array once so the per-term filters share it
+    staged = _spread(df, id_col).select(F.col(id_col), toks.alias("_toks"))
+    counts = checkpoint_audited(
+        staged.select(
+            F.col(id_col),
+            F.coalesce(F.size(F.col("_toks")), F.lit(0)).alias("dl"),
+            *[
+                F.coalesce(
+                    F.size(F.filter(F.col("_toks"), lambda w: w == F.lit(t))), F.lit(0)
+                )
+                .cast("bigint")
+                .alias(f"_tf{i}")
+                for i, t in enumerate(terms)
+            ],
+        )
+    )
+    tfs = [F.col(f"_tf{i}") for i in range(len(terms))]
+    scalars = counts.agg(*_corpus_aggs(), *_term_aggs(tfs))
+    return counts.filter(reduce(lambda a, c: a | c, [c > 0 for c in tfs])), scalars
+
+
+def _term_counts_from_postings(
+    tf: DataFrame, dl: DataFrame, terms: Sequence[str], id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The frame pair read from materialized ``(tf, dl)`` index tables:
+    the term-filtered postings pivoted on ``id_col``, joined to ``dl``.
+    N and Σdl derive from ``dl`` alone (it carries every document);
+    df(t) and cf(t) are a single-row conditional aggregate over the
+    FILTERED POSTINGS — taking them from the pivot instead would add a
+    second hash Exchange."""
+    qtf = tf.filter(F.col("term").isin(terms))
+    tfs = [F.when(F.col("term") == t, F.col("tf")).otherwise(0) for t in terms]
+    per_doc = qtf.groupBy(id_col).agg(
+        *[F.sum(c).cast("bigint").alias(f"_tf{i}") for i, c in enumerate(tfs)]
+    ).join(dl, id_col)
+    scalars = dl.agg(*_corpus_aggs()).crossJoin(F.broadcast(qtf.agg(*_term_aggs(tfs))))
+    return per_doc, scalars
+
+
+def _corpus_aggs() -> list[Column]:
+    """N and Σdl over a frame holding one ``dl`` row per document."""
+    return [
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("dl").cast("bigint").alias("sum_dl"),
+    ]
+
+
+def _term_aggs(tfs: Sequence[Column]) -> list[Column]:
+    """df(t) and cf(t) of each query term from a per-row count of it."""
+    return [
+        F.sum(F.when(c > 0, 1).otherwise(0)).cast("bigint").alias(f"_df{i}")
+        for i, c in enumerate(tfs)
+    ] + [F.sum(c).cast("bigint").alias(f"_cf{i}") for i, c in enumerate(tfs)]
+
+
+def _bm25(n_terms: int, k1: float, b: float) -> Column:
+    """Okapi BM25 with Lucene's always-positive idf
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))`` and the standard saturation
+    ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``. ``avgdl`` is an
+    exact integer sum divided once (not a float ``avg``), so the scalar
+    is bit-identical across engines. A term the doc lacks contributes
+    exactly +0.0."""
+    n_docs = F.col("n_docs").cast("double")
+    avgdl = F.col("sum_dl").cast("double") / n_docs
+    norm = F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / avgdl
+    contribs = []
+    for i in range(n_terms):
+        df_t = F.col(f"_df{i}").cast("double")
+        idf = F.log(F.lit(1.0) + (n_docs - df_t + F.lit(0.5)) / (df_t + F.lit(0.5)))
+        tf_d = F.col(f"_tf{i}").cast("double")
+        sat = (tf_d * F.lit(k1 + 1.0)) / (tf_d + F.lit(k1) * norm)
+        contribs.append(F.when(F.col(f"_tf{i}") > 0, idf * sat).otherwise(F.lit(0.0)))
+    return reduce(lambda a, c: a + c, contribs)
+
+
+def _ql_dirichlet(n_terms: int, mu: float) -> Column:
+    """Query likelihood with Dirichlet-prior smoothing (Ponte & Croft
+    '98; Zhai & Lafferty '01): ``sum_t ln((tf + mu*cf_t/|C|) / (dl +
+    mu))`` with ``cf_t`` the collection frequency and ``|C| = Σdl`` the
+    total token count, each smoothed probability one division of exact
+    integers in a fixed expression shape."""
+    denom = F.col("dl").cast("double") + F.lit(float(mu))
+    contribs = [
+        F.log(
+            (
+                F.col(f"_tf{i}").cast("double")
+                + F.lit(float(mu)) * F.col(f"_cf{i}").cast("double")
+                / F.col("sum_dl").cast("double")
+            )
+            / denom
+        )
+        for i in range(n_terms)
+    ]
+    return reduce(lambda a, c: a + c, contribs)
+
+
+def _score_topk(
+    frames: tuple[DataFrame, DataFrame], score: Column, k: int, id_col: str
+) -> DataFrame:
+    """Score the candidates against the broadcast scalars row and rank:
+    ``(rank, id, score)``, score rounded to 6 decimals, rank dense in
+    (score desc, id asc)."""
+    per_doc, scalars = frames
+    ranked = per_doc.crossJoin(F.broadcast(scalars)).select(
+        F.col(id_col), F.round(score, 6).alias("score")
+    )
+    return topk_with_rank(ranked, [F.col("score").desc(), F.col(id_col).asc()], k)
 
 
 def bm25_topk(
@@ -396,111 +550,26 @@ def bm25_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Top-``k`` documents for ``query_terms`` under Okapi BM25.
-
-    Uses Lucene's always-positive idf ``ln(1 + (N - df + 0.5)/(df + 0.5))``
-    and the standard saturation term
-    ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``.
-
-    ``avgdl`` is computed as an exact integer sum divided once (not a
-    float ``avg``), so the scalar is bit-identical across engines; the
-    per-term contributions are added in the fixed order of
-    ``query_terms``. Output: ``(rank, doc_id, score)``, score rounded
-    to 6 decimals, rank dense in (rounded score desc, doc_id asc).
+    """Top-``k`` documents for ``query_terms`` under Okapi BM25
+    (Lucene's positive-idf variant; see ``_bm25``). Output: ``(rank,
+    doc_id, score)``, score rounded to 6 decimals, rank dense in
+    (rounded score desc, doc_id asc).
 
     The from-text form never builds the full inverted index: a query
     carries a handful of terms, so per-doc ``tf`` of each query term
     and ``dl`` come straight off the token array (``size(filter(…))``)
     in ONE map-only pass — no explode, no (doc, term) or doc-grain
     shuffle at all. The integers are the exact ones ``postings`` would
-    produce and the scoring expressions are shared shapes, so scores
-    stay bit-identical to the served/postings form.
+    produce and the scoring expression is the served form's, so scores
+    are bit-identical to :func:`bm25_topk_from_postings`.
     """
-    terms = list(dict.fromkeys(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    staged = _query_term_counts(df, terms, id_col, text_col)
-    # one single-row aggregate for every scalar: N, Σdl (avgdl's exact
-    # integer parts) and df(t) per query term — broadcast back
-    scalars = staged.agg(
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        *[
-            F.sum(F.when(F.col(f"_tf{i}") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"_df{i}")
-            for i in range(len(terms))
-        ],
+    terms = _query_terms(query_terms)
+    return _score_topk(
+        _term_counts_from_text(df, terms, id_col, text_col),
+        _bm25(len(terms), k1, b),
+        k,
+        id_col,
     )
-    cand = staged.filter(
-        reduce(lambda a, b: a | b, [F.col(f"_tf{i}") > 0 for i in range(len(terms))])
-    ).crossJoin(F.broadcast(scalars))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    score = None
-    for i in range(len(terms)):
-        idf = F.log(
-            F.lit(1.0)
-            + (
-                F.col("n_docs").cast("double")
-                - F.col(f"_df{i}").cast("double")
-                + F.lit(0.5)
-            )
-            / (F.col(f"_df{i}").cast("double") + F.lit(0.5))
-        )
-        tf_d = F.col(f"_tf{i}").cast("double")
-        sat = (tf_d * F.lit(k1 + 1.0)) / (
-            tf_d
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / avgdl)
-        )
-        # a non-matching term contributes exactly +0.0, the same value
-        # the postings form's coalesce supplies for its missing row
-        c_i = F.when(F.col(f"_tf{i}") > 0, idf * sat).otherwise(F.lit(0.0))
-        score = c_i if score is None else score + c_i
-    ranked = cand.select(F.col(id_col), F.round(score, 6).alias("score"))
-    from pyspark.sql import Window
-
-    top = ranked.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "rank", id_col, "score"
-    )
-
-
-def _query_term_counts(
-    df: DataFrame, terms: Sequence[str], id_col: str, text_col: str
-) -> DataFrame:
-    """Per-doc ``(dl, tf(term_0), …)`` computed map-side off the token
-    array — the exact integers ``postings`` produces for these terms
-    (same tokenizer: split/trim/lower, empty tokens dropped, NULL and
-    empty text -> ``dl = 0``), without the explode or a token-grain
-    shuffle. The text is spread once for tokenize parallelism (the
-    small-file fixture coalesces to a handful of scan partitions
-    otherwise) and the resulting NARROW int table is locally
-    checkpointed: both consumers (the scalar aggregate and the
-    candidate filter) reuse one tokenize pass instead of re-running
-    it per subtree."""
-    from mandoline_hbase_spark.plans.audit import checkpoint_audited
-
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda w: F.length(w) > 0,
-    )
-    # stage the token array once so the per-term filters share it
-    staged = _spread(df, id_col).select(F.col(id_col), toks.alias("_toks"))
-    counts = staged.select(
-        F.col(id_col),
-        F.coalesce(F.size(F.col("_toks")), F.lit(0)).alias("dl"),
-        *[
-            F.coalesce(
-                F.size(F.filter(F.col("_toks"), lambda w: w == F.lit(t))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias(f"_tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    return checkpoint_audited(counts)
 
 
 def bm25_topk_from_postings(
@@ -517,87 +586,49 @@ def bm25_topk_from_postings(
     streaming-maintained) tables and queries never touch document text.
     ``dl`` must carry one row per document (``postings`` guarantees
     this, empty docs included), so N and Σdl both derive from it in a
-    single tiny aggregate.
+    single tiny aggregate. Output as :func:`bm25_topk`.
 
     Zero-Exchange serving: when ``tf`` and ``dl`` are co-bucketed on
     ``id_col`` (``operators.bucketed.materialize_bucketed`` with the
     same bucket count), the whole query plans with NO hash/range
-    Exchange — the doc-keyed join and the per-doc fold both reuse the
+    Exchange — the per-doc pivot and the doc-keyed join both reuse the
     bucket layout; df(t) is a SINGLE-ROW conditional aggregate over the
     queried terms (never a term-grain groupBy, so no term shuffle) that
     broadcasts back, and corpus scalars likewise. The only movement is
     two scalar collect-to-one-partition steps and the broadcasts —
     asserted by ``tests/test_bucketed.py`` via ``exchange_count == 0``.
     """
-    terms = list(dict.fromkeys(query_terms))  # dedup, preserve order
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-
-    # corpus scalars: exact integer sums -> one double division each
-    corpus = dl.agg(
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+    terms = _query_terms(query_terms)
+    return _score_topk(
+        _term_counts_from_postings(tf, dl, terms, id_col),
+        _bm25(len(terms), k1, b),
+        k,
+        id_col,
     )
 
-    # df(t) over the queried terms only: one row, one bigint per term —
-    # integer-exact, identical to a groupBy("term").count() but without
-    # the term-grain hash Exchange
-    qtf = tf.filter(F.col("term").isin(terms))
-    dfts = qtf.agg(
-        *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"_df{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    df_t = F.coalesce(
-        *[F.when(F.col("term") == t, F.col(f"_df{i}")) for i, t in enumerate(terms)]
-    ).cast("bigint")
 
-    scored = (
-        qtf.join(dl, id_col)  # doc-keyed; qtf side is postings of q terms only
-        .crossJoin(F.broadcast(dfts))
-        .crossJoin(F.broadcast(corpus))
-    ).withColumn("df_t", df_t)
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs").cast("double") - F.col("df_t").cast("double") + F.lit(0.5))
-        / (F.col("df_t").cast("double") + F.lit(0.5))
-    )
-    tf_d = F.col("tf").cast("double")
-    sat = (tf_d * F.lit(k1 + 1.0)) / (
-        tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / avgdl)
-    )
-    contrib = scored.select(F.col(id_col), "term", (idf * sat).alias("c"))
-
-    # pivot to one column per query term, then fold in declared order —
-    # deterministic summation, no engine-dependent agg ordering
-    per_term = [
-        F.sum(F.when(F.col("term") == t, F.col("c"))).alias(f"_c{i}")
-        for i, t in enumerate(terms)
-    ]
-    folded = reduce(
-        lambda acc, i: acc + F.coalesce(F.col(f"_c{i}"), F.lit(0.0)),
-        range(1, len(terms)),
-        F.coalesce(F.col("_c0"), F.lit(0.0)),
-    )
-    ranked = (
-        contrib.groupBy(id_col)
-        .agg(*per_term)
-        .select(F.col(id_col), F.round(folded, 6).alias("score"))
-    )
-    from pyspark.sql import Window
-
-    # top-k first (TakeOrderedAndProject — per-partition heaps, never a
-    # global sort), THEN the rank window over only the k surviving rows;
-    # a pre-limit global row_number would move the whole match set to
-    # one partition.
-    top = ranked.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "rank", id_col, "score"
+def ql_dirichlet_topk(
+    df: DataFrame,
+    query_terms: Sequence[str],
+    mu: float = 2000.0,
+    k: int = 25,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Query-likelihood (Dirichlet) top-k over raw documents — the
+    second classic principled scorer (see ``_ql_dirichlet``), through
+    the same map-side per-doc term counts as :func:`bm25_topk` (no
+    explode, no shuffle). Candidates are docs matching >= 1 query term
+    (the standard inverted-index restriction; the smoothing-only score
+    of a no-match doc is rank-irrelevant below them for any query that
+    matches at all); terms fold in the fixed order of ``query_terms``.
+    Output as :func:`bm25_topk`."""
+    terms = _query_terms(query_terms)
+    return _score_topk(
+        _term_counts_from_text(df, terms, id_col, text_col),
+        _ql_dirichlet(len(terms), mu),
+        k,
+        id_col,
     )
 
 
@@ -622,10 +653,6 @@ def rrf_fuse(
     in the retrievers. Output: ``(rank, id_col, rrf_score,
     <name>_rank …)`` with null ranks where a list did not contain the
     document."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-
     sides = [
         df.select(F.col(id_col), F.col("rank").cast("bigint").alias(f"{name}_rank"))
         for name, df in ranked_lists
@@ -638,137 +665,11 @@ def rrf_fuse(
         )
         score = term if score is None else score + term
     fused = joined.withColumn("rrf_score", score)
-    # TakeOrdered first, THEN the rank stamp over the k survivors — the
-    # single-partition window touches ≤k rows, never the fused set
-    top = fused.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc()).limit(int(k))
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
+    return topk_with_rank(
+        fused, [F.col("rrf_score").desc(), F.col(id_col).asc()], k
+    ).select(
         "rank",
         id_col,
         F.round("rrf_score", 6).alias("rrf_score"),
         *[f"{name}_rank" for name, _ in ranked_lists],
-    )
-
-
-def ql_dirichlet_topk_from_postings(
-    tf: DataFrame,
-    dl: DataFrame,
-    query_terms: Sequence[str],
-    mu: float = 2000.0,
-    k: int = 25,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Query-likelihood retrieval with Dirichlet-prior smoothing (Ponte
-    & Croft '98; Zhai & Lafferty '01) served from the same ``(tf, dl)``
-    index tables as BM25 — the second classic principled scorer:
-
-        score(q, d) = sum_t  ln( (tf_t,d + mu * cf_t / |C|) / (dl_d + mu) )
-
-    with ``cf_t`` the collection frequency and ``|C|`` the total token
-    count. Candidates are docs matching >= 1 query term (the standard
-    inverted-index restriction; the smoothing-only score of a no-match
-    doc is rank-irrelevant below them for any query that matches at
-    all). Determinism discipline: ``cf_t`` and ``|C|`` are EXACT
-    integer aggregates (single-row conditional form — no term-grain
-    shuffle, mirroring BM25's df(t)); the per-term smoothed
-    probabilities divide those integers in one fixed expression shape,
-    and term contributions fold in the fixed order of ``query_terms``.
-    Output: ``(rank, doc_id, score)``, score rounded to 6, top-k via
-    TakeOrderedAndProject then a k-row rank window."""
-    terms = list(dict.fromkeys(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    qtf = tf.filter(F.col("term").isin(terms))
-    cf = qtf.agg(
-        *[
-            F.sum(F.when(F.col("term") == t, F.col("tf")).otherwise(0))
-            .cast("bigint")
-            .alias(f"_cf{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    c_tot = dl.agg(F.sum("dl").cast("bigint").alias("_c_tokens"))
-    pivot = qtf.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"_tf{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    cand = (
-        pivot.join(dl, id_col)
-        .crossJoin(F.broadcast(cf))
-        .crossJoin(F.broadcast(c_tot))
-    )
-    score = None
-    for i in range(len(terms)):
-        tf_i = F.coalesce(F.col(f"_tf{i}").cast("double"), F.lit(0.0))
-        smooth = (
-            F.lit(float(mu)) * F.col(f"_cf{i}").cast("double")
-            / F.col("_c_tokens").cast("double")
-        )
-        contrib = F.log(
-            (tf_i + smooth) / (F.col("dl").cast("double") + F.lit(float(mu)))
-        )
-        score = contrib if score is None else score + contrib
-    ranked = cand.select(F.col(id_col), F.round(score, 6).alias("score"))
-    from pyspark.sql import Window
-
-    top = ranked.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "rank", id_col, "score"
-    )
-
-
-def ql_dirichlet_topk(
-    df: DataFrame,
-    query_terms: Sequence[str],
-    mu: float = 2000.0,
-    k: int = 25,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Query-likelihood (Dirichlet) top-k over raw documents.
-
-    Like :func:`bm25_topk`, the from-text form never builds the full
-    inverted index: per-doc query-term ``tf`` and ``dl`` come off the
-    token array in one map-only pass (no explode, no shuffle), the
-    ``cf_t``/``|C|`` scalars are one single-row integer aggregate, and
-    the smoothed log-probabilities use the same expression shapes as
-    :func:`ql_dirichlet_topk_from_postings`, so scores stay
-    bit-identical to the served form."""
-    terms = list(dict.fromkeys(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    staged = _query_term_counts(df, terms, id_col, text_col)
-    scalars = staged.agg(
-        F.sum("dl").cast("bigint").alias("_c_tokens"),
-        *[
-            F.sum(F.col(f"_tf{i}")).cast("bigint").alias(f"_cf{i}")
-            for i in range(len(terms))
-        ],
-    )
-    cand = staged.filter(
-        reduce(lambda a, b: a | b, [F.col(f"_tf{i}") > 0 for i in range(len(terms))])
-    ).crossJoin(F.broadcast(scalars))
-    score = None
-    for i in range(len(terms)):
-        # same value the postings form's coalesce supplies: tf -> 0.0
-        # for a non-matching term (here the integer itself is 0)
-        tf_i = F.col(f"_tf{i}").cast("double")
-        smooth = (
-            F.lit(float(mu)) * F.col(f"_cf{i}").cast("double")
-            / F.col("_c_tokens").cast("double")
-        )
-        contrib = F.log(
-            (tf_i + smooth) / (F.col("dl").cast("double") + F.lit(float(mu)))
-        )
-        score = contrib if score is None else score + contrib
-    ranked = cand.select(F.col(id_col), F.round(score, 6).alias("score"))
-    from pyspark.sql import Window
-
-    top = ranked.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "rank", id_col, "score"
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mandoline_hbase_spark.operators.ranking import topk_with_rank
 from mandoline_hbase_spark.plans.audit import checkpoint_audited
 
 # Tiny per-language stopword alternations for the n-gram/stopword heuristic
@@ -319,16 +320,7 @@ def vocab_top_terms(
             F.count(F.lit(1)).cast("bigint").alias("doc_freq"),
         )
     )
-    # limit() first so the plan is TakeOrderedAndProject over the whole
-    # vocabulary; the single-partition rank window then sees only k rows.
-    top = totals.orderBy(F.desc("total_tf"), F.asc("term")).limit(k)
-    w = Window.orderBy(F.desc("total_tf"), F.asc("term"))
-    return top.select(
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "term",
-        "total_tf",
-        "doc_freq",
-    )
+    return topk_with_rank(totals, [F.desc("total_tf"), F.asc("term")], k)
 
 
 def top_ngrams(
@@ -368,14 +360,7 @@ def top_ngrams(
         F.sum("tf").cast("bigint").alias("total_tf"),
         F.count(F.lit(1)).cast("bigint").alias("doc_freq"),
     )
-    top = totals.orderBy(F.desc("total_tf"), F.asc("gram")).limit(k)
-    w = Window.orderBy(F.desc("total_tf"), F.asc("gram"))
-    return top.select(
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "gram",
-        "total_tf",
-        "doc_freq",
-    )
+    return topk_with_rank(totals, [F.desc("total_tf"), F.asc("gram")], k)
 
 
 def tf_idf_topk(
@@ -535,8 +520,6 @@ def top_terms_per_group(
     vocabulary is ever materialized post-shuffle. At 100 TB the shuffle
     key is (group, term), the same grain the counts need anyway.
     """
-    from pyspark.sql import Window
-
     tf = (
         df.select(
             F.col(group_col),
@@ -644,8 +627,6 @@ def pmi_cooccurrence(
     # denominators even under the cap), so it aggregates BEFORE the cap
     tcount = doc_tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("n_t"))
     if max_terms_per_doc is not None:
-        from pyspark.sql import Window
-
         wcap = Window.partitionBy(id_col).orderBy(
             F.col("_tf").desc(), F.col("term").asc()
         )
@@ -683,12 +664,7 @@ def pmi_cooccurrence(
             ),
         )
     )
-    top = scored.orderBy(
-        F.col("pmi").desc(), F.col("term_a").asc(), F.col("term_b").asc()
-    ).limit(k)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col("pmi").desc(), F.col("term_a").asc(), F.col("term_b").asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
+    order = [F.col("pmi").desc(), F.col("term_a").asc(), F.col("term_b").asc()]
+    return topk_with_rank(scored, order, k).select(
         "rank", "term_a", "term_b", "n_pair", "pmi"
     )

@@ -111,8 +111,8 @@ _REVERIFY_FIRST = {
     # shared operators/served.py lifecycle (bm25's cache fingerprint
     # format changed -> fresh slot). Served output and plans identical,
     # re-swept MATCH locally, but the r5 green predates the change.
+    # (bm25_served_topk is pinned again at round 11, below.)
     "sim_ivf_served_topk": 6,
-    "bm25_served_topk": 6,
     # round 7: gained a degenerate-config value-level oracle (VERDICT
     # r6 #6; dedup_simhash gained its planted-pair recall oracle in the
     # same round, pinned below). No prior green rows at all (was
@@ -165,6 +165,12 @@ _REVERIFY_FIRST = {
     "bm25_search_topk": 11,
     "search_ql_dirichlet_topk": 11,
     "search_bm25_rerank_cosine": 11,
+    # round 11: the served forms now pivot the queried postings per doc
+    # and score through the same expression as the from-text form
+    # (re-swept MATCH, plan counts unchanged); bm25_served_topk was
+    # first pinned at round 6 for the served-artifact lifecycle
+    "bm25_served_topk": 11,
+    "bm25_stream_served_topk": 11,
     # round 11: quadratic dedup anchors compare 8-byte shingle hashes
     # first and verify survivors on the exact strings; capped fuzzy
     # matching uses lead(1..K) instead of a self-join

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mandoline_hbase_spark.operators import dedup, sampling, semdedup, text
 from mandoline_hbase_spark.operators import packing as packing_ops
+from mandoline_hbase_spark.operators.ranking import topk_with_rank
 from mandoline_hbase_spark.operators.skew import spread_to_parallelism
 from mandoline_hbase_spark.queries.catalog import register
 from mandoline_hbase_spark.queries.llmops import _DUCK_SHINGLES
@@ -438,18 +439,7 @@ def text_bigram_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         occurrences.groupBy("gram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("total_tf"))
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("total_tf"), F.asc("gram"))
-    top = (
-        totals.orderBy(F.desc("total_tf"), F.asc("gram"))
-        .limit(25)
-        .select(
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            "gram",
-            "total_tf",
-        )
-    )
+    top = topk_with_rank(totals, [F.desc("total_tf"), F.asc("gram")], 25)
     sketch = text.countmin_sketch(totals, "gram", "total_tf", depth=4, width=1024)
     est = text.countmin_estimate(sketch, top.select("gram"), "gram", depth=4, width=1024)
     # The sketch buckets are xxhash64-placed (engine-specific), but the

@@ -1,8 +1,9 @@
 """Continuously-maintained full-text index: streaming postings upkeep.
 
-``operators.search`` builds its inverted index from document text at
-query time; a deployed search stack materializes the index ONCE and
-keeps it current as documents arrive. This module is that upkeep loop
+``operators.search`` scores queries either straight from document
+text or from materialized ``postings`` tables — two sources of one
+scoring pipeline. A deployed search stack materializes the index ONCE
+and keeps it current as documents arrive. This module is that upkeep loop
 under Structured Streaming: each micro-batch of (new, immutable)
 documents appends its postings — no corpus rescan, no read-modify-write
 (documents are append-only in this store, so the index delta of a batch
@@ -14,17 +15,20 @@ directory per micro-batch, written distributed by executors):
 - ``tf/``  ``(doc_id, term, tf)`` — the inverted postings
 - ``dl/``  ``(doc_id, dl)``       — one row PER DOCUMENT (empty docs
   carry ``dl = 0``), so corpus scalars (N, Σdl) and per-term document
-  frequencies all derive from the index tables alone
+  and collection frequencies all derive from the index tables alone
 
 Deterministic ``batch-{id}`` directory names + ``mode("overwrite")``
 make ``foreachBatch`` replays idempotent — the same replay-safety
 discipline as streaming/curation.py. Serving a query is
-``operators.search.bm25_topk_from_postings(read_index(...))``: document
-text is never touched after ingest.
+``operators.search.bm25_topk_from_postings(read_index(...))`` — the
+postings source pivots the queried terms' postings per doc and scores
+with the same expression as the from-text form: document text is never
+touched after ingest.
 
 At 100 TB the two roles are lakehouse tables partitioned/bucketed on
 ``term`` and ``doc_id`` respectively (see ``operators/bucketed.py`` —
-the tf/dl equi-join then plans with zero Exchange); the per-batch
+with both bucketed on ``doc_id``, the per-doc pivot and the tf/dl join
+then plan with zero Exchange); the per-batch
 append cost is proportional to the batch.
 """
 

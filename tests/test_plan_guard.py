@@ -61,13 +61,14 @@ BNLJ_ALLOWED = {
     # (per-term collection frequencies, total token count) into the
     # candidate docs — the same designed shape as bm25's corpus scalars
     "search_ql_dirichlet_topk",
-    # the served form calls the same bm25_topk_from_postings scoring
-    # (operators/search.py) — the BNLJ pair is the identical designed
-    # broadcast 1-row scalar crossJoin (corpus N, total doc length)
+    # the served form scores through the shared lexical scorer
+    # (operators/search.py::_score_topk) — the BNLJ pair is the designed
+    # broadcast 1-row scalars frame (corpus N, total doc length x the
+    # per-term df/cf row) crossJoined into the per-doc candidates
     "bm25_served_topk",
-    # the stream-served form serves through the same
-    # bm25_topk_from_postings scoring — the identical designed
-    # broadcast 1-row scalar crossJoin (corpus N, total doc length)
+    # the stream-served form serves through the same shared scorer
+    # (_score_topk over the postings source) — the identical designed
+    # broadcast 1-row scalars crossJoin
     "bm25_stream_served_topk",
     # the rerank stage additionally crossJoins the broadcast 1-row
     # query vector into the k-row shortlist

@@ -75,11 +75,37 @@ def test_bm25_duplicate_query_terms_counted_once(spark, corpus):
     assert once == twice
 
 
-def test_bm25_plan_is_topk_not_global_sort(spark, corpus):
-    plan = search.bm25_topk(corpus, ["apple"], k=5)._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.parametrize(
+    "scorer", [search.bm25_topk, search.ql_dirichlet_topk], ids=lambda f: f.__name__
+)
+def test_bm25_plan_is_topk_not_global_sort(spark, corpus, monkeypatch, scorer):
+    # the tokenize pass is checkpointed, so the final plan alone cannot
+    # show an explode: record every plan handed to the checkpoint too
+    severed = []
+    real = search.checkpoint_audited
+
+    def spy(df, *args, **kwargs):
+        severed.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(search, "checkpoint_audited", spy)
+    plan = scorer(corpus, ["apple"], k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     # the only window runs over the k pre-limited rows
     assert plan.index("TakeOrderedAndProject") > plan.index("Window")
+    # per-doc term counts come off the token array: no explode anywhere
+    assert severed
+    for p in severed + [plan]:
+        assert "Generate" not in p
+
+
+def test_bm25_text_and_postings_sources_bit_identical(spark, corpus):
+    tf, dl = search.postings(corpus)
+    for q in (["apple", "durian"], ["apple", "apple"], ["zzz", "banana"], ["banana"]):
+        direct = search.bm25_topk(corpus, q).collect()
+        served = search.bm25_topk_from_postings(tf, dl, q).collect()
+        assert direct, q
+        assert direct == served, q
 
 
 def test_postings_shapes(spark, corpus):
