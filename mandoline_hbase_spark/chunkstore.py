@@ -41,25 +41,20 @@ class ChunkStore:
     def read_chunk(self, hash_: str) -> bytes:
         """Point get of the chunk payload; raises ChunkNotFoundError if absent."""
         _validate_hash(hash_)
-        t = storage.scan(
-            self._dir,
-            storage.CHUNKS_SCHEMA,
-            filter=(pc.field("chunk_id") == hash_) & pc.field("data").is_valid(),
-            columns=["data"],
-        )
-        if t.num_rows == 0:
+        # Ref-delta rows come back as nulls; their row groups are not read.
+        data = storage.scan(
+            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": hash_}, columns=["data"]
+        ).column("data").drop_null()
+        if len(data) == 0:
             raise ChunkNotFoundError(f"no chunk was found for hash {hash_}")
         # Content-addressed: every data row for this id holds identical bytes.
-        return t.column("data")[0].as_py()
+        return data[0].as_py()
 
     def chunk_refs(self, hash_: str) -> int:
         """Ref-count = SUM(ref_delta); raises ChunkRefNotFoundError if the id is unknown."""
         _validate_hash(hash_)
         t = storage.scan(
-            self._dir,
-            storage.CHUNKS_SCHEMA,
-            filter=pc.field("chunk_id") == hash_,
-            columns=["ref_delta"],
+            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": hash_}, columns=["ref_delta"]
         )
         if t.num_rows == 0:
             raise ChunkRefNotFoundError(f"no chunk reference count was found for hash {hash_}")
@@ -104,9 +99,6 @@ class ChunkStore:
     def known_chunk(self, hash_: str) -> bool:
         _validate_hash(hash_)
         t = storage.scan(
-            self._dir,
-            storage.CHUNKS_SCHEMA,
-            filter=pc.field("chunk_id") == hash_,
-            columns=["chunk_id"],
+            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": hash_}, columns=["chunk_id"]
         )
         return t.num_rows > 0

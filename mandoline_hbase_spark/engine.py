@@ -269,7 +269,7 @@ class Connection:
         t = storage.scan(
             self._dirs["versions"],
             storage.VERSIONS_SCHEMA,
-            filter=pc.field("version_id") == int(version),
+            filter={"version_id": int(version)},
             columns=["metadata"],
         )
         if t.num_rows == 0:
@@ -787,13 +787,16 @@ class Connection:
         # chunk coords intersecting the region
         lo_chunk = tuple(lo // cs for lo, cs in zip(region_lo, chunk_shape))
         hi_chunk = tuple((hi - 1) // cs for hi, cs in zip(region_hi, chunk_shape))
-        base_map = self.resolve_chunk_map(var_name, latest)
+        coords = list(_iter_box(lo_chunk, hi_chunk))
+        base_map = self.resolve_chunk_map(
+            var_name, latest, coord_ids=[codec.coordinate_to_id(c) for c in coords]
+        )
         store = self.chunk_store()
 
         entries: list[tuple[tuple[int, ...], str]] = []
         blobs: dict[str, bytes] = {}
         refs: dict[str, int] = {}
-        for coord in _iter_box(lo_chunk, hi_chunk):
+        for coord in coords:
             base_hash = base_map.get(codec.coordinate_to_id(coord))
             if base_hash is not None:
                 block = codec.decode_chunk(store.read_chunk(base_hash), dtype, chunk_shape).copy()
@@ -868,14 +871,13 @@ class Connection:
         over every coordinate of the variable at once. ``coord_ids``
         narrows the scan to a coordinate subset — the analog of the
         reference's bounded start/stop-row scan (hbase.clj:191-192),
-        pushed to the parquet reader as an isin filter. Only entries of
-        COMMITTED versions participate (see _committed_versions_le).
+        served from the storage catalog's hash index on ``coord_id``.
+        Only entries of COMMITTED versions participate (see
+        _committed_versions_le).
         """
-        flt = (pc.field("var_name") == var_name) & (
-            pc.field("version_id").isin(self._committed_versions_le(bound))
-        )
+        flt = {"var_name": var_name, "version_id": self._committed_versions_le(bound)}
         if coord_ids is not None:
-            flt = flt & pc.field("coord_id").isin(coord_ids)
+            flt["coord_id"] = coord_ids
         t = storage.scan(
             self._dirs["indices"],
             storage.INDICES_SCHEMA,

@@ -50,9 +50,6 @@ class Index:
 
     # -- reads ------------------------------------------------------------
 
-    def _key_filter(self, coord_id: str):
-        return (pc.field("var_name") == self.var_name) & (pc.field("coord_id") == coord_id)
-
     def current_value(self, coord, version_id: int) -> Optional[str]:
         """Current chunk-id for the exact (var, coord, version) key.
 
@@ -63,7 +60,7 @@ class Index:
         t = storage.scan(
             self._dir,
             storage.INDICES_SCHEMA,
-            filter=self._key_filter(coord_id) & (pc.field("version_id") == int(version_id)),
+            filter={"var_name": self.var_name, "coord_id": coord_id, "version_id": int(version_id)},
             columns=["chunk_id", "seq"],
         )
         if t.num_rows == 0:
@@ -106,7 +103,7 @@ class Index:
         t = storage.scan(
             self._dir,
             storage.INDICES_SCHEMA,
-            filter=self._key_filter(coord_id) & pc.field("version_id").isin(committed),
+            filter={"var_name": self.var_name, "coord_id": coord_id, "version_id": committed},
             columns=["version_id", "chunk_id", "seq"],
         )
         if t.num_rows == 0:

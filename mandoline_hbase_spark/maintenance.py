@@ -61,9 +61,14 @@ def _swap_in(table_dir: str, tmp_dir: str) -> None:
 
 
 def _rewrite(conn, role: str, df) -> None:
-    """Materialize ``df`` as the new content of the ``role`` log table."""
+    """Materialize ``df`` as the new content of the ``role`` log table.
+    Chunks are written one row per row group, as ``storage.append_rows``
+    writes them, so a point read decodes one payload."""
     tmp = conn._dirs[role] + f".rewrite-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+    writer = df.write.mode("overwrite")
+    if role == "chunks":
+        writer = writer.option("parquet.block.row.count.limit", "1")
+    writer.parquet(tmp)
     _swap_in(conn._dirs[role], tmp)
 
 

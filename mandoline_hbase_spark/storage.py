@@ -18,20 +18,51 @@ read time:
   lands (§3.2 of SURVEY.md).
 
 Point reads (the real-time path, explicitly non-Spark per the project's
-north star) use pyarrow dataset scans with pushed-down filters; analytic
-reads load the same directories with ``spark.read.parquet``. At cluster
-scale these directories live on object storage and the appends become
-distributed Spark writes; the schemas and read resolution are unchanged.
+north star) go through :func:`scan`, served by a process-wide catalog of
+the log files — the analog of the block index under the reference's
+``get`` and bounded scans (hbase.clj:97-103, 184-198). For each file the
+catalog keeps the parquet footer and the file's key columns with their
+row locations: ``chunk_id``, ``ref_delta`` and payload presence for
+``chunks``, every column for ``indices`` and ``versions``. It never holds
+payload bytes; a scan that projects ``data`` reads only the row groups
+that hold the wanted keys. :func:`append_rows` writes ``chunks`` files
+with one row per row group (the 64 kB block analog), and compaction
+rewrites them the same way. Its invariants:
+
+- log files are immutable and uniquely named: nothing rewrites one in
+  place, and :func:`append_rows` publishes each file by rename, so a
+  listing never shows it half written;
+- a file's identity is its name plus ``(st_ino, st_size, st_mtime_ns)``;
+  every scan lists the directory (pyarrow's discovery rules: names with
+  a ``.``/``_`` prefix are skipped), so a file another process adds is
+  seen on the next call, and a file that compaction removes or an
+  ``os.replace`` swaps under the same name is dropped, never served;
+- memory is keys only, per directory, for the last
+  ``_CATALOG_DIRS`` directories scanned.
+
+Its failure mode: a file rewritten in place with the same inode, size
+and mtime would be served stale. Nothing in this package writes a log
+file that way. A directory the catalog cannot model (one holding a
+subdirectory) falls back to a pyarrow dataset scan.
+
+Analytic reads load the same directories with ``spark.read.parquet``.
+At cluster scale these directories live on object storage and the
+appends become distributed Spark writes; the schemas and read
+resolution are unchanged.
 """
 
 from __future__ import annotations
 
+import bisect
 import os
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from contextlib import contextmanager
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 
@@ -74,24 +105,340 @@ SPARK_DDL = {
 }
 
 
+def _payload_columns(schema: pa.Schema) -> list[str]:
+    """Columns that hold chunk payloads (binary); every other column is a key."""
+    return [f.name for f in schema if pa.types.is_binary(f.type) or pa.types.is_large_binary(f.type)]
+
+
 def append_rows(table_dir: str, schema: pa.Schema, rows: list[dict]) -> str:
     """Append one parquet file of ``rows`` to the log directory."""
-    table = pa.Table.from_pylist(rows, schema=schema)
-    path = os.path.join(table_dir, f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet")
-    pq.write_table(table, path)
-    return path
+    return _publish(table_dir, pa.Table.from_pylist(rows, schema=schema))
 
 
 def append_table(table_dir: str, table: pa.Table) -> str:
-    path = os.path.join(table_dir, f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet")
-    pq.write_table(table, path)
+    return _publish(table_dir, table)
+
+
+def _publish(table_dir: str, table: pa.Table) -> str:
+    """Write ``table`` as a new log file under a hidden name, then rename
+    it into place, so no reader ever lists a partial file. A table with
+    a payload column gets one row per row group, so a point read decodes
+    one payload, not the whole file."""
+    name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}.parquet"
+    path = os.path.join(table_dir, name)
+    tmp = os.path.join(table_dir, f".{name}.tmp")
+    pq.write_table(table, tmp, row_group_size=1 if _payload_columns(table.schema) else None)
+    os.replace(tmp, path)
     return path
 
 
+# --- The log-file catalog ----------------------------------------------------
+
+_CATALOG_DIRS = 256  # directories kept cached; the least recently scanned goes first
+
+
+class _LogFile:
+    """Catalog entry of one immutable log file: its footer, its key
+    columns (conformed to the table schema, payload columns left out) and
+    a per-row presence flag for each payload column."""
+
+    def __init__(self, path: str, schema: pa.Schema):
+        pf = pq.ParquetFile(path)
+        self.path = path
+        self.meta = pf.metadata
+        in_file = set(pf.schema_arrow.names)
+        key_schema = _key_schema(schema)
+        t = pf.read(columns=[n for n in key_schema.names if n in in_file], use_threads=False)
+        n = self.meta.num_rows
+        self.keys = pa.Table.from_arrays(
+            [
+                _conform(t.column(f.name), f.type) if f.name in in_file else pa.nulls(n, f.type)
+                for f in key_schema
+            ],
+            schema=key_schema,
+        ).combine_chunks()
+        self.rg_starts = [0]
+        for rg in range(self.meta.num_row_groups):
+            self.rg_starts.append(self.rg_starts[-1] + self.meta.row_group(rg).num_rows)
+        self.present = {p: _presence(pf, p) for p in _payload_columns(schema) if p in in_file}
+        self._values: dict[str, list] = {}
+
+    def values(self, col: str) -> list:
+        v = self._values.get(col)
+        if v is None:
+            v = self._values[col] = self.keys.column(col).to_pylist()
+        return v
+
+    def take(self, rows, fields: list[pa.Field]) -> pa.Table:
+        """The projected ``rows`` of this file. Payload columns are read
+        from the row groups that hold present rows, and nothing else."""
+        payload = [f.name for f in fields if f.name in self.present]
+        wanted = sorted({self._row_group(i) for p in payload for i in rows if self.present[p][i]})
+        columns = {}
+        if wanted:
+            t = pq.ParquetFile(self.path, metadata=self.meta).read_row_groups(
+                wanted, columns=payload, use_threads=False
+            )
+            base, at = {}, 0
+            for rg in wanted:
+                base[rg] = at - self.rg_starts[rg]
+                at += self.rg_starts[rg + 1] - self.rg_starts[rg]
+            for p in payload:
+                loc = [base[self._row_group(i)] + i if self.present[p][i] else None for i in rows]
+                columns[p] = t.column(p).take(pa.array(loc, pa.int64()))
+        key_fields = [f.name for f in fields if f.name in self.keys.column_names]
+        if key_fields:
+            keys = self.keys.select(key_fields)
+            if len(rows) < keys.num_rows:
+                keys = keys.take(list(rows))
+            columns.update(zip(key_fields, keys.columns))
+        return pa.Table.from_arrays(
+            [
+                _conform(columns[f.name], f.type) if f.name in columns else pa.nulls(len(rows), f.type)
+                for f in fields
+            ],
+            schema=pa.schema(fields),
+        )
+
+    def _row_group(self, row: int) -> int:
+        return bisect.bisect_right(self.rg_starts, row) - 1
+
+
+def _key_schema(schema: pa.Schema) -> pa.Schema:
+    payload = _payload_columns(schema)
+    return pa.schema([f for f in schema if f.name not in payload])
+
+
+def _conform(col, typ: pa.DataType):
+    return col if col.type == typ else col.cast(typ)
+
+
+def _presence(pf: pq.ParquetFile, name: str) -> list[bool]:
+    """Per-row non-null flags of column ``name``, from each row group's
+    null count where it decides, else from the column itself."""
+    leaf = next(j for j in range(pf.metadata.num_columns) if pf.metadata.schema.column(j).path == name)
+    out: list[bool] = []
+    for rg in range(pf.metadata.num_row_groups):
+        meta = pf.metadata.row_group(rg)
+        stats = meta.column(leaf).statistics
+        nulls = stats.null_count if stats is not None and stats.has_null_count else None
+        if nulls == 0 or nulls == meta.num_rows:
+            out.extend([nulls == 0] * meta.num_rows)
+        else:
+            out.extend(pf.read_row_group(rg, columns=[name]).column(0).is_valid().to_pylist())
+    return out
+
+
+def _list_log(table_dir: str):
+    """``[(name, (st_ino, st_size, st_mtime_ns))]`` of the directory's log
+    files, sorted by name, skipping what pyarrow discovery skips. None
+    when the directory holds something the catalog cannot model."""
+    out = []
+    try:
+        with os.scandir(table_dir) as it:
+            for e in it:
+                if e.name.startswith((".", "_")):
+                    continue
+                if not e.is_file():
+                    return None
+                st = e.stat()
+                out.append((e.name, (st.st_ino, st.st_size, st.st_mtime_ns)))
+    except FileNotFoundError:
+        return []
+    out.sort()
+    return out
+
+
+class _LogDir:
+    """The catalog of one log directory: its files as last listed, and
+    hash indexes ``value -> [(file, row)]`` on the key columns that key
+    filters name, each built on first use and extended as files arrive."""
+
+    def __init__(self, table_dir: str, schema: pa.Schema):
+        self.table_dir = table_dir
+        self.schema = schema
+        self.listing: list = []
+        self.files: dict[str, _LogFile] = {}
+        self._index: dict[str, dict] = {}
+        self._keys: pa.Table | None = None
+
+    def stale(self, listing) -> list[str]:
+        """Names in ``listing`` this catalog holds no current file for."""
+        if listing == self.listing:
+            return []
+        known = dict(self.listing)
+        return [n for n, ident in listing if known.get(n) != ident]
+
+    def update(self, listing, built: dict[str, _LogFile]) -> None:
+        """Bring the catalog to ``listing``: files that left (or were
+        replaced under their name) are dropped, with the indexes that
+        point into them."""
+        if listing == self.listing:
+            return
+        known = dict(self.listing)
+        files = {}
+        for n, ident in listing:
+            if n in built:
+                files[n] = built[n]
+            elif known.get(n) == ident:
+                files[n] = self.files[n]
+            else:  # another scan moved the catalog on between our two lock holds
+                files[n] = _LogFile(os.path.join(self.table_dir, n), self.schema)
+        if all(files.get(n) is f for n, f in self.files.items()):
+            added = [f for n, f in files.items() if n not in self.files]
+            for col, idx in self._index.items():
+                for f in added:
+                    _index_file(idx, f, col)
+        else:
+            self._index = {}
+        self.listing, self.files, self._keys = listing, files, None
+
+    def match(self, keys: dict[str, frozenset]) -> list[tuple[_LogFile, list[int]]]:
+        """Rows matching every ``column in values`` condition, per file in
+        name order. Candidates come from the index of the most selective
+        column; the other conditions are checked on those rows only."""
+        for col in keys:
+            if col not in self._index:
+                idx = self._index[col] = {}
+                for f in self.files.values():
+                    _index_file(idx, f, col)
+        drive = min(keys, key=lambda c: len(keys[c]) / max(1, len(self._index[c])))
+        idx = self._index[drive]
+        rest = [(c, vals) for c, vals in keys.items() if c != drive]
+        hits: dict[_LogFile, list[int]] = {}
+        for v in keys[drive]:
+            for f, i in idx.get(v, ()):
+                if all(f.values(c)[i] in vals for c, vals in rest):
+                    hits.setdefault(f, []).append(i)
+        return [(f, sorted(hits[f])) for f in sorted(hits, key=lambda f: f.path)]
+
+    def key_table(self) -> pa.Table:
+        """Every file's keys as one table, in name order. Rebuilt after
+        the file set changes; only expression and unfiltered scans use
+        it, and their output grows with the rows anyway."""
+        if self._keys is None:
+            parts = [f.keys for f in self.files.values()]
+            self._keys = pa.concat_tables(parts or [_key_schema(self.schema).empty_table()]).combine_chunks()
+        return self._keys
+
+
+def _index_file(idx: dict, f: _LogFile, col: str) -> None:
+    for i, v in enumerate(f.values(col)):
+        idx.setdefault(v, []).append((f, i))
+
+
+class _Catalog:
+    """Process-wide ``directory -> _LogDir``, behind one lock."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._dirs: OrderedDict[str, _LogDir] = OrderedDict()
+
+    def _get(self, table_dir: str, schema: pa.Schema) -> _LogDir:
+        d = self._dirs.get(table_dir)
+        if d is None or not d.schema.equals(schema):
+            d = self._dirs[table_dir] = _LogDir(table_dir, schema)
+        self._dirs.move_to_end(table_dir)
+        while len(self._dirs) > _CATALOG_DIRS:
+            self._dirs.popitem(last=False)
+        return d
+
+    @contextmanager
+    def open(self, table_dir: str, schema: pa.Schema, listing):
+        """The directory's catalog brought up to ``listing``, locked for
+        the caller's lookups. New files' keys are read outside the lock."""
+        with self._lock:
+            stale = self._get(table_dir, schema).stale(listing)
+        built = {n: _LogFile(os.path.join(table_dir, n), schema) for n in stale}
+        with self._lock:
+            d = self._get(table_dir, schema)
+            d.update(listing, built)
+            yield d
+
+    def reset_lock(self) -> None:
+        self._lock = threading.Lock()
+
+
+_CATALOG = _Catalog()
+# a forked child must not inherit a lock that a parent thread held
+os.register_at_fork(after_in_child=_CATALOG.reset_lock)
+
+
+def _as_set(v) -> frozenset:
+    return frozenset(v) if isinstance(v, (list, tuple, set, frozenset)) else frozenset([v])
+
+
+def _as_expression(filter):
+    """A key filter as the equivalent pyarrow expression."""
+    if filter is None or isinstance(filter, pc.Expression):
+        return filter
+    terms = [pc.field(c).isin(list(_as_set(v))) for c, v in filter.items()]
+    expr = terms[0]
+    for t in terms[1:]:
+        expr = expr & t
+    return expr
+
+
 def scan(table_dir: str, schema: pa.Schema, filter=None, columns=None) -> pa.Table:
-    """Point/range read with pushed-down filter (the non-Spark path)."""
+    """Read a log directory: the rows matching ``filter``, projected on
+    ``columns`` (all of ``schema`` when None), in ``schema``'s types. An
+    empty or missing directory gives an empty table.
+
+    ``filter`` is None, a key filter — a mapping ``{column: value or
+    list of values}`` over scalar key columns, the conjunction of
+    equalities and memberships that point reads use, served from the
+    catalog's hash indexes at a cost that grows with the directory's
+    files and the matching rows, not with its rows — or a
+    ``pyarrow.compute`` expression, evaluated over the catalog's key
+    columns. An expression on a payload column, or a directory the
+    catalog cannot model, takes the pyarrow dataset path."""
+    fields = [schema.field(c) for c in (columns if columns is not None else schema.names)]
+    for attempt in range(3):
+        listing = _list_log(table_dir)
+        if listing is None:
+            break
+        if not listing:
+            return pa.schema(fields).empty_table()
+        try:
+            out = _catalog_scan(table_dir, schema, listing, filter, fields)
+        except FileNotFoundError:  # listed, then removed by compaction: list again
+            if attempt == 2:
+                raise
+            continue
+        if out is None:
+            break
+        return out
     dataset = pa_ds.dataset(table_dir, format="parquet", schema=schema)
-    return dataset.to_table(filter=filter, columns=columns)
+    return dataset.to_table(filter=_as_expression(filter), columns=[f.name for f in fields])
+
+
+def _catalog_scan(table_dir, schema, listing, filter, fields) -> pa.Table | None:
+    """:func:`scan` served from the catalog; None when it needs the dataset path."""
+    key_names = set(schema.names).difference(_payload_columns(schema))
+    keys_only = all(f.name in key_names for f in fields)
+    key_filter = filter is not None and not isinstance(filter, pc.Expression)
+    if key_filter:
+        keys = {c: _as_set(v) for c, v in filter.items()}
+        if not keys.keys() <= key_names:
+            return None
+    elif filter is not None and not keys_only:
+        return None  # an expression with a payload column projected
+    with _CATALOG.open(table_dir, schema, listing) as d:
+        if key_filter:
+            picks = d.match(keys)
+        elif keys_only:
+            table = d.key_table()
+        else:
+            picks = [(f, range(f.keys.num_rows)) for f in d.files.values()]
+    if not key_filter and keys_only:
+        try:
+            return (table if filter is None else table.filter(filter)).select([f.name for f in fields])
+        except pa.ArrowInvalid:  # the expression names a payload column
+            return None
+    pieces = [f.take(rows, fields) for f, rows in picks if len(rows)]
+    if not pieces:
+        return pa.schema(fields).empty_table()
+    return pa.concat_tables(pieces) if len(pieces) > 1 else pieces[0]
 
 
 @contextmanager
