@@ -37,13 +37,20 @@ rewrites them the same way. Its invariants:
   a ``.``/``_`` prefix are skipped), so a file another process adds is
   seen on the next call, and a file that compaction removes or an
   ``os.replace`` swaps under the same name is dropped, never served;
+- listings are applied in the order they were taken: a scan whose
+  listing is older than the catalog's is served the newer state, which
+  was listed after that scan began, so a removed file never comes back;
+  a file the catalog holds and a newer listing lacks is dropped only
+  once a ``stat`` shows it gone or changed (the listing may have read
+  the directory before the file was published);
 - memory is keys only, per directory, for the last
   ``_CATALOG_DIRS`` directories scanned.
 
 Its failure mode: a file rewritten in place with the same inode, size
 and mtime would be served stale. Nothing in this package writes a log
 file that way. A directory the catalog cannot model (one holding a
-subdirectory) falls back to a pyarrow dataset scan.
+subdirectory) is read by a pyarrow dataset scan; nothing in this package
+writes one.
 
 Analytic reads load the same directories with ``spark.read.parquet``.
 At cluster scale these directories live on object storage and the
@@ -54,7 +61,9 @@ resolution are unchanged.
 from __future__ import annotations
 
 import bisect
+import itertools
 import os
+import stat
 import threading
 import time
 import uuid
@@ -230,59 +239,92 @@ def _presence(pf: pq.ParquetFile, name: str) -> list[bool]:
 
 
 def _list_log(table_dir: str):
-    """``[(name, (st_ino, st_size, st_mtime_ns))]`` of the directory's log
-    files, sorted by name, skipping what pyarrow discovery skips. None
-    when the directory holds something the catalog cannot model."""
-    out = []
+    """``(stamp, entries)``: ``entries`` is ``[(name, (st_ino, st_size,
+    st_mtime_ns))]`` of the directory's log files, sorted by name,
+    skipping what pyarrow discovery skips, or None when the directory
+    holds something the catalog cannot model. ``stamp`` is drawn before
+    the directory is read, so a larger stamp is a later listing."""
+    stamp = next(_LISTINGS)
     try:
-        with os.scandir(table_dir) as it:
-            for e in it:
-                if e.name.startswith((".", "_")):
-                    continue
-                if not e.is_file():
-                    return None
-                st = e.stat()
-                out.append((e.name, (st.st_ino, st.st_size, st.st_mtime_ns)))
+        it = os.scandir(table_dir)
     except FileNotFoundError:
-        return []
+        return stamp, []
+    out = []
+    with it:
+        for e in it:
+            if e.name.startswith((".", "_")):
+                continue
+            try:
+                st = e.stat()
+            except FileNotFoundError:  # unlinked since the readdir: no longer in the log
+                continue
+            if not stat.S_ISREG(st.st_mode):
+                return stamp, None
+            out.append((e.name, (st.st_ino, st.st_size, st.st_mtime_ns)))
     out.sort()
-    return out
+    return stamp, out
+
+
+_LISTINGS = itertools.count()
+
+
+def _ident(table_dir: str, name: str):
+    try:
+        st = os.stat(os.path.join(table_dir, name))
+    except FileNotFoundError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
 
 
 class _LogDir:
-    """The catalog of one log directory: its files as last listed, and
-    hash indexes ``value -> [(file, row)]`` on the key columns that key
-    filters name, each built on first use and extended as files arrive."""
+    """The catalog of one log directory: its files as of the latest
+    listing applied, and hash indexes ``value -> [(file, row)]`` on the
+    key columns that key filters name, each built on first use and
+    extended as files arrive."""
 
     def __init__(self, table_dir: str, schema: pa.Schema):
         self.table_dir = table_dir
         self.schema = schema
+        self.stamp = -1
         self.listing: list = []
         self.files: dict[str, _LogFile] = {}
         self._index: dict[str, dict] = {}
         self._keys: pa.Table | None = None
 
-    def stale(self, listing) -> list[str]:
-        """Names in ``listing`` this catalog holds no current file for."""
-        if listing == self.listing:
+    def stale(self, stamp: int, listing) -> list[str]:
+        """Names in ``listing`` this catalog holds no current file for
+        (none when the catalog already applied a later listing)."""
+        if stamp <= self.stamp or listing == self.listing:
             return []
         known = dict(self.listing)
         return [n for n, ident in listing if known.get(n) != ident]
 
-    def update(self, listing, built: dict[str, _LogFile]) -> None:
-        """Bring the catalog to ``listing``: files that left (or were
-        replaced under their name) are dropped, with the indexes that
-        point into them."""
+    def update(self, stamp: int, listing, built: dict[str, _LogFile]) -> None:
+        """Bring the catalog to ``listing`` unless it already applied a
+        later one: files that left (or were replaced under their name)
+        are dropped, with the indexes that point into them. A listing
+        older than the catalog's is not applied; its caller is served the
+        newer state, which was listed after that caller's scan began."""
+        if stamp <= self.stamp:
+            return
+        self.stamp = stamp
         if listing == self.listing:
             return
+        listed = dict(listing)
+        # A held file the listing lacks either left, or was published after
+        # this listing's readdir (a later-stamped listing can read the
+        # directory first): it stays while it is still there, unchanged.
+        held = [(n, ident) for n, ident in self.listing if n not in listed and _ident(self.table_dir, n) == ident]
+        if held:
+            listing = sorted(listing + held)
         known = dict(self.listing)
         files = {}
         for n, ident in listing:
-            if n in built:
-                files[n] = built[n]
-            elif known.get(n) == ident:
+            if known.get(n) == ident:
                 files[n] = self.files[n]
-            else:  # another scan moved the catalog on between our two lock holds
+            elif n in built:
+                files[n] = built[n]
+            else:  # the catalog was evicted and made anew between our two lock holds
                 files[n] = _LogFile(os.path.join(self.table_dir, n), self.schema)
         if all(files.get(n) is f for n, f in self.files.items()):
             added = [f for n, f in files.items() if n not in self.files]
@@ -331,6 +373,12 @@ class _Catalog:
     """Process-wide ``directory -> _LogDir``, behind one lock."""
 
     def __init__(self):
+        self.clear()
+
+    def clear(self) -> None:
+        """Drop every directory's entry. A forked child calls this: it must
+        not inherit a lock a parent thread held, nor an entry that thread
+        was part way through updating."""
         self._lock = threading.Lock()
         self._dirs: OrderedDict[str, _LogDir] = OrderedDict()
 
@@ -344,24 +392,21 @@ class _Catalog:
         return d
 
     @contextmanager
-    def open(self, table_dir: str, schema: pa.Schema, listing):
-        """The directory's catalog brought up to ``listing``, locked for
-        the caller's lookups. New files' keys are read outside the lock."""
+    def open(self, table_dir: str, schema: pa.Schema, stamp: int, listing):
+        """The directory's catalog brought up to ``listing`` (or a later
+        one), locked for the caller's lookups. New files' keys are read
+        outside the lock."""
         with self._lock:
-            stale = self._get(table_dir, schema).stale(listing)
+            stale = self._get(table_dir, schema).stale(stamp, listing)
         built = {n: _LogFile(os.path.join(table_dir, n), schema) for n in stale}
         with self._lock:
             d = self._get(table_dir, schema)
-            d.update(listing, built)
+            d.update(stamp, listing, built)
             yield d
-
-    def reset_lock(self) -> None:
-        self._lock = threading.Lock()
 
 
 _CATALOG = _Catalog()
-# a forked child must not inherit a lock that a parent thread held
-os.register_at_fork(after_in_child=_CATALOG.reset_lock)
+os.register_at_fork(after_in_child=_CATALOG.clear)
 
 
 def _as_set(v) -> frozenset:
@@ -389,41 +434,38 @@ def scan(table_dir: str, schema: pa.Schema, filter=None, columns=None) -> pa.Tab
     equalities and memberships that point reads use, served from the
     catalog's hash indexes at a cost that grows with the directory's
     files and the matching rows, not with its rows — or a
-    ``pyarrow.compute`` expression, evaluated over the catalog's key
-    columns. An expression on a payload column, or a directory the
-    catalog cannot model, takes the pyarrow dataset path."""
+    ``pyarrow.compute`` expression over key columns, evaluated on the
+    catalog's key columns, with key columns projected. A filter on a
+    payload column, or an expression with one projected, raises
+    ValueError. A directory the catalog cannot model (one holding a
+    subdirectory) is read by a pyarrow dataset scan."""
     fields = [schema.field(c) for c in (columns if columns is not None else schema.names)]
     for attempt in range(3):
-        listing = _list_log(table_dir)
+        stamp, listing = _list_log(table_dir)
         if listing is None:
-            break
+            dataset = pa_ds.dataset(table_dir, format="parquet", schema=schema)
+            return dataset.to_table(filter=_as_expression(filter), columns=[f.name for f in fields])
         if not listing:
             return pa.schema(fields).empty_table()
         try:
-            out = _catalog_scan(table_dir, schema, listing, filter, fields)
+            return _catalog_scan(table_dir, schema, stamp, listing, filter, fields)
         except FileNotFoundError:  # listed, then removed by compaction: list again
             if attempt == 2:
                 raise
-            continue
-        if out is None:
-            break
-        return out
-    dataset = pa_ds.dataset(table_dir, format="parquet", schema=schema)
-    return dataset.to_table(filter=_as_expression(filter), columns=[f.name for f in fields])
 
 
-def _catalog_scan(table_dir, schema, listing, filter, fields) -> pa.Table | None:
-    """:func:`scan` served from the catalog; None when it needs the dataset path."""
+def _catalog_scan(table_dir, schema, stamp, listing, filter, fields) -> pa.Table:
+    """:func:`scan` served from the catalog."""
     key_names = set(schema.names).difference(_payload_columns(schema))
     keys_only = all(f.name in key_names for f in fields)
     key_filter = filter is not None and not isinstance(filter, pc.Expression)
     if key_filter:
         keys = {c: _as_set(v) for c, v in filter.items()}
         if not keys.keys() <= key_names:
-            return None
+            raise ValueError(f"scan filters on key columns only, not {sorted(keys.keys() - key_names)}")
     elif filter is not None and not keys_only:
-        return None  # an expression with a payload column projected
-    with _CATALOG.open(table_dir, schema, listing) as d:
+        raise ValueError("a scan with an expression filter projects key columns only")
+    with _CATALOG.open(table_dir, schema, stamp, listing) as d:
         if key_filter:
             picks = d.match(keys)
         elif keys_only:
@@ -433,8 +475,8 @@ def _catalog_scan(table_dir, schema, listing, filter, fields) -> pa.Table | None
     if not key_filter and keys_only:
         try:
             return (table if filter is None else table.filter(filter)).select([f.name for f in fields])
-        except pa.ArrowInvalid:  # the expression names a payload column
-            return None
+        except pa.ArrowInvalid as e:  # the expression names a payload column
+            raise ValueError(f"scan filters on key columns only: {filter}") from e
     pieces = [f.take(rows, fields) for f, rows in picks if len(rows)]
     if not pieces:
         return pa.schema(fields).empty_table()

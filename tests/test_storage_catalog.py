@@ -5,6 +5,7 @@ or missing directory reads as an empty table."""
 
 from __future__ import annotations
 
+import collections
 import multiprocessing
 import os
 
@@ -153,6 +154,104 @@ def test_file_removed_after_listing_is_listed_again(tmp_path, monkeypatch):
     assert got.column("data").to_pylist() == [b"new"]
 
 
+class _Listed(list):
+    """A materialized ``os.scandir`` result: the readdir already ran."""
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+
+def test_file_unlinked_between_readdir_and_stat_is_skipped(tmp_path, monkeypatch):
+    d = str(tmp_path)
+    rows = lambda data: [{"chunk_id": "k", "ref_delta": 1, "data": data}]  # noqa: E731
+    kept = storage.append_rows(d, storage.CHUNKS_SCHEMA, rows(b"kept"))
+    gone = storage.append_rows(d, storage.CHUNKS_SCHEMA, rows(b"gone"))
+    real = os.scandir
+
+    def scandir(path):
+        with real(path) as it:
+            entries = _Listed(it)
+        if os.path.exists(gone):
+            os.unlink(gone)  # as a compaction would, after the readdir and before the stat
+        return entries
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    got = storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": "k"}, columns=["data"])
+    assert got.column("data").to_pylist() == [b"kept"]
+    assert [n for n, _ in storage._list_log(d)[1]] == [os.path.basename(kept)]
+
+
+@pytest.fixture()
+def index_builds(monkeypatch):
+    """How often each ``(file, column)`` pair was put into a hash index."""
+    builds = collections.Counter()
+    real = storage._index_file
+
+    def counted(idx, f, col):
+        builds[(f.path, col)] += 1
+        real(idx, f, col)
+
+    monkeypatch.setattr(storage, "_index_file", counted)
+    return builds
+
+
+def test_older_listing_never_rolls_the_catalog_back(tmp_path, monkeypatch, index_builds):
+    d = str(tmp_path)
+    storage.append_rows(d, storage.CHUNKS_SCHEMA, [{"chunk_id": "a", "ref_delta": 1, "data": b"a"}])
+    older = storage._list_log(d)
+    storage.append_rows(d, storage.CHUNKS_SCHEMA, [{"chunk_id": "b", "ref_delta": 1, "data": b"b"}])
+    assert storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": "b"}).num_rows == 1
+    assert sorted(index_builds.values()) == [1, 1]
+
+    # a scan that listed before the append takes the lock after the catalog moved on
+    monkeypatch.setattr(storage, "_list_log", lambda path: older)
+    for cid in ("a", "b"):
+        got = storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": cid}, columns=["data"])
+        assert got.column("data").to_pylist() == [cid.encode()]
+    assert sorted(index_builds.values()) == [1, 1]
+
+
+def test_listing_that_missed_an_append_keeps_the_file(tmp_path, monkeypatch, index_builds):
+    d = str(tmp_path)
+    rows = lambda cid: [{"chunk_id": cid, "ref_delta": 1, "data": cid.encode()}]  # noqa: E731
+    storage.append_rows(d, storage.CHUNKS_SCHEMA, rows("a"))
+    without_b = storage._list_log(d)[1]
+    b = storage.append_rows(d, storage.CHUNKS_SCHEMA, rows("b"))
+    with_b = storage._list_log(d)[1]
+    # the later-stamped listing read the directory before b was published
+    stamp = next(storage._LISTINGS)
+    listings = iter([(stamp, with_b), (stamp + 1, without_b)])
+    real = storage._list_log
+    monkeypatch.setattr(storage, "_list_log", lambda path: next(listings, None) or real(path))
+
+    def read(cid):
+        got = storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": cid}, columns=["data"])
+        return got.column("data").to_pylist()
+
+    assert read("b") == [b"b"]
+    assert read("b") == [b"b"] and read("a") == [b"a"]
+    assert sorted(index_builds.values()) == [1, 1]
+    os.unlink(b)  # gone for real: the next listing drops it
+    assert read("b") == [] and read("a") == [b"a"]
+
+
+def test_forked_child_starts_with_an_empty_catalog(tmp_path):
+    d = str(tmp_path)
+    storage.append_rows(d, storage.CHUNKS_SCHEMA, [{"chunk_id": "a", "ref_delta": 1, "data": b"a"}])
+    storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": "a"})
+    assert d in storage._CATALOG._dirs
+    with storage._CATALOG._lock:  # as a parent thread mid-update would hold it
+        pid = os.fork()
+        if pid == 0:
+            fresh = not storage._CATALOG._dirs and storage._CATALOG._lock.acquire(blocking=False)
+            os._exit(0 if fresh else 1)
+    _, status = os.waitpid(pid, 0)
+    assert os.waitstatus_to_exitcode(status) == 0
+
+
 def test_empty_or_missing_directory_reads_empty(tmp_path):
     missing = str(tmp_path / "nope")
     empty = tmp_path / "empty"
@@ -186,14 +285,19 @@ def test_filter_forms_agree_with_dataset_scan(tmp_path):
             {"chunk_id": "c2", "ref_delta": [2, 7]},
             (pc.field("chunk_id") == "c2") & pc.field("ref_delta").isin([2, 7]),
         ),
-        (pc.field("ref_delta") >= 2, pc.field("ref_delta") >= 2),
-        (pc.field("data").is_valid(), pc.field("data").is_valid()),  # payload column: dataset path
         (None, None),
     ]
     for flt, expr in cases:
         for cols in (None, ["ref_delta", "chunk_id"], ["data"]):
             got = storage.scan(d, storage.CHUNKS_SCHEMA, filter=flt, columns=cols)
             assert got.to_pylist() == dataset(expr, cols).to_pylist()
+    expr, cols = pc.field("ref_delta") >= 2, ["ref_delta", "chunk_id"]
+    got = storage.scan(d, storage.CHUNKS_SCHEMA, filter=expr, columns=cols)
+    assert got.to_pylist() == dataset(expr, cols).to_pylist()
+    # payload bytes are not keys: no filter on them, no expression scan projecting them
+    for flt, cols in [(pc.field("data").is_valid(), ["chunk_id"]), ({"data": b"x"}, ["chunk_id"]), (expr, ["data"])]:
+        with pytest.raises(ValueError):
+            storage.scan(d, storage.CHUNKS_SCHEMA, filter=flt, columns=cols)
 
     # a subdirectory is beyond the catalog: the dataset scan reads it too
     sub = os.path.join(d, "nested")
@@ -206,10 +310,11 @@ def test_filter_forms_agree_with_dataset_scan(tmp_path):
     assert 100 in got.column("ref_delta").to_pylist()
 
 
-def test_concurrent_writers_and_readers_lose_no_update(conn):
+def test_concurrent_writers_and_readers_lose_no_update(conn, index_builds):
     """More threads than cores append and read back through one catalog
-    with a short switch interval: every thread reads its own writes, and
-    the final listing holds every row exactly once."""
+    with a short switch interval: every thread reads its own writes, the
+    final listing holds every row exactly once, and no file is indexed
+    twice (an older listing never resets the indexes)."""
     import sys
     import threading
 
@@ -241,3 +346,4 @@ def test_concurrent_writers_and_readers_lose_no_update(conn):
     assert errors == []
     ids = storage.scan(conn._dirs["chunks"], storage.CHUNKS_SCHEMA, columns=["chunk_id"]).column("chunk_id")
     assert sorted(ids.to_pylist()) == sorted(f"t{t}-{i}" for t in range(n_threads) for i in range(n_writes))
+    assert index_builds and max(index_builds.values()) == 1
