@@ -3,7 +3,8 @@
 Re-expresses ``proto/ChunkStore`` of the reference
 (src/io/mandoline/backend/hbase.clj:122-172):
 
-- ``read_chunk(hash) -> bytes``      (hbase.clj:124-133; raises if absent)
+- ``read_chunk(hash) -> bytes``      (hbase.clj:124-133; raises if absent);
+  ``read_chunks(hashes)`` fetches many with one scan
 - ``chunk_refs(hash) -> int``        (hbase.clj:135-136, 105-120)
 - ``write_chunk(hash, ref, data)``   (hbase.clj:138-154; idempotent blind
   put — content addressing makes last-write-wins safe)
@@ -15,6 +16,8 @@ Re-expresses ``proto/ChunkStore`` of the reference
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import pyarrow.compute as pc
 
@@ -40,15 +43,32 @@ class ChunkStore:
 
     def read_chunk(self, hash_: str) -> bytes:
         """Point get of the chunk payload; raises ChunkNotFoundError if absent."""
-        _validate_hash(hash_)
+        return self.read_chunks([hash_])[hash_]
+
+    def read_chunks(self, hashes: Iterable[str]) -> dict[str, bytes]:
+        """Payloads of ``hashes`` with one key-filter scan: ``{hash: bytes}``,
+        one entry per distinct id. Raises ChunkNotFoundError naming an
+        absent id; an empty ``hashes`` reads nothing."""
+        wanted = set()
+        for h in hashes:
+            _validate_hash(h)
+            wanted.add(h)
+        if not wanted:
+            return {}
         # Ref-delta rows come back as nulls; their row groups are not read.
-        data = storage.scan(
-            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": hash_}, columns=["data"]
-        ).column("data").drop_null()
-        if len(data) == 0:
-            raise ChunkNotFoundError(f"no chunk was found for hash {hash_}")
-        # Content-addressed: every data row for this id holds identical bytes.
-        return data[0].as_py()
+        t = storage.scan(
+            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": list(wanted)}, columns=["chunk_id", "data"]
+        )
+        data = t.column("data")
+        out: dict[str, bytes] = {}
+        for i, h in enumerate(t.column("chunk_id").to_pylist()):
+            # Content-addressed: every data row for an id holds identical bytes.
+            if h not in out and data[i].is_valid:
+                out[h] = data[i].as_py()
+        missing = wanted.difference(out)
+        if missing:
+            raise ChunkNotFoundError(f"no chunk was found for hash {min(missing)}")
+        return out
 
     def chunk_refs(self, hash_: str) -> int:
         """Ref-count = SUM(ref_delta); raises ChunkRefNotFoundError if the id is unknown."""

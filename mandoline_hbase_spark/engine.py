@@ -23,6 +23,7 @@ per-chunk RPCs — the key architectural win at scale (SURVEY.md §3.3).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -30,7 +31,6 @@ import time
 from typing import Any, Optional
 
 import numpy as np
-import pyarrow.compute as pc
 
 from mandoline_hbase_spark import codec, storage
 from mandoline_hbase_spark.chunkstore import ChunkStore
@@ -121,14 +121,20 @@ def root_table_prefix(root: str, db_version: str | None = None) -> str:
 class Connection:
     """One dataset's handle (``HBaseConnection``, hbase.clj:254-297).
 
-    ``cache_versions=True`` memoizes the version-table scan on this
-    connection — the analog of the caching store layer the reference's
-    suite runs every scenario with and without
-    (``hbase_test.clj:107`` ``with-and-without-caches``). The cache is
-    invalidated by THIS connection's commits; a commit from another
-    connection or process is invisible to a warm cache (same trade as
-    the reference's), which is why it is opt-in: enable it on
-    read-mostly handles, not on handles racing other writers.
+    Every read and every commit takes ONE snapshot of the versions log
+    (one scan, ``storage.VersionSnapshot``) and resolves the latest id,
+    the metadata at or before its bound and the committed ids it may see
+    from it. ``versions``, ``metadata``, ``metadata_at_or_before`` and
+    ``latest_version_id`` are views over a fresh snapshot.
+
+    ``cache_versions=True`` memoizes the snapshot on this connection —
+    the analog of the caching store layer the reference's suite runs
+    every scenario with and without (``hbase_test.clj:107``
+    ``with-and-without-caches``). The memo is dropped by THIS
+    connection's commits; a commit from another connection or process
+    is invisible to a warm cache (same trade as the reference's), which
+    is why it is opt-in: enable it on read-mostly handles, not on
+    handles racing other writers.
     """
 
     def __init__(
@@ -143,21 +149,16 @@ class Connection:
         self.spark = spark
         self._dirs = {t: os.path.join(dataset_dir, t) for t in storage.TABLE_NAMES}
         self._cache_versions = bool(cache_versions)
-        self._version_cache: list[dict] | None = None
+        self._version_cache: storage.VersionSnapshot | None = None
 
-    def _version_rows(self) -> list[dict]:
-        """Newest-first full version rows, memoized when caching is on."""
-        if self._cache_versions and self._version_cache is not None:
-            return self._version_cache
-        t = storage.scan(
-            self._dirs["versions"],
-            storage.VERSIONS_SCHEMA,
-            columns=["version_id", "committed_at", "metadata"],
-        )
-        rows = sorted(t.to_pylist(), key=lambda r: r["version_id"], reverse=True)
-        if self._cache_versions:
-            self._version_cache = rows
-        return rows
+    def _snapshot(self) -> storage.VersionSnapshot:
+        """One scan of the versions log, memoized when caching is on."""
+        snap = self._version_cache
+        if snap is None:
+            snap = storage.read_versions(self._dirs["versions"])
+            if self._cache_versions:
+                self._version_cache = snap
+        return snap
 
     # -- protocol surface --------------------------------------------------
 
@@ -167,15 +168,13 @@ class Connection:
     def index(self, var_name: str, metadata: dict | None = None, options: dict | None = None) -> Index:
         """Index handle bound to a version (hbase.clj:257-261).
 
-        The bound version defaults to the metadata's ``version-id``; the
-        memoized version cache of the reference is the driver-side
-        ``_version_cache`` list, invalidated on commit.
+        The bound version defaults to the metadata's ``version-id``, else
+        the latest committed version.
         """
         metadata = metadata or {}
         version_id = metadata.get("version-id")
         if version_id is None:
-            versions = self.versions()
-            version_id = int(versions[0]["version"]) if versions else None
+            version_id = self.latest_version_id()
         return Index(self.dataset_dir, self._dirs["indices"], var_name, metadata, version_id)
 
     def write_version(self, metadata: dict) -> int:
@@ -239,42 +238,33 @@ class Connection:
     def versions(self, limit: int | None = None, metadata: bool = False) -> list[dict]:
         """Newest-first version listing (hbase.clj:283-297).
 
-        The reference relies on HBase key order + ``reverse``; here an
-        explicit sort. Column projection mirrors the ``metadata?`` flag.
+        The reference relies on HBase key order + ``reverse``; here the
+        snapshot's ascending ids, reversed. The ``metadata?`` flag adds
+        each version's parsed metadata.
         """
-        if self._cache_versions:
-            rows = self._version_rows()
-        else:
-            # uncached: project only the requested columns at the scan
-            cols = ["version_id", "committed_at"] + (["metadata"] if metadata else [])
-            t = storage.scan(self._dirs["versions"], storage.VERSIONS_SCHEMA, columns=cols)
-            rows = sorted(t.to_pylist(), key=lambda r: r["version_id"], reverse=True)
-        if limit is not None:
-            rows = rows[:limit]
+        t = self._snapshot().table
+        rows = zip(
+            t.column("version_id").to_pylist()[::-1],
+            t.column("committed_at").to_pylist()[::-1],
+            t.column("metadata").to_pylist()[::-1] if metadata else itertools.repeat(None),
+        )
         out = []
-        for r in rows:
-            entry = {"timestamp": r["committed_at"], "version": str(r["version_id"])}
+        for version_id, committed_at, meta in itertools.islice(rows, limit):
+            entry = {"timestamp": committed_at, "version": str(version_id)}
             if metadata:
-                entry["metadata"] = json.loads(r["metadata"])
+                entry["metadata"] = json.loads(meta)
             out.append(entry)
         return out
 
     def metadata(self, version: int | str) -> dict:
         """Point get + parse of one version's metadata (hbase.clj:278-281)."""
-        if self._cache_versions:
-            for r in self._version_rows():
-                if r["version_id"] == int(version):
-                    return json.loads(r["metadata"])
-            raise VersionNotFoundError(f"no version {version} in {self.dataset_name}")
-        t = storage.scan(
-            self._dirs["versions"],
-            storage.VERSIONS_SCHEMA,
-            filter={"version_id": int(version)},
-            columns=["metadata"],
-        )
-        if t.num_rows == 0:
-            raise VersionNotFoundError(f"no version {version} in {self.dataset_name}")
-        return json.loads(t.column("metadata")[0].as_py())
+        return self._metadata_of(self._snapshot(), int(version))
+
+    def _metadata_of(self, snap: storage.VersionSnapshot, version_id: int) -> dict:
+        meta = snap.metadata_json(version_id)
+        if meta is None:
+            raise VersionNotFoundError(f"no version {version_id} in {self.dataset_name}")
+        return json.loads(meta)
 
     def get_stats(self) -> dict:
         """Table sizes, used as a liveness probe (hbase.clj:273-276)."""
@@ -329,28 +319,26 @@ class Connection:
 
     # -- version helpers ---------------------------------------------------
 
-    def next_version_id(self) -> int:
+    def next_version_id(self, snap: storage.VersionSnapshot | None = None) -> int:
         """Strictly monotonic id; ids are epoch millis like the reference.
 
         Accounts for reserved-but-uncommitted ids (in-flight distributed
         commits, see ``_reserve_version``) so a driver-side writer inside
         the commit lock can never allocate an id a distributed job has
-        already baked into executor-written rows.
+        already baked into executor-written rows. ``snap`` is the caller's
+        snapshot of the versions log (a fresh one when None); the
+        reservation claim, not this candidate, decides who owns an id.
         """
-        versions = self.versions(limit=1)
-        last = int(versions[0]["version"]) if versions else 0
-        reserved = storage.reserved_version_ids(self._dirs["versions"])
-        if reserved:
-            last = max(last, max(reserved))
+        latest = (snap if snap is not None else self._snapshot()).latest
+        last = max([latest or 0, *storage.reserved_version_ids(self._dirs["versions"])])
         return max(last + 1, int(time.time() * 1000))
 
-    def _reserve_version(self) -> int:
+    def _reserve_version(self, snap: storage.VersionSnapshot | None = None) -> int:
         """Claim a version id for a distributed (executor-side) commit."""
-        return storage.reserve_version_id(self._dirs["versions"], self.next_version_id())
+        return storage.reserve_version_id(self._dirs["versions"], self.next_version_id(snap))
 
     def latest_version_id(self) -> int | None:
-        versions = self.versions(limit=1)
-        return int(versions[0]["version"]) if versions else None
+        return self._snapshot().latest
 
     # -- array layer (mandoline-core equivalent) ---------------------------
 
@@ -381,51 +369,57 @@ class Connection:
         version_id: int | None,
     ) -> int:
         with storage.dataset_lock(self.dataset_dir):
-            return self._commit_locked(var_name, new_var_meta, entries, blobs, refs, version_id)
+            return self._commit_locked([(var_name, new_var_meta, entries)], blobs, refs, version_id)
 
     def _commit_locked(
         self,
-        var_name: str,
-        new_var_meta: dict,
-        entries: list[tuple[tuple[int, ...], str]],
+        staged: list[tuple[str, dict, list[tuple[tuple[int, ...], str]]]],
         blobs: dict[str, bytes],
         refs: dict[str, int],
         version_id: int | None,
+        snap: storage.VersionSnapshot | None = None,
     ) -> int:
         """Commit protocol per SURVEY.md §3.2: chunks -> index -> version row.
 
-        The version-row append is the visibility point; a failure mid-commit
+        ``staged`` holds one ``(var_name, var_meta, entries)`` per variable;
+        their index rows are all tagged with one version id and a single
+        version-row append makes all of them visible at once. The
+        version-row append is the visibility point; a failure mid-commit
         leaves only invisible garbage (the reference's failed-write
         contract). Callers hold the dataset lock, which makes local
         concurrent commits serializable — the stand-in for a transactional
-        table format's optimistic commit on a cluster.
+        table format's optimistic commit on a cluster. ``snap`` is the
+        versions snapshot the caller read its base state from under this
+        lock hold (a fresh one when None): the new metadata merges onto
+        its latest version.
         """
-        base_meta = {}
-        latest = self.latest_version_id()
-        if latest is not None:
-            base_meta = self.metadata(latest)
+        snap = snap if snap is not None else self._snapshot()
+        latest = snap.latest
+        base_meta = {} if latest is None else self._metadata_of(snap, latest)
         reserved_here = version_id is None
         if reserved_here:
             # claim the id before index rows are tagged with it, so the
             # conditional version-row commit below can never conflict
-            version_id = self._reserve_version()
+            version_id = self._reserve_version(snap)
+        version_id = int(version_id)
         variables = dict(base_meta.get("variables", {}))
-        variables[var_name] = new_var_meta
-        new_meta = {**base_meta, "version-id": int(version_id), "variables": variables}
+        for var_name, var_meta, _ in staged:
+            variables[var_name] = var_meta
+        new_meta = {**base_meta, "version-id": version_id, "variables": variables}
 
-        store = self.chunk_store()
         # union: payload rows (blobs) plus ref-only grants for chunks whose
         # payload was already appended by executors (write_variable_from_df)
         all_hashes = set(blobs) | set(refs)
-        store.write_chunks_bulk([(h, refs.get(h, 0), blobs.get(h)) for h in all_hashes])
-        idx = Index(self.dataset_dir, self._dirs["indices"], var_name, new_meta, int(version_id))
-        idx.write_index_bulk(entries, int(version_id))
+        self.chunk_store().write_chunks_bulk([(h, refs.get(h, 0), blobs.get(h)) for h in all_hashes])
+        for var_name, _, entries in staged:
+            idx = Index(self.dataset_dir, self._dirs["indices"], var_name, new_meta, version_id)
+            idx.write_index_bulk(entries, version_id)
         try:
             committed = self.write_version(new_meta)
         finally:
             if reserved_here:
-                storage.release_version_reservation(self._dirs["versions"], int(version_id))
-        if latest is not None and latest > int(version_id):
+                storage.release_version_reservation(self._dirs["versions"], version_id)
+        if latest is not None and latest > version_id:
             # A distributed write reserves its id at job start; a faster
             # writer may commit a LATER id first. Like the reference (the
             # version id is the write's start timestamp, hbase.clj:266),
@@ -460,7 +454,10 @@ class Connection:
             raise InvalidArgumentError("write_variables needs at least one variable")
         chunk_shapes = chunk_shapes or {}
         fills = fills or {}
-        staged: list[tuple[str, dict, list, dict, dict]] = []
+        staged: list[tuple[str, dict, list]] = []
+        # chunks are one union across variables: cross-variable dedup
+        all_blobs: dict[str, bytes] = {}
+        all_refs: dict[str, int] = {}
         stats_rows: list[dict] = []
         for var_name, array in arrays.items():
             array = np.asarray(array)
@@ -475,58 +472,22 @@ class Connection:
                 chunk_shape = tuple(min(s, 64) for s in array.shape)
             chunk_shape = tuple(chunk_shape)
             entries: list[tuple[tuple[int, ...], str]] = []
-            blobs: dict[str, bytes] = {}
-            refs: dict[str, int] = {}
+            seen: set[str] = set()
             for coord in codec.iter_chunk_coords(array.shape, chunk_shape):
                 block = codec.extract_block(array, coord, chunk_shape, fill)
                 data = codec.encode_chunk(block)
                 h = codec.chunk_id_of(data)
-                if h not in blobs:
+                if h not in seen:
+                    seen.add(h)
                     stats_rows.extend(_array_chunk_stats(h, block))
-                blobs.setdefault(h, data)
-                refs[h] = refs.get(h, 0) + 1
+                all_blobs.setdefault(h, data)
+                all_refs[h] = all_refs.get(h, 0) + 1
                 entries.append((coord, h))
-            staged.append(
-                (var_name, self._var_meta(dtype, array.shape, chunk_shape, fill), entries, blobs, refs)
-            )
+            staged.append((var_name, self._var_meta(dtype, array.shape, chunk_shape, fill), entries))
         _write_array_stats(self.dataset_dir, stats_rows)
 
         with storage.dataset_lock(self.dataset_dir):
-            base_meta = {}
-            latest = self.latest_version_id()
-            if latest is not None:
-                base_meta = self.metadata(latest)
-            version_id = self._reserve_version()
-            variables = dict(base_meta.get("variables", {}))
-            for var_name, var_meta, _, _, _ in staged:
-                variables[var_name] = var_meta
-            new_meta = {**base_meta, "version-id": int(version_id), "variables": variables}
-
-            # chunks first (union across variables: cross-variable dedup),
-            # then every variable's index rows, then ONE version row
-            all_blobs: dict[str, bytes] = {}
-            all_refs: dict[str, int] = {}
-            for _, _, _, blobs, refs in staged:
-                for h, b in blobs.items():
-                    all_blobs.setdefault(h, b)
-                for h, r in refs.items():
-                    all_refs[h] = all_refs.get(h, 0) + r
-            self.chunk_store().write_chunks_bulk(
-                [(h, all_refs.get(h, 0), all_blobs.get(h)) for h in set(all_blobs) | set(all_refs)]
-            )
-            for var_name, _, entries, _, _ in staged:
-                idx = Index(
-                    self.dataset_dir, self._dirs["indices"], var_name, new_meta, int(version_id)
-                )
-                idx.write_index_bulk(entries, int(version_id))
-            try:
-                committed = self.write_version(new_meta)  # the one visibility point
-            finally:
-                storage.release_version_reservation(self._dirs["versions"], int(version_id))
-            if latest is not None and latest > int(version_id):
-                repair = {k: v for k, v in new_meta.items() if k != "version-id"}
-                self.write_version(repair)
-            return committed
+            return self._commit_locked(staged, all_blobs, all_refs, None)
 
     def create_variable(
         self,
@@ -568,9 +529,9 @@ class Connection:
             fill = codec.default_fill(dtype)
         if chunk_shape is None:
             prior = None
-            latest = self.latest_version_id()
-            if latest is not None:
-                prior = self.metadata(latest).get("variables", {}).get(var_name)
+            snap = self._snapshot()
+            if snap.latest is not None:
+                prior = self._metadata_of(snap, snap.latest).get("variables", {}).get(var_name)
             if prior is not None and len(prior["chunk_shape"]) == array.ndim:
                 chunk_shape = tuple(prior["chunk_shape"])
             else:
@@ -761,11 +722,12 @@ class Connection:
         # Base-state read happens under the dataset lock so concurrent
         # overlapping slab writers serialize (read-your-predecessor), the
         # guarantee the reference gets from per-key CAS + caller retry.
-        latest = self.latest_version_id()
+        # The commit below merges onto the same snapshot.
+        snap = self._snapshot()
+        latest = snap.latest
         if latest is None:
             raise VersionNotFoundError(f"dataset {self.dataset_name} has no versions")
-        meta = self.metadata(latest)
-        var_meta = meta.get("variables", {}).get(var_name)
+        var_meta = self._metadata_of(snap, latest).get("variables", {}).get(var_name)
         if var_meta is None:
             raise KeyError(f"variable {var_name} is not defined; create_variable first")
         dtype = var_meta["dtype"]
@@ -784,25 +746,12 @@ class Connection:
         region_lo = offset
         region_hi = tuple(o + d for o, d in zip(offset, subarray.shape))
 
-        # chunk coords intersecting the region
+        # chunk coords intersecting the region, each with its overlap in
+        # the chunk's frame and in the subarray's
         lo_chunk = tuple(lo // cs for lo, cs in zip(region_lo, chunk_shape))
         hi_chunk = tuple((hi - 1) // cs for hi, cs in zip(region_hi, chunk_shape))
-        coords = list(_iter_box(lo_chunk, hi_chunk))
-        base_map = self.resolve_chunk_map(
-            var_name, latest, coord_ids=[codec.coordinate_to_id(c) for c in coords]
-        )
-        store = self.chunk_store()
-
-        entries: list[tuple[tuple[int, ...], str]] = []
-        blobs: dict[str, bytes] = {}
-        refs: dict[str, int] = {}
-        for coord in coords:
-            base_hash = base_map.get(codec.coordinate_to_id(coord))
-            if base_hash is not None:
-                block = codec.decode_chunk(store.read_chunk(base_hash), dtype, chunk_shape).copy()
-            else:
-                block = np.full(chunk_shape, fill, dtype=np.dtype(dtype))
-            # overlay the intersection of this chunk with the region
+        overlaps = []
+        for coord in _iter_box(lo_chunk, hi_chunk):
             c_lo = tuple(c * cs for c, cs in zip(coord, chunk_shape))
             sl_block, sl_sub = [], []
             for d in range(len(chunk_shape)):
@@ -810,7 +759,30 @@ class Connection:
                 hi = min(region_hi[d], c_lo[d] + chunk_shape[d])
                 sl_block.append(slice(lo - c_lo[d], hi - c_lo[d]))
                 sl_sub.append(slice(lo - region_lo[d], hi - region_lo[d]))
-            block[tuple(sl_block)] = subarray[tuple(sl_sub)]
+            overlaps.append((coord, tuple(sl_block), tuple(sl_sub)))
+        # a chunk the region covers whole needs no base content
+        partial = [
+            codec.coordinate_to_id(coord)
+            for coord, sl_block, _ in overlaps
+            if any(sl.stop - sl.start < cs for sl, cs in zip(sl_block, chunk_shape))
+        ]
+        base_map = (
+            self.resolve_chunk_map(var_name, latest, partial, snap.committed_le(latest))
+            if partial
+            else {}
+        )
+        base = self.chunk_store().read_chunks(base_map.values())
+
+        entries: list[tuple[tuple[int, ...], str]] = []
+        blobs: dict[str, bytes] = {}
+        refs: dict[str, int] = {}
+        for coord, sl_block, sl_sub in overlaps:
+            base_hash = base_map.get(codec.coordinate_to_id(coord))
+            if base_hash is not None:
+                block = codec.decode_chunk(base[base_hash], dtype, chunk_shape).copy()
+            else:
+                block = np.full(chunk_shape, fill, dtype=np.dtype(dtype))
+            block[sl_block] = subarray[sl_sub]
             data = codec.encode_chunk(block)
             h = codec.chunk_id_of(data)
             blobs.setdefault(h, data)
@@ -818,19 +790,21 @@ class Connection:
             entries.append((coord, h))
 
         return self._commit_locked(
-            var_name,
-            self._var_meta(dtype, new_shape, chunk_shape, fill),
-            entries,
+            [(var_name, self._var_meta(dtype, new_shape, chunk_shape, fill), entries)],
             blobs,
             refs,
             version_id,
+            snap,
         )
 
-    def _resolve_read(self, var_name: str, version: int | None):
-        bound = int(version) if version is not None else self.latest_version_id()
+    def _resolve_read(self, var_name: str, version: int | None, snap: storage.VersionSnapshot | None = None):
+        """``(bound, metadata, var_meta)`` of a read at ``version`` (latest
+        if None), from ``snap`` (a fresh snapshot when None)."""
+        snap = snap if snap is not None else self._snapshot()
+        bound = int(version) if version is not None else snap.latest
         if bound is None:
             raise VersionNotFoundError(f"dataset {self.dataset_name} has no versions")
-        meta = self.metadata_at_or_before(bound)
+        meta = self._metadata_at_or_before(snap, bound)
         var_meta = meta.get("variables", {}).get(var_name)
         if var_meta is None:
             raise KeyError(f"variable {var_name} not defined at version {bound}")
@@ -838,31 +812,26 @@ class Connection:
 
     def metadata_at_or_before(self, bound: int) -> dict:
         """Latest committed metadata with version_id <= bound (snapshot read)."""
-        t = storage.scan(
-            self._dirs["versions"],
-            storage.VERSIONS_SCHEMA,
-            filter=pc.field("version_id") <= int(bound),
-            columns=["version_id", "metadata"],
-        )
-        if t.num_rows == 0:
+        return self._metadata_at_or_before(self._snapshot(), bound)
+
+    def _metadata_at_or_before(self, snap: storage.VersionSnapshot, bound: int) -> dict:
+        version_id = snap.at_or_before(bound)
+        if version_id is None:
             raise VersionNotFoundError(f"no version <= {bound} in {self.dataset_name}")
-        rows = t.to_pylist()
-        best = max(rows, key=lambda r: r["version_id"])
-        return json.loads(best["metadata"])
+        return self._metadata_of(snap, version_id)
 
     def _committed_versions_le(self, bound: int) -> list[int]:
-        """Committed version ids <= bound — the visibility set for reads.
-
-        A crashed commit leaves chunk/index rows with a version id that
-        never reached the versions table (§3.2: the version append is
-        the commit point); restricting index resolution to this set is
-        what makes that garbage invisible (the contract of the
-        reference's disabled failed-write test, hbase_test.clj:144-146).
-        """
-        return [int(v["version"]) for v in self.versions() if int(v["version"]) <= int(bound)]
+        """Committed version ids <= bound — the visibility set for reads
+        (``storage.VersionSnapshot.committed_le``; the contract of the
+        reference's disabled failed-write test, hbase_test.clj:144-146)."""
+        return self._snapshot().committed_le(bound)
 
     def resolve_chunk_map(
-        self, var_name: str, bound: int, coord_ids: Optional[list[str]] = None
+        self,
+        var_name: str,
+        bound: int,
+        coord_ids: Optional[list[str]] = None,
+        committed: Optional[list[int]] = None,
     ) -> dict[str, str]:
         """Bulk find-index: {coord_id -> chunk_id} at snapshot ``bound``.
 
@@ -872,10 +841,14 @@ class Connection:
         narrows the scan to a coordinate subset — the analog of the
         reference's bounded start/stop-row scan (hbase.clj:191-192),
         served from the storage catalog's hash index on ``coord_id``.
-        Only entries of COMMITTED versions participate (see
-        _committed_versions_le).
+        Only entries of COMMITTED versions participate: ``committed``
+        is the caller's visibility set, the committed ids <= ``bound``
+        of its snapshot (``VersionSnapshot.committed_le``); when None it
+        comes from a fresh snapshot.
         """
-        flt = {"var_name": var_name, "version_id": self._committed_versions_le(bound)}
+        if committed is None:
+            committed = self._committed_versions_le(bound)
+        flt = {"var_name": var_name, "version_id": committed}
         if coord_ids is not None:
             flt["coord_id"] = coord_ids
         t = storage.scan(
@@ -898,7 +871,8 @@ class Connection:
 
     def read_variable(self, var_name: str, version: int | None = None) -> np.ndarray:
         """Assemble the variable at a snapshot version (latest if None)."""
-        bound, meta, var_meta = self._resolve_read(var_name, version)
+        snap = self._snapshot()
+        bound, meta, var_meta = self._resolve_read(var_name, version, snap)
         dtype = var_meta["dtype"]
         shape = tuple(var_meta["shape"])
         chunk_shape = tuple(var_meta["chunk_shape"])
@@ -906,24 +880,22 @@ class Connection:
         if fill is None:
             fill = codec.default_fill(dtype)
 
-        chunk_map = self.resolve_chunk_map(var_name, bound)
+        chunk_map = self.resolve_chunk_map(var_name, bound, committed=snap.committed_le(bound))
+        blobs = self.chunk_store().read_chunks(chunk_map.values())
         if len(shape) == 0:
             h = chunk_map.get("_")
             if h is None:
                 return np.array(fill, dtype=dtype).reshape(())
-            data = self.chunk_store().read_chunk(h)
-            return codec.decode_chunk(data, dtype, ()).reshape(())
+            return codec.decode_chunk(blobs[h], dtype, ()).reshape(())
 
         grid = codec.grid_shape(shape, chunk_shape)
         padded_shape = tuple(g * c for g, c in zip(grid, chunk_shape))
         out = np.full(padded_shape, fill, dtype=dtype)
-        store = self.chunk_store()
         for coord in codec.iter_chunk_coords(shape, chunk_shape):
-            cid = codec.coordinate_to_id(coord)
-            h = chunk_map.get(cid)
+            h = chunk_map.get(codec.coordinate_to_id(coord))
             if h is None:
                 continue
-            block = codec.decode_chunk(store.read_chunk(h), dtype, chunk_shape)
+            block = codec.decode_chunk(blobs[h], dtype, chunk_shape)
             out[tuple(slice(c * cs, (c + 1) * cs) for c, cs in zip(coord, chunk_shape))] = block
         return out[tuple(slice(0, s) for s in shape)]
 
@@ -938,13 +910,14 @@ class Connection:
 
         The read-side mirror of writing slabs: only the chunk coordinates
         overlapping the region are resolved (coord-pruned index scan, see
-        ``resolve_chunk_map``) and fetched. A 1-chunk read of a
-        million-chunk variable does O(1) chunk IO, matching the
-        reference's bounded scan + point get (hbase.clj:184-198, 97-103).
+        ``resolve_chunk_map``) and fetched, all with one chunk scan. A
+        1-chunk read of a million-chunk variable does O(1) chunk IO,
+        matching the reference's bounded scan + point get
+        (hbase.clj:184-198, 97-103); the read lists each of the
+        ``versions``, ``indices`` and ``chunks`` logs once.
         """
-        import itertools
-
-        bound, meta, var_meta = self._resolve_read(var_name, version)
+        snap = self._snapshot()
+        bound, meta, var_meta = self._resolve_read(var_name, version, snap)
         dtype = var_meta["dtype"]
         shape = tuple(var_meta["shape"])
         chunk_shape = tuple(var_meta["chunk_shape"])
@@ -970,17 +943,17 @@ class Connection:
         ]
         coords = [tuple(c) for c in itertools.product(*chunk_ranges)]
         chunk_map = self.resolve_chunk_map(
-            var_name, bound, coord_ids=[codec.coordinate_to_id(c) for c in coords]
+            var_name, bound, [codec.coordinate_to_id(c) for c in coords], snap.committed_le(bound)
         )
+        blobs = self.chunk_store().read_chunks(chunk_map.values())
 
         out_shape = tuple(stop - start for start, stop in region)
         out = np.full(out_shape, fill, dtype=dtype)
-        store = self.chunk_store()
         for coord in coords:
             h = chunk_map.get(codec.coordinate_to_id(coord))
             if h is None:
                 continue
-            block = codec.decode_chunk(store.read_chunk(h), dtype, chunk_shape)
+            block = codec.decode_chunk(blobs[h], dtype, chunk_shape)
             # overlap of this chunk with the region, in both frames
             src, dst = [], []
             for (start, stop), c, cs in zip(region, coord, chunk_shape):
@@ -1060,8 +1033,6 @@ class Connection:
         mirror of ``read_region``'s bounded scan) and the decode emits
         only cells inside the slab.
         """
-        import itertools
-
         from pyspark.sql import functions as F
 
         spark = spark or self.spark

@@ -13,12 +13,14 @@ one real query in the repo, ``find-index`` (hbase.clj:184-198):
   locally a lock file, at cluster scale a transactional table commit.
 - ``flush_index()``              — explicit no-op (hbase.clj:250-251).
 
-The version cache (memoized version list, hbase.clj:257-261) is a plain
-driver-side cached list here, invalidated by ``Connection.write_version``.
+The version cache (memoized version list, hbase.clj:257-261) is the
+``Connection``'s memoized versions snapshot, dropped by
+``Connection.write_version``.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Optional
 
 import pyarrow.compute as pc
@@ -69,24 +71,15 @@ class Index:
         return t.column("chunk_id")[i].as_py()
 
     def _committed_le(self, bound: int) -> list[int]:
-        """Committed version ids <= bound — the visibility set.
-
-        Same rule as Connection._committed_versions_le: index rows whose
-        version never reached the versions table (a crashed commit, §3.2)
-        are invisible to every latest-<=-bound read. The exact-key paths
-        (current_value / 2-arity chunk_at) stay unfiltered — the CAS
-        write protocol must see its own in-flight version.
+        """Committed version ids <= bound — the visibility set, by the
+        same rule as every Connection read (``storage.VersionSnapshot``):
+        index rows whose version never reached the versions table (a
+        crashed commit, §3.2) are invisible to every latest-<=-bound
+        read. The exact-key paths (current_value / 2-arity chunk_at) stay
+        unfiltered — the CAS write protocol must see its own in-flight
+        version.
         """
-        import os
-
-        vdir = os.path.join(self._dataset_dir, "versions")
-        t = storage.scan(
-            vdir,
-            storage.VERSIONS_SCHEMA,
-            filter=pc.field("version_id") <= int(bound),
-            columns=["version_id"],
-        )
-        return t.column("version_id").to_pylist()
+        return storage.read_versions(os.path.join(self._dataset_dir, "versions")).committed_le(bound)
 
     def find_index(self, coord, bound_version: int) -> Optional[str]:
         """latest-<=-bound resolution (``find-index``, hbase.clj:184-198).

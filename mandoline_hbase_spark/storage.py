@@ -27,7 +27,14 @@ row locations: ``chunk_id``, ``ref_delta`` and payload presence for
 payload bytes; a scan that projects ``data`` reads only the row groups
 that hold the wanted keys. :func:`append_rows` writes ``chunks`` files
 with one row per row group (the 64 kB block analog), and compaction
-rewrites them the same way. Its invariants:
+rewrites them the same way. A region read lists each log once: one
+unfiltered scan of ``versions`` (:func:`read_versions`, a
+:class:`VersionSnapshot` that gives the latest id, the metadata at or
+before the bound and the committed ids the read may see), one key-filter
+scan of ``indices`` for the region's coordinates, and one key-filter
+scan of ``chunks`` for all of their payloads. A slab commit reuses its
+snapshot for the version id it claims and the metadata it merges onto.
+The catalog's invariants:
 
 - log files are immutable and uniquely named: nothing rewrites one in
   place, and :func:`append_rows` publishes each file by rename, so a
@@ -909,6 +916,47 @@ def release_version_reservation(versions_dir: str, version_id: int) -> None:
     cas_backend_for(versions_dir).delete(
         os.path.join(versions_dir, f".reserved-{int(version_id)}")
     )
+
+
+class VersionSnapshot:
+    """The versions log as one scan saw it, ids ascending. A read or a
+    commit resolves everything it needs about versions against one
+    snapshot: the latest id, the metadata at or before a bound, and the
+    visibility set."""
+
+    def __init__(self, table: pa.Table):
+        self.table = table.take(pc.sort_indices(table, [("version_id", "ascending")]))
+        self.ids: list[int] = self.table.column("version_id").to_pylist()
+
+    @property
+    def latest(self) -> int | None:
+        return self.ids[-1] if self.ids else None
+
+    def committed_le(self, bound: int) -> list[int]:
+        """Committed version ids <= bound — the visibility set for reads.
+
+        A crashed commit leaves chunk/index rows with a version id that
+        never reached the versions table (§3.2 of SURVEY.md: the version
+        append is the commit point); restricting index resolution to this
+        set is what makes that garbage invisible."""
+        return self.ids[: bisect.bisect_right(self.ids, int(bound))]
+
+    def at_or_before(self, bound: int) -> int | None:
+        """The newest committed id <= bound, or None."""
+        i = bisect.bisect_right(self.ids, int(bound))
+        return self.ids[i - 1] if i else None
+
+    def metadata_json(self, version_id: int) -> str | None:
+        """The metadata JSON committed at exactly ``version_id``, or None."""
+        i = bisect.bisect_left(self.ids, int(version_id))
+        if i == len(self.ids) or self.ids[i] != int(version_id):
+            return None
+        return self.table.column("metadata")[i].as_py()
+
+
+def read_versions(versions_dir: str) -> VersionSnapshot:
+    """One scan of the versions log."""
+    return VersionSnapshot(scan(versions_dir, VERSIONS_SCHEMA))
 
 
 def reserved_version_ids(versions_dir: str) -> list[int]:

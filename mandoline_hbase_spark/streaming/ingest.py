@@ -301,9 +301,9 @@ def read_ingested_events(connection, spark: SparkSession, version: int | None = 
     if bound is None:
         return spark.createDataFrame([], EVENTS_SCHEMA)
     chunk_map = connection.resolve_chunk_map("events", bound)
-    cs = connection.chunk_store()
+    blobs = connection.chunk_store().read_chunks(chunk_map.values())
     frames = [
-        pd.read_parquet(io.BytesIO(cs.read_chunk(chunk_id)))
+        pd.read_parquet(io.BytesIO(blobs[chunk_id]))
         for _, chunk_id in sorted(chunk_map.items())
     ]
     if not frames:

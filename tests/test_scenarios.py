@@ -8,6 +8,7 @@ lots-of-tiny-slices, lots-of-overlaps, nan-fill-values (double/float/short).
 
 from __future__ import annotations
 
+import collections
 import concurrent.futures as cf
 
 import numpy as np
@@ -248,16 +249,128 @@ def test_read_region_prunes_chunk_io(store, monkeypatch):
     store.write_variable("p", arr, chunk_shape=(4, 4))
     cs = store.chunk_store()
     calls = []
-    orig = type(cs).read_chunk
+    orig = type(cs).read_chunks
 
-    def counting(self, h):
-        calls.append(h)
-        return orig(self, h)
+    def counting(self, hashes):
+        hashes = list(hashes)
+        calls.extend(hashes)
+        return orig(self, hashes)
 
-    monkeypatch.setattr(type(cs), "read_chunk", counting)
+    monkeypatch.setattr(type(cs), "read_chunks", counting)
     got = store.read_region("p", ((4, 8), (8, 12)))
     assert np.array_equal(got, arr[4:8, 8:12])
     assert len(calls) == 1
+
+
+def _count_scans(monkeypatch):
+    """Count ``storage.scan`` calls per log directory (``versions``,
+    ``indices``, ``chunks``) while the returned Counter is live."""
+    import os
+
+    from mandoline_hbase_spark import storage
+
+    counts = collections.Counter()
+    orig = storage.scan
+
+    def counting(table_dir, *args, **kwargs):
+        counts[os.path.basename(table_dir)] += 1
+        return orig(table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(storage, "scan", counting)
+    return counts
+
+
+@pytest.mark.parametrize("box", [((4, 8), (8, 12)), ((2, 7), (6, 13))], ids=["1chunk", "4chunks"])
+def test_read_region_lists_each_log_once(store, monkeypatch, box):
+    """A point read takes one snapshot of the versions log (none when a
+    cached handle holds one), one index scan and one chunk scan, whether
+    it reads 1 or 4 chunks and whether it reads the latest version or an
+    older bound."""
+    arr0 = np.arange(20 * 20, dtype=np.float64).reshape(20, 20)
+    v0 = store.write_variable("p", arr0, chunk_shape=(4, 4))
+    arr1 = arr0.copy()
+    arr1[0:12, 0:12] = -1.0
+    store.update_region("p", arr1[0:12, 0:12], (0, 0))
+    sl = tuple(slice(lo, hi) for lo, hi in box)
+    for version, want in [(None, arr1), (v0, arr0)]:
+        warm = store._version_cache is not None  # a cached handle's memo
+        counts = _count_scans(monkeypatch)
+        got = store.read_region("p", box, version=version)
+        assert np.array_equal(got, want[sl])
+        assert counts == collections.Counter(versions=0 if warm else 1, indices=1, chunks=1)
+        monkeypatch.undo()
+
+
+def test_update_region_scans_chunks_once_before_append(store, monkeypatch):
+    """A slab commit reads its base chunks with one chunk scan before it
+    appends; a chunk the slab covers whole needs no base, so a
+    chunk-aligned slab reads none."""
+    import os
+
+    from mandoline_hbase_spark import storage
+
+    arr = np.arange(16 * 16, dtype=np.float64).reshape(16, 16)
+    store.write_variable("u", arr, chunk_shape=(4, 4))
+
+    def record(name, fn, events):
+        def wrapped(table_dir, *args, **kwargs):
+            events.append((name, os.path.basename(table_dir)))
+            return fn(table_dir, *args, **kwargs)
+
+        return wrapped
+
+    def run(subarray, offset):
+        events = []
+        monkeypatch.setattr(storage, "scan", record("scan", storage.scan, events))
+        monkeypatch.setattr(storage, "append_rows", record("append", storage.append_rows, events))
+        store.update_region("u", subarray, offset)
+        monkeypatch.undo()
+        return events
+
+    # unaligned 6x6 slab: 4 chunks, each covered in part
+    events = run(np.full((6, 6), 7.0), (1, 1))
+    first_append = next(i for i, e in enumerate(events) if e[0] == "append")
+    assert events.count(("scan", "chunks")) == 1
+    assert events.index(("scan", "chunks")) < first_append
+    # chunk-aligned 8x4 slab: every touched chunk is covered whole
+    events = run(np.full((8, 4), 9.0), (8, 4))
+    assert ("scan", "chunks") not in events and ("scan", "indices") not in events
+    want = arr.copy()
+    want[1:7, 1:7] = 7.0
+    want[8:16, 4:8] = 9.0
+    assert np.array_equal(store.read_variable("u"), want)
+
+
+def test_read_chunks_missing_and_repeated_ids(store):
+    from mandoline_hbase_spark.errors import ChunkNotFoundError
+
+    cs = store.chunk_store()
+    cs.write_chunk("aa", 1, b"one")
+    cs.write_chunk("bb", 1, b"two")
+    cs.write_chunk("aa", 1, b"one")  # a second payload row for the same id
+    cs.update_chunk_refs("bb", 1)  # a ref-delta row (no payload)
+    assert cs.read_chunks(["aa", "bb", "aa"]) == {"aa": b"one", "bb": b"two"}
+    assert cs.read_chunks([]) == {}
+    with pytest.raises(ChunkNotFoundError, match="zz"):
+        cs.read_chunks(["aa", "zz"])
+    with pytest.raises(ChunkNotFoundError, match="zz"):
+        cs.read_chunk("zz")
+
+
+def test_cached_handle_sees_its_own_commit(store):
+    """A warm memoized snapshot is dropped by the handle's own commits:
+    the next read resolves the new version, by every view."""
+    arr0 = np.zeros((4, 4), dtype=np.float64)
+    v0 = store.write_variable("c", arr0, chunk_shape=(2, 2))
+    assert np.array_equal(store.read_region("c", ((0, 4), (0, 4))), arr0)  # warm
+    v1 = store.update_region("c", np.ones((2, 2)), (1, 1))
+    assert store.latest_version_id() == v1 > v0
+    want = arr0.copy()
+    want[1:3, 1:3] = 1.0
+    assert np.array_equal(store.read_region("c", ((0, 4), (0, 4))), want)
+    assert np.array_equal(store.read_region("c", ((0, 4), (0, 4)), version=v0), arr0)
+    assert [int(v["version"]) for v in store.versions()] == [v1, v0]
+    assert store.metadata_at_or_before(v1)["version-id"] == v1
 
 
 def test_read_region_rejects_bad_bounds(store):
