@@ -4,7 +4,7 @@ Re-expresses ``proto/ChunkStore`` of the reference
 (src/io/mandoline/backend/hbase.clj:122-172):
 
 - ``read_chunk(hash) -> bytes``      (hbase.clj:124-133; raises if absent);
-  ``read_chunks(hashes)`` fetches many with one scan
+  ``read_chunks(hashes)`` fetches many at once (``storage.read_payloads``)
 - ``chunk_refs(hash) -> int``        (hbase.clj:135-136, 105-120)
 - ``write_chunk(hash, ref, data)``   (hbase.clj:138-154; idempotent blind
   put — content addressing makes last-write-wins safe)
@@ -46,25 +46,17 @@ class ChunkStore:
         return self.read_chunks([hash_])[hash_]
 
     def read_chunks(self, hashes: Iterable[str]) -> dict[str, bytes]:
-        """Payloads of ``hashes`` with one key-filter scan: ``{hash: bytes}``,
-        one entry per distinct id. Raises ChunkNotFoundError naming an
-        absent id; an empty ``hashes`` reads nothing."""
+        """Payloads of ``hashes`` with one fetch (``storage.read_payloads``):
+        ``{hash: bytes}``, one entry per distinct id. Raises
+        ChunkNotFoundError naming an absent id; an empty ``hashes`` reads
+        nothing."""
         wanted = set()
         for h in hashes:
             _validate_hash(h)
             wanted.add(h)
         if not wanted:
             return {}
-        # Ref-delta rows come back as nulls; their row groups are not read.
-        t = storage.scan(
-            self._dir, storage.CHUNKS_SCHEMA, filter={"chunk_id": list(wanted)}, columns=["chunk_id", "data"]
-        )
-        data = t.column("data")
-        out: dict[str, bytes] = {}
-        for i, h in enumerate(t.column("chunk_id").to_pylist()):
-            # Content-addressed: every data row for an id holds identical bytes.
-            if h not in out and data[i].is_valid:
-                out[h] = data[i].as_py()
+        out = storage.read_payloads(self._dir, wanted)
         missing = wanted.difference(out)
         if missing:
             raise ChunkNotFoundError(f"no chunk was found for hash {min(missing)}")

@@ -657,15 +657,12 @@ class Connection:
             # chunks first (§3.2 order: chunks -> index -> version row).
             # Content addressing collapses identical blobs to one row; the
             # baked ref_delta equals this commit's index references to it.
-            (
-                per_chunk.groupBy("chunk_id")
-                .agg(
+            storage.write_chunks_df(
+                per_chunk.groupBy("chunk_id").agg(
                     F.count(F.lit(1)).cast("long").alias("ref_delta"),
                     F.first("data").alias("data"),
-                )
-                .select("chunk_id", "ref_delta", "data")
-                .write.mode("append")
-                .parquet(self._dirs["chunks"])
+                ),
+                self._dirs["chunks"],
             )
             append_index_rows_df(
                 self._dirs["indices"], per_chunk, var_name, version_id, seq
@@ -833,41 +830,16 @@ class Connection:
         coord_ids: Optional[list[str]] = None,
         committed: Optional[list[int]] = None,
     ) -> dict[str, str]:
-        """Bulk find-index: {coord_id -> chunk_id} at snapshot ``bound``.
-
-        One scan + per-key last-write-wins + max-committed-version-<=-
-        bound — the vectorized form of find-index (hbase.clj:184-198)
-        over every coordinate of the variable at once. ``coord_ids``
-        narrows the scan to a coordinate subset — the analog of the
-        reference's bounded start/stop-row scan (hbase.clj:191-192),
-        served from the storage catalog's hash index on ``coord_id``.
-        Only entries of COMMITTED versions participate: ``committed``
-        is the caller's visibility set, the committed ids <= ``bound``
-        of its snapshot (``VersionSnapshot.committed_le``); when None it
-        comes from a fresh snapshot.
+        """Bulk find-index: {coord_id -> chunk_id} at snapshot ``bound``
+        (``storage.resolve_chunk_map``), over every coordinate of the
+        variable or the ``coord_ids`` subset. ``committed`` is the
+        caller's visibility set, the committed ids <= ``bound`` of its
+        snapshot (``VersionSnapshot.committed_le``); when None it comes
+        from a fresh snapshot.
         """
         if committed is None:
             committed = self._committed_versions_le(bound)
-        flt = {"var_name": var_name, "version_id": committed}
-        if coord_ids is not None:
-            flt["coord_id"] = coord_ids
-        t = storage.scan(
-            self._dirs["indices"],
-            storage.INDICES_SCHEMA,
-            filter=flt,
-            columns=["coord_id", "version_id", "chunk_id", "seq"],
-        )
-        best: dict[str, tuple[int, int, Optional[str]]] = {}
-        for cid, v, c, s in zip(
-            t.column("coord_id").to_pylist(),
-            t.column("version_id").to_pylist(),
-            t.column("chunk_id").to_pylist(),
-            t.column("seq").to_pylist(),
-        ):
-            cur = best.get(cid)
-            if cur is None or (v, s) > (cur[0], cur[1]):
-                best[cid] = (v, s, c)
-        return {cid: c for cid, (v, s, c) in best.items() if c is not None}
+        return storage.resolve_chunk_map(self._dirs["indices"], var_name, committed, coord_ids)
 
     def read_variable(self, var_name: str, version: int | None = None) -> np.ndarray:
         """Assemble the variable at a snapshot version (latest if None)."""

@@ -4,7 +4,9 @@ Re-expresses ``proto/Index`` of the reference (hbase.clj:200-251) plus the
 one real query in the repo, ``find-index`` (hbase.clj:184-198):
 
 - ``chunk_at(coord)``            — latest version <= this index's version
-  (MVCC snapshot read; scan + server-side RowFilter in the reference).
+  (MVCC snapshot read; scan + server-side RowFilter in the reference),
+  resolved by ``storage.resolve_chunk_map``, the one last-write-wins
+  rule every reader of the indices log shares.
 - ``chunk_at(coord, version)``   — exact point get (hbase.clj:217-229).
 - ``write_index(coord, old, new) -> bool`` — compare-and-swap
   (``check-and-put``, hbase.clj:231-248): writes ``new`` only if the
@@ -82,38 +84,17 @@ class Index:
         return storage.read_versions(os.path.join(self._dataset_dir, "versions")).committed_le(bound)
 
     def find_index(self, coord, bound_version: int) -> Optional[str]:
-        """latest-<=-bound resolution (``find-index``, hbase.clj:184-198).
-
-        Bounded scan on (var, coord) restricted to COMMITTED versions <=
-        bound — the start/stop row + RowFilter(LESS_OR_EQUAL) of the
-        reference, plus the commit-point visibility rule — then exact
-        match if present, else the entry with the max version.
+        """latest-<=-bound resolution (``find-index``, hbase.clj:184-198):
+        ``storage.resolve_chunk_map`` for this one coordinate over the
+        COMMITTED versions <= bound — the start/stop row +
+        RowFilter(LESS_OR_EQUAL) of the reference, plus the commit-point
+        visibility rule. The reference's "exact version hit, else max
+        version" (hbase.clj:195-198) is the max, since every candidate
+        is <= bound.
         """
         coord_id = coordinate_to_id(tuple(coord))
         committed = self._committed_le(bound_version)
-        if not committed:
-            return None
-        t = storage.scan(
-            self._dir,
-            storage.INDICES_SCHEMA,
-            filter={"var_name": self.var_name, "coord_id": coord_id, "version_id": committed},
-            columns=["version_id", "chunk_id", "seq"],
-        )
-        if t.num_rows == 0:
-            return None
-        # last-write-wins per version (reduce merge, hbase.clj:194), then
-        # exact version hit, else max version (hbase.clj:195-198).
-        best: dict[int, tuple[int, Optional[str]]] = {}
-        for v, c, s in zip(
-            t.column("version_id").to_pylist(),
-            t.column("chunk_id").to_pylist(),
-            t.column("seq").to_pylist(),
-        ):
-            if v not in best or s > best[v][0]:
-                best[v] = (s, c)
-        if int(bound_version) in best:
-            return best[int(bound_version)][1]
-        return best[max(best)][1]
+        return storage.resolve_chunk_map(self._dir, self.var_name, committed, [coord_id]).get(coord_id)
 
     def chunk_at(self, coord, version_id: int | None = None) -> Optional[str]:
         """Two arities of ``Index.chunk-at`` (hbase.clj:209-229).

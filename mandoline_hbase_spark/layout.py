@@ -241,11 +241,8 @@ def read_records_native(
 
     from pyspark.sql.types import StructType
 
-    from mandoline_hbase_spark.sources.datasource import (
-        _committed_versions,
-        _read_payloads,
-        _snapshot,
-    )
+    from mandoline_hbase_spark import storage
+    from mandoline_hbase_spark.sources.datasource import _snapshot
 
     bound, var_meta, entries = _snapshot(dataset_path, variable, version)
     sj = var_meta.get("schema_json")
@@ -270,10 +267,9 @@ def read_records_native(
     # (per-chunk arrow-level cast). Driver cost is O(versions) over the
     # small versions table the snapshot already read.
     current_types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    for vid, meta_json in _committed_versions(dataset_path):
-        if vid > bound:
-            continue
-        vm = _json.loads(meta_json).get("variables", {}).get(variable)
+    snap = storage.read_versions(os.path.join(dataset_path, "versions"))
+    for vid in snap.committed_le(bound):
+        vm = _json.loads(snap.metadata_json(vid)).get("variables", {}).get(variable)
         old_sj = (vm or {}).get("schema_json")
         if old_sj is None:
             continue
@@ -287,7 +283,7 @@ def read_records_native(
     paths = {cid: os.path.join(files_dir, f"{cid}.parquet") for cid in chunk_ids}
     missing = [cid for cid, p in paths.items() if not os.path.exists(p)]
     if missing:
-        payloads = _read_payloads(os.path.join(dataset_path, "chunks"), missing)
+        payloads = storage.read_payloads(os.path.join(dataset_path, "chunks"), missing)
         for cid in missing:
             data = payloads.get(cid)
             if data is None:

@@ -61,14 +61,13 @@ def _swap_in(table_dir: str, tmp_dir: str) -> None:
 
 
 def _rewrite(conn, role: str, df) -> None:
-    """Materialize ``df`` as the new content of the ``role`` log table.
-    Chunks are written one row per row group, as ``storage.append_rows``
-    writes them, so a point read decodes one payload."""
+    """Materialize ``df`` as the new content of the ``role`` log table;
+    chunks in the chunks-log layout (``storage.write_chunks_df``)."""
     tmp = conn._dirs[role] + f".rewrite-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
     if role == "chunks":
-        writer = writer.option("parquet.block.row.count.limit", "1")
-    writer.parquet(tmp)
+        storage.write_chunks_df(df, tmp, mode="overwrite")
+    else:
+        df.write.mode("overwrite").parquet(tmp)
     _swap_in(conn._dirs[role], tmp)
 
 
@@ -96,7 +95,7 @@ def _stage_ref_deltas(conn, dropped_df):
         .select("chunk_id", "ref_delta", F.lit(None).cast("binary").alias("data"))
     )
     tmp = conn._dirs["chunks"] + f".refdelta-{uuid.uuid4().hex[:8]}"
-    released.write.mode("overwrite").parquet(tmp)
+    storage.write_chunks_df(released, tmp, mode="overwrite")
     import pyarrow.compute as pc
     import pyarrow.dataset as pa_ds
 
@@ -134,12 +133,12 @@ def _compacted_chunks_df(conn, spark):
 def _cluster_by_chunk_id(df, spark):
     """Range-cluster a chunks rewrite by ``chunk_id``.
 
-    Every point fetch (ChunkStore.read_chunk, the datasource's
-    ``_read_payloads``) filters on chunk_id; writing the rewrite as
-    disjoint sorted id ranges turns those scans into one-file reads via
-    parquet min/max stats — the same scan-key clustering the retention
-    rewrite applies to the index log. Hash ids are uniform, so ranges
-    balance without sampling skew.
+    Every point fetch (``storage.read_payloads``) looks chunks up by
+    chunk_id, and Spark scans of the log filter on it; writing the
+    rewrite as disjoint sorted id ranges turns such a Spark scan into
+    one-file reads via parquet min/max stats — the same scan-key
+    clustering the retention rewrite applies to the index log. Hash ids
+    are uniform, so ranges balance without sampling skew.
     """
     n = max(2, spark.sparkContext.defaultParallelism)
     return df.repartitionByRange(n, "chunk_id").sortWithinPartitions("chunk_id")
@@ -377,12 +376,9 @@ def prune_versions(conn, keep_last: int, spark=None) -> dict:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq_
 
-        kept_versions = storage.scan(
-            conn._dirs["versions"],
-            storage.VERSIONS_SCHEMA,
-            filter=pc.field("version_id") >= floor,
-        )
         vdir = conn._dirs["versions"]
+        versions = storage.read_versions(vdir).table
+        kept_versions = versions.filter(pc.field("version_id") >= floor)
         tmp = vdir + f".rewrite-{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp, exist_ok=True)
         keep_names = set()

@@ -320,6 +320,8 @@ class IncrementalRecordAgg:
         STRING for engine-neutral grouping, sums pre-multiplied)."""
         from pyspark.sql import functions as F
 
+        from mandoline_hbase_spark.sources.datasource import _package
+
         chunks_dir = os.path.join(self.dataset_path, "chunks")
         gcols, scols = self.group_cols, self.sum_cols
         cdf = self.spark.createDataFrame([(c,) for c in chunk_ids] or [], "chunk_id STRING")
@@ -327,20 +329,14 @@ class IncrementalRecordAgg:
         def _decode(pdfs):
             import io as _io
 
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pa_ds
             import pyarrow.parquet as pq
 
             for pdf in pdfs:
+                payloads = _package("storage").read_payloads(chunks_dir, pdf["chunk_id"])
                 for cid in pdf["chunk_id"]:
-                    ds = pa_ds.dataset(chunks_dir, format="parquet")
-                    t = ds.to_table(
-                        filter=(pc.field("chunk_id") == cid) & pc.field("data").is_valid(),
-                        columns=["data"],
-                    )
-                    if t.num_rows == 0:
+                    if cid not in payloads:
                         raise LookupError(f"chunk {cid} missing from {chunks_dir}")
-                    body = pq.read_table(_io.BytesIO(t.column("data")[0].as_py())).to_pandas()
+                    body = pq.read_table(_io.BytesIO(payloads[cid])).to_pandas()
                     out = body[[c for c in body.columns if c in set(gcols + scols)]].copy()
                     for g in gcols:
                         if g not in out.columns:

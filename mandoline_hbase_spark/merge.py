@@ -48,7 +48,7 @@ from pyspark.sql.types import StructType
 from mandoline_hbase_spark import storage
 from mandoline_hbase_spark.engine import Connection
 from mandoline_hbase_spark.errors import CommitConflictError
-from mandoline_hbase_spark.sources.datasource import _snapshot
+from mandoline_hbase_spark.sources.datasource import _package, _snapshot
 
 
 def _schema_fingerprint(schema: StructType) -> list[tuple[str, str]]:
@@ -111,60 +111,32 @@ def merge_records(
     # Executor-side helpers are NESTED so cloudpickle serializes them by
     # VALUE: task closures must not reference this package by name —
     # python workers launched from a driver whose cwd is not the repo
-    # cannot import it.
+    # cannot import it. Package modules come through datasource._package,
+    # which is shipped by value too.
 
     def _fetch_payload(cid: str) -> bytes:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pa_ds
-
-        ds = pa_ds.dataset(chunks_dir, format="parquet")
-        t = ds.to_table(
-            filter=(pc.field("chunk_id") == cid) & pc.field("data").is_valid(),
-            columns=["data"],
-        )
-        if t.num_rows == 0:
+        payload = _package("storage").read_payloads(chunks_dir, [cid]).get(cid)
+        if payload is None:
             raise LookupError(f"chunk {cid} missing from {chunks_dir}")
-        return t.column("data")[0].as_py()
+        return payload
 
     def _put_chunk(blob: bytes) -> str:
         import hashlib
-        import time as _time
-        import uuid as _uuid
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        storage = _package("storage")
         cid = hashlib.sha1(blob).hexdigest()
-        store = pa.Table.from_pydict(
-            {"chunk_id": [cid], "ref_delta": [0], "data": [blob]},
-            schema=pa.schema(
-                [
-                    pa.field("chunk_id", pa.string(), nullable=False),
-                    pa.field("ref_delta", pa.int64(), nullable=False),
-                    pa.field("data", pa.binary(), nullable=True),
-                ]
-            ),
+        storage.append_rows(
+            chunks_dir, storage.CHUNKS_SCHEMA, [{"chunk_id": cid, "ref_delta": 0, "data": blob}]
         )
-        path = os.path.join(
-            chunks_dir, f"part-{_time.time_ns():020d}-{_uuid.uuid4().hex[:8]}.parquet"
-        )
-        pq.write_table(store, path)
         return cid
 
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     bloom_cols = list(bloom_columns or [])
 
     def _put_stats(cid: str, pdf) -> None:
         # zone-map sidecar: advisory, best-effort — merged chunks stay
         # prunable by the records reader's pushed filters
         try:
-            import sys as _sys
-
-            try:
-                from mandoline_hbase_spark import zonemaps
-            except ModuleNotFoundError:
-                _sys.path.insert(0, pkg_root)
-                from mandoline_hbase_spark import zonemaps
+            zonemaps = _package("zonemaps")
             zonemaps.write_stats(
                 os.path.join(dataset_path, zonemaps.STATS_SUBDIR),
                 zonemaps.stats_rows(cid, pdf)
@@ -312,7 +284,7 @@ def merge_records(
         n_rewritten, n_matched_total, n_tombstoned = int(agg[0]), int(agg[1]), int(agg[2])
         # ref deltas, executor-written (content addressing can map two
         # coords to one chunk — the delta is the reference count)
-        (
+        storage.write_chunks_df(
             rewritten.filter(F.col("new_chunk_id").isNotNull())
             .groupBy("new_chunk_id")
             .agg(F.count(F.lit(1)).cast("long").alias("ref_delta"))
@@ -320,9 +292,8 @@ def merge_records(
                 F.col("new_chunk_id").alias("chunk_id"),
                 "ref_delta",
                 F.lit(None).cast("binary").alias("data"),
-            )
-            .write.mode("append")
-            .parquet(chunks_dir)
+            ),
+            chunks_dir,
         )
         # index re-points, executor-written with the reserved id
         # (invisible until the version row commits)
@@ -381,12 +352,11 @@ def merge_records(
                 F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n_r"),
             ).first()
             n_insert_chunks, n_inserted = int(ins_agg[0]), int(ins_agg[1])
-            (
+            storage.write_chunks_df(
                 inserts.groupBy("chunk_id")
                 .agg(F.count(F.lit(1)).cast("long").alias("ref_delta"))
-                .select("chunk_id", "ref_delta", F.lit(None).cast("binary").alias("data"))
-                .write.mode("append")
-                .parquet(chunks_dir)
+                .select("chunk_id", "ref_delta", F.lit(None).cast("binary").alias("data")),
+                chunks_dir,
             )
 
         # -- 5. commit: conflict checks + version row (driver, locked) -------

@@ -152,7 +152,7 @@ def from_kv(kv: DataFrame, schema, dataset: str) -> Connection:
             F.col("v_b").alias("data"),
         )
     )
-    chunk_log.write.mode("append").parquet(conn._dirs["chunks"])
+    storage.write_chunks_df(chunk_log, conn._dirs["chunks"])
 
     # Indices: unpack row keys into index-log records executor-side; one
     # import-wide seq stamps the batch (exactly how a distributed commit

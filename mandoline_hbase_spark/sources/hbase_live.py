@@ -512,7 +512,7 @@ def _ship_factory(client_factory) -> bytes:
     classes (the hermetic fake) — so executor tasks can unpickle it
     without an importable ``mandoline_hbase_spark`` on the worker
     (neutral-cwd harnesses; the same concern datasource.py's
-    ``_ensure_importable`` handles for its runner processes, solved at
+    ``_package`` handles for its runner processes, solved at
     the serialization layer here because task unpickling happens before
     any function body runs). On a real cluster the package ships via
     --py-files/pip and by-reference would also work; a factory closing

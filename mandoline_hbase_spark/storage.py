@@ -17,24 +17,35 @@ read time:
   log (hbase.clj:26-28); a write is visible only after its version row
   lands (§3.2 of SURVEY.md).
 
+This module is the one reader of the three logs; every other module
+reads them through three functions, the protocol reads of the reference
+(hbase.clj:97-103, 184-198, 257-261):
+
+- :func:`read_versions` — one scan of ``versions`` as a
+  :class:`VersionSnapshot`: the latest id, the metadata at or before a
+  bound, and the committed ids a read at that bound may see;
+- :func:`resolve_chunk_map` — find-index over ``indices``: per
+  ``coord_id``, the max committed ``(version_id, seq)`` record wins, and
+  a NULL ``chunk_id`` (tombstone) drops the coordinate;
+- :func:`read_payloads` — ``{chunk_id: bytes}`` from ``chunks``, one
+  row group decoded per distinct id.
+
 Point reads (the real-time path, explicitly non-Spark per the project's
 north star) go through :func:`scan`, served by a process-wide catalog of
 the log files — the analog of the block index under the reference's
-``get`` and bounded scans (hbase.clj:97-103, 184-198). For each file the
-catalog keeps the parquet footer and the file's key columns with their
-row locations: ``chunk_id``, ``ref_delta`` and payload presence for
-``chunks``, every column for ``indices`` and ``versions``. It never holds
-payload bytes; a scan that projects ``data`` reads only the row groups
-that hold the wanted keys. :func:`append_rows` writes ``chunks`` files
-with one row per row group (the 64 kB block analog), and compaction
-rewrites them the same way. A region read lists each log once: one
-unfiltered scan of ``versions`` (:func:`read_versions`, a
-:class:`VersionSnapshot` that gives the latest id, the metadata at or
-before the bound and the committed ids the read may see), one key-filter
-scan of ``indices`` for the region's coordinates, and one key-filter
-scan of ``chunks`` for all of their payloads. A slab commit reuses its
-snapshot for the version id it claims and the metadata it merges onto.
-The catalog's invariants:
+``get`` and bounded scans. For each file the catalog keeps the parquet
+footer and the file's key columns with their row locations:
+``chunk_id``, ``ref_delta`` and payload presence for ``chunks``, every
+column for ``indices`` and ``versions``. It never holds payload bytes; a
+read of ``data`` decodes only the row groups that hold the wanted keys.
+:func:`append_rows` writes ``chunks`` files with one row per row group
+(the 64 kB block analog), and every Spark writer of the chunks log goes
+through :func:`write_chunks_df`, which writes the same layout. A region
+read lists each log once: one snapshot of ``versions``, one key-filter
+scan of ``indices`` for the region's coordinates, and one fetch from
+``chunks`` for all of their payloads. A slab commit reuses its snapshot
+for the version id it claims and the metadata it merges onto. The
+catalog's invariants:
 
 - log files are immutable and uniquely named: nothing rewrites one in
   place, and :func:`append_rows` publishes each file by rename, so a
@@ -55,9 +66,9 @@ The catalog's invariants:
 
 Its failure mode: a file rewritten in place with the same inode, size
 and mtime would be served stale. Nothing in this package writes a log
-file that way. A directory the catalog cannot model (one holding a
-subdirectory) is read by a pyarrow dataset scan; nothing in this package
-writes one.
+file that way. A listed entry that is not a regular file (a
+subdirectory) makes a read raise ValueError naming it; nothing in this
+package writes one.
 
 Analytic reads load the same directories with ``spark.read.parquet``.
 At cluster scale these directories live on object storage and the
@@ -75,11 +86,11 @@ import threading
 import time
 import uuid
 from collections import OrderedDict
+from collections.abc import Mapping
 from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 
 CHUNKS_SCHEMA = pa.schema(
@@ -146,6 +157,19 @@ def _publish(table_dir: str, table: pa.Table) -> str:
     pq.write_table(table, tmp, row_group_size=1 if _payload_columns(table.schema) else None)
     os.replace(tmp, path)
     return path
+
+
+def write_chunks_df(df, path: str, mode: str = "append") -> None:
+    """Write a Spark DataFrame of ``chunk_id, ref_delta, data`` rows to
+    ``path`` in the chunks-log layout :func:`append_rows` uses: one row
+    per row group, so a point read decodes one payload. Spark's committer
+    publishes each file by rename from ``_temporary``."""
+    (
+        df.select("chunk_id", "ref_delta", "data")
+        .write.mode(mode)
+        .option("parquet.block.row.count.limit", "1")
+        .parquet(path)
+    )
 
 
 # --- The log-file catalog ----------------------------------------------------
@@ -248,9 +272,9 @@ def _presence(pf: pq.ParquetFile, name: str) -> list[bool]:
 def _list_log(table_dir: str):
     """``(stamp, entries)``: ``entries`` is ``[(name, (st_ino, st_size,
     st_mtime_ns))]`` of the directory's log files, sorted by name,
-    skipping what pyarrow discovery skips, or None when the directory
-    holds something the catalog cannot model. ``stamp`` is drawn before
-    the directory is read, so a larger stamp is a later listing."""
+    skipping what pyarrow discovery skips. ``stamp`` is drawn before the
+    directory is read, so a larger stamp is a later listing. An entry
+    that is not a regular file raises ValueError."""
     stamp = next(_LISTINGS)
     try:
         it = os.scandir(table_dir)
@@ -266,7 +290,7 @@ def _list_log(table_dir: str):
             except FileNotFoundError:  # unlinked since the readdir: no longer in the log
                 continue
             if not stat.S_ISREG(st.st_mode):
-                return stamp, None
+                raise ValueError(f"log directory entry is not a regular file: {e.path}")
             out.append((e.name, (st.st_ino, st.st_size, st.st_mtime_ns)))
     out.sort()
     return stamp, out
@@ -363,7 +387,7 @@ class _LogDir:
 
     def key_table(self) -> pa.Table:
         """Every file's keys as one table, in name order. Rebuilt after
-        the file set changes; only expression and unfiltered scans use
+        the file set changes; only unfiltered scans of key columns use
         it, and their output grows with the rows anyway."""
         if self._keys is None:
             parts = [f.keys for f in self.files.values()]
@@ -420,74 +444,88 @@ def _as_set(v) -> frozenset:
     return frozenset(v) if isinstance(v, (list, tuple, set, frozenset)) else frozenset([v])
 
 
-def _as_expression(filter):
-    """A key filter as the equivalent pyarrow expression."""
-    if filter is None or isinstance(filter, pc.Expression):
-        return filter
-    terms = [pc.field(c).isin(list(_as_set(v))) for c, v in filter.items()]
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = expr & t
-    return expr
-
-
 def scan(table_dir: str, schema: pa.Schema, filter=None, columns=None) -> pa.Table:
     """Read a log directory: the rows matching ``filter``, projected on
     ``columns`` (all of ``schema`` when None), in ``schema``'s types. An
     empty or missing directory gives an empty table.
 
-    ``filter`` is None, a key filter — a mapping ``{column: value or
+    ``filter`` is None or a key filter: a mapping ``{column: value or
     list of values}`` over scalar key columns, the conjunction of
     equalities and memberships that point reads use, served from the
     catalog's hash indexes at a cost that grows with the directory's
-    files and the matching rows, not with its rows — or a
-    ``pyarrow.compute`` expression over key columns, evaluated on the
-    catalog's key columns, with key columns projected. A filter on a
-    payload column, or an expression with one projected, raises
-    ValueError. A directory the catalog cannot model (one holding a
-    subdirectory) is read by a pyarrow dataset scan."""
+    files and the matching rows, not with its rows. A filter on a payload
+    column raises ValueError; any other kind of filter raises TypeError.
+    There is no fallback reader: a directory entry that is not a regular
+    file raises ValueError."""
+    if filter is None:
+        keys = None
+    elif isinstance(filter, Mapping):
+        keys = {c: _as_set(v) for c, v in filter.items()}
+        bad = keys.keys() - set(_key_schema(schema).names)
+        if bad:
+            raise ValueError(f"scan filters on key columns only, not {sorted(bad)}")
+    else:
+        raise TypeError(f"scan takes None or a {{column: values}} key filter, not {type(filter).__name__}")
     fields = [schema.field(c) for c in (columns if columns is not None else schema.names)]
+    return _read(table_dir, schema, keys, fields)
+
+
+def read_payloads(chunks_dir: str, chunk_ids) -> dict[str, bytes]:
+    """``{chunk_id: bytes}`` for each of ``chunk_ids`` that has a payload
+    in the chunks log; an id without one is left out. Content addressing
+    makes every payload row of an id hold the same bytes, so one row
+    group is decoded per distinct id, however often the id was written;
+    ref-delta rows are never decoded."""
+    wanted = frozenset(chunk_ids)
+    if not wanted:
+        return {}
+    fields = [CHUNKS_SCHEMA.field("chunk_id"), CHUNKS_SCHEMA.field("data")]
+    t = _read(chunks_dir, CHUNKS_SCHEMA, {"chunk_id": wanted}, fields, _first_payloads)
+    return dict(zip(t.column("chunk_id").to_pylist(), t.column("data").to_pylist()))
+
+
+def _first_payloads(picks):
+    """Of the matched chunks rows, the first (in file-name order) that
+    holds a payload, per chunk id."""
+    seen, out = set(), []
+    for f, rows in picks:
+        ids, present = f.values("chunk_id"), f.present.get("data")
+        keep = []
+        for i in rows:
+            if present and present[i] and ids[i] not in seen:
+                seen.add(ids[i])
+                keep.append(i)
+        if keep:
+            out.append((f, keep))
+    return out
+
+
+def _read(table_dir, schema, keys, fields, pick=None) -> pa.Table:
+    """The rows matching ``keys`` (every row when None), narrowed by
+    ``pick`` over ``[(file, rows)]``, served from the catalog."""
+    keys_only = all(f.name in _key_schema(schema).names for f in fields)
     for attempt in range(3):
         stamp, listing = _list_log(table_dir)
-        if listing is None:
-            dataset = pa_ds.dataset(table_dir, format="parquet", schema=schema)
-            return dataset.to_table(filter=_as_expression(filter), columns=[f.name for f in fields])
         if not listing:
             return pa.schema(fields).empty_table()
         try:
-            return _catalog_scan(table_dir, schema, stamp, listing, filter, fields)
+            with _CATALOG.open(table_dir, schema, stamp, listing) as d:
+                if keys is not None:
+                    picks = d.match(keys)
+                elif keys_only:
+                    return d.key_table().select([f.name for f in fields])
+                else:
+                    picks = [(f, range(f.keys.num_rows)) for f in d.files.values()]
+            if pick is not None:
+                picks = pick(picks)
+            pieces = [f.take(rows, fields) for f, rows in picks if len(rows)]
         except FileNotFoundError:  # listed, then removed by compaction: list again
             if attempt == 2:
                 raise
-
-
-def _catalog_scan(table_dir, schema, stamp, listing, filter, fields) -> pa.Table:
-    """:func:`scan` served from the catalog."""
-    key_names = set(schema.names).difference(_payload_columns(schema))
-    keys_only = all(f.name in key_names for f in fields)
-    key_filter = filter is not None and not isinstance(filter, pc.Expression)
-    if key_filter:
-        keys = {c: _as_set(v) for c, v in filter.items()}
-        if not keys.keys() <= key_names:
-            raise ValueError(f"scan filters on key columns only, not {sorted(keys.keys() - key_names)}")
-    elif filter is not None and not keys_only:
-        raise ValueError("a scan with an expression filter projects key columns only")
-    with _CATALOG.open(table_dir, schema, stamp, listing) as d:
-        if key_filter:
-            picks = d.match(keys)
-        elif keys_only:
-            table = d.key_table()
-        else:
-            picks = [(f, range(f.keys.num_rows)) for f in d.files.values()]
-    if not key_filter and keys_only:
-        try:
-            return (table if filter is None else table.filter(filter)).select([f.name for f in fields])
-        except pa.ArrowInvalid as e:  # the expression names a payload column
-            raise ValueError(f"scan filters on key columns only: {filter}") from e
-    pieces = [f.take(rows, fields) for f, rows in picks if len(rows)]
-    if not pieces:
-        return pa.schema(fields).empty_table()
-    return pa.concat_tables(pieces) if len(pieces) > 1 else pieces[0]
+            continue
+        if not pieces:
+            return pa.schema(fields).empty_table()
+        return pa.concat_tables(pieces) if len(pieces) > 1 else pieces[0]
 
 
 @contextmanager
@@ -957,6 +995,34 @@ class VersionSnapshot:
 def read_versions(versions_dir: str) -> VersionSnapshot:
     """One scan of the versions log."""
     return VersionSnapshot(scan(versions_dir, VERSIONS_SCHEMA))
+
+
+def resolve_chunk_map(
+    indices_dir: str, var_name: str, committed, coord_ids=None, tombstones: bool = False
+) -> dict[str, str | None]:
+    """Find-index (hbase.clj:184-198) in bulk: ``{coord_id: chunk_id}``
+    of ``var_name`` over the versions in ``committed``, with one
+    key-filter scan of the indices log. Per coordinate the record with
+    the max ``(version_id, seq)`` wins: the newest version, and within it
+    the last write. A winning tombstone (NULL ``chunk_id``) drops the
+    coordinate, or maps it to None when ``tombstones`` is set.
+
+    ``committed`` is the visibility set, ordinarily
+    ``VersionSnapshot.committed_le(bound)``: records of a version that
+    never committed (§3.2) take no part. ``coord_ids`` narrows the scan
+    to those coordinates, the analog of the reference's bounded
+    start/stop-row scan."""
+    if not committed:
+        return {}
+    flt = {"var_name": var_name, "version_id": list(committed)}
+    if coord_ids is not None:
+        flt["coord_id"] = list(coord_ids)
+    t = scan(indices_dir, INDICES_SCHEMA, filter=flt, columns=["coord_id", "version_id", "seq", "chunk_id"])
+    best: dict[str, tuple] = {}
+    for key, v, s, c in zip(*(col.to_pylist() for col in t.columns)):
+        if key not in best or (v, s) > best[key][0]:
+            best[key] = ((v, s), c)
+    return {key: c for key, (_, c) in best.items() if tombstones or c is not None}
 
 
 def reserved_version_ids(versions_dir: str) -> list[int]:

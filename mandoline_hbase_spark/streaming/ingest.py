@@ -236,12 +236,11 @@ def commit_events_batch(connection, batch_df: DataFrame, batch_id: int) -> int |
         if not totals["chunks"]:
             return None
         # chunks first: payload rows carry their ref (one index entry each)
-        (
-            per_chunk.groupBy("chunk_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("ref_delta"), F.first("data").alias("data"))
-            .select("chunk_id", "ref_delta", "data")
-            .write.mode("append")
-            .parquet(connection._dirs["chunks"])
+        storage.write_chunks_df(
+            per_chunk.groupBy("chunk_id").agg(
+                F.count(F.lit(1)).cast("long").alias("ref_delta"), F.first("data").alias("data")
+            ),
+            connection._dirs["chunks"],
         )
         seq = storage.next_seq()
         from mandoline_hbase_spark.engine import append_index_rows_df

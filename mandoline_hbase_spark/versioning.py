@@ -127,13 +127,11 @@ def clone_dataset(
         seq = storage.next_seq()
         latest = latest.persist()
         try:
-            (
+            storage.write_chunks_df(
                 latest.groupBy("chunk_id")
                 .agg(F.count(F.lit(1)).cast("long").alias("ref_delta"))
-                .join(blobs, "chunk_id")
-                .select("chunk_id", "ref_delta", "data")
-                .write.mode("append")
-                .parquet(dst._dirs["chunks"])
+                .join(blobs, "chunk_id"),
+                dst._dirs["chunks"],
             )
             append_index_rows_df(
                 dst._dirs["indices"], latest, var_name, version_id, seq
@@ -174,14 +172,11 @@ def rollback_variable(conn, var_name: str, to_version: int, spark=None) -> int:
     seq = storage.next_seq()
     latest = latest.persist()
     try:
-        (
+        storage.write_chunks_df(
             latest.groupBy("chunk_id")
             .agg(F.count(F.lit(1)).cast("long").alias("ref_delta"))
-            .select(
-                "chunk_id", "ref_delta", F.lit(None).cast("binary").alias("data")
-            )
-            .write.mode("append")
-            .parquet(conn._dirs["chunks"])
+            .select("chunk_id", "ref_delta", F.lit(None).cast("binary").alias("data")),
+            conn._dirs["chunks"],
         )
         append_index_rows_df(
             conn._dirs["indices"], latest, var_name, version_id, seq
@@ -223,7 +218,7 @@ def record_changes(
 
     from pyspark.sql.types import StructType as _StructType
 
-    from mandoline_hbase_spark.sources.datasource import _snapshot
+    from mandoline_hbase_spark.sources.datasource import _package, _snapshot
 
     _, _, e_old = _snapshot(dataset_path, variable, v_old)
     _, meta_new, e_new = _snapshot(dataset_path, variable, v_new)
@@ -249,20 +244,14 @@ def record_changes(
         def _decode(pdfs):
             import io as _io
 
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pa_ds
             import pyarrow.parquet as pq
 
             for pdf in pdfs:
+                payloads = _package("storage").read_payloads(chunks_dir, pdf["chunk_id"])
                 for cid in pdf["chunk_id"]:
-                    ds = pa_ds.dataset(chunks_dir, format="parquet")
-                    t = ds.to_table(
-                        filter=(pc.field("chunk_id") == cid) & pc.field("data").is_valid(),
-                        columns=["data"],
-                    )
-                    if t.num_rows == 0:
+                    if cid not in payloads:
                         raise LookupError(f"chunk {cid} missing from {chunks_dir}")
-                    body = pq.read_table(_io.BytesIO(t.column("data")[0].as_py())).to_pandas()
+                    body = pq.read_table(_io.BytesIO(payloads[cid])).to_pandas()
                     # reconcile to the NEW version's schema by name
                     for c in cols:
                         if c not in body.columns:

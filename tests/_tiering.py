@@ -4,9 +4,10 @@ The full suite outgrew the CI/driver verify budget (~32 min wall on
 local[4]), so the slowest tests — listed in ``tests/heavy_tier.txt`` —
 are deselected from the default run. To keep the tier exercised without
 paying its full cost every run, each default run still executes a small
-deterministic sample of it, rotated daily: over a couple of weeks every
-heavy test gets re-run. Pure functions here so the policy itself is
-unit-testable without spawning pytest.
+sample of it, seeded by the manifest's content: two runs of the same tree
+run the same tests, and any edit of the manifest draws a new sample. Pure
+functions here so the policy itself is unit-testable without spawning
+pytest.
 """
 
 from __future__ import annotations
@@ -17,10 +18,11 @@ import os
 HEAVY_SAMPLE_K = 4
 
 
-def load_manifest(path: str | None = None) -> set[str]:
+MANIFEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "heavy_tier.txt")
+
+
+def load_manifest(path: str = MANIFEST) -> set[str]:
     """Node ids of the heavy tier (comment/blank lines ignored)."""
-    if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "heavy_tier.txt")
     out: set[str] = set()
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -30,14 +32,14 @@ def load_manifest(path: str | None = None) -> set[str]:
     return out
 
 
-def daily_sample(node_ids: list[str], day_ordinal: int, k: int = HEAVY_SAMPLE_K) -> set[str]:
-    """Deterministic k-subset for a given day.
+def manifest_seed(path: str = MANIFEST) -> str:
+    """md5 of the manifest file's bytes: the sample's seed."""
+    with open(path, "rb") as f:
+        return hashlib.md5(f.read()).hexdigest()
 
-    Ranks by md5(day:nodeid) so the sample is stable within a day,
-    rotates across days, and every id recurs with period ~len/k days.
-    """
-    ranked = sorted(
-        node_ids,
-        key=lambda nid: hashlib.md5(f"{day_ordinal}:{nid}".encode()).hexdigest(),
-    )
+
+def heavy_sample(node_ids: list[str], seed: str, k: int = HEAVY_SAMPLE_K) -> set[str]:
+    """Deterministic k-subset for ``seed``: ranks by md5(seed:nodeid), so
+    one seed always gives the same subset and a new seed a new one."""
+    ranked = sorted(node_ids, key=lambda nid: hashlib.md5(f"{seed}:{nid}".encode()).hexdigest())
     return set(ranked[: max(0, k)])

@@ -15,8 +15,8 @@ def pytest_configure(config):
     config.addinivalue_line(
         "markers",
         "heavy: long-running tier (tests/heavy_tier.txt); deselected from the "
-        "default run except a deterministic daily sample — run all of it with "
-        "-m heavy, or the whole suite with PYTEST_ALL_TIERS=1",
+        "default run except a sample seeded by the manifest's content — run all "
+        "of it with -m heavy, or the whole suite with PYTEST_ALL_TIERS=1",
     )
 
 
@@ -39,11 +39,7 @@ def pytest_collection_modifyitems(config, items):
     if not heavy:
         return
 
-    import datetime
-
-    sample = _tiering.daily_sample(
-        [it.nodeid for it in heavy], datetime.date.today().toordinal()
-    )
+    sample = _tiering.heavy_sample([it.nodeid for it in heavy], _tiering.manifest_seed())
     drop = [it for it in heavy if it.nodeid not in sample]
     if drop:
         dropped = set(drop)

@@ -671,12 +671,11 @@ def test_native_scan_fallback_honors_requested_version(ds_spark, store):
     thread through — a time-travel read must never silently serve the
     latest snapshot."""
     from mandoline_hbase_spark import layout
-    from mandoline_hbase_spark.sources.datasource import _committed_versions
 
     one = ds_spark.createDataFrame([(1, 1.0)], "k bigint, v double").coalesce(1)
     _write_records(ds_spark, store, one)
     _write_records(ds_spark, store, one)  # same bytes -> shared chunk id
-    v2 = _committed_versions(store.dataset_dir)[-1][0]
+    v2 = store.latest_version_id()
     _write_records(
         ds_spark,
         store,

@@ -263,20 +263,24 @@ def test_read_region_prunes_chunk_io(store, monkeypatch):
 
 
 def _count_scans(monkeypatch):
-    """Count ``storage.scan`` calls per log directory (``versions``,
-    ``indices``, ``chunks``) while the returned Counter is live."""
+    """Count reads of each log directory (``versions``, ``indices``,
+    ``chunks``) while the returned Counter is live: ``storage.scan``
+    calls plus ``storage.read_payloads`` fetches."""
     import os
 
     from mandoline_hbase_spark import storage
 
     counts = collections.Counter()
-    orig = storage.scan
 
-    def counting(table_dir, *args, **kwargs):
-        counts[os.path.basename(table_dir)] += 1
-        return orig(table_dir, *args, **kwargs)
+    def counting(orig):
+        def wrapped(table_dir, *args, **kwargs):
+            counts[os.path.basename(table_dir)] += 1
+            return orig(table_dir, *args, **kwargs)
 
-    monkeypatch.setattr(storage, "scan", counting)
+        return wrapped
+
+    monkeypatch.setattr(storage, "scan", counting(storage.scan))
+    monkeypatch.setattr(storage, "read_payloads", counting(storage.read_payloads))
     return counts
 
 
@@ -302,9 +306,9 @@ def test_read_region_lists_each_log_once(store, monkeypatch, box):
 
 
 def test_update_region_scans_chunks_once_before_append(store, monkeypatch):
-    """A slab commit reads its base chunks with one chunk scan before it
-    appends; a chunk the slab covers whole needs no base, so a
-    chunk-aligned slab reads none."""
+    """A slab commit reads its base chunks with one payload fetch and no
+    chunk scan before it appends; a chunk the slab covers whole needs no
+    base, so a chunk-aligned slab reads none."""
     import os
 
     from mandoline_hbase_spark import storage
@@ -322,6 +326,7 @@ def test_update_region_scans_chunks_once_before_append(store, monkeypatch):
     def run(subarray, offset):
         events = []
         monkeypatch.setattr(storage, "scan", record("scan", storage.scan, events))
+        monkeypatch.setattr(storage, "read_payloads", record("fetch", storage.read_payloads, events))
         monkeypatch.setattr(storage, "append_rows", record("append", storage.append_rows, events))
         store.update_region("u", subarray, offset)
         monkeypatch.undo()
@@ -330,11 +335,11 @@ def test_update_region_scans_chunks_once_before_append(store, monkeypatch):
     # unaligned 6x6 slab: 4 chunks, each covered in part
     events = run(np.full((6, 6), 7.0), (1, 1))
     first_append = next(i for i, e in enumerate(events) if e[0] == "append")
-    assert events.count(("scan", "chunks")) == 1
-    assert events.index(("scan", "chunks")) < first_append
+    assert events.count(("fetch", "chunks")) == 1 and ("scan", "chunks") not in events
+    assert events.index(("fetch", "chunks")) < first_append
     # chunk-aligned 8x4 slab: every touched chunk is covered whole
     events = run(np.full((8, 4), 9.0), (8, 4))
-    assert ("scan", "chunks") not in events and ("scan", "indices") not in events
+    assert not {("fetch", "chunks"), ("scan", "chunks"), ("scan", "indices")} & set(events)
     want = arr.copy()
     want[1:7, 1:7] = 7.0
     want[8:16, 4:8] = 9.0

@@ -1,7 +1,9 @@
-"""The storage catalog behind ``storage.scan``: point reads decode only
-the row group that holds the key, other processes' appends show up on
-the next call, swapped or replaced files are never served, and an empty
-or missing directory reads as an empty table."""
+"""The storage catalog behind ``storage.scan`` and
+``storage.read_payloads``: point reads decode only the row group that
+holds the key (one per chunk id), chunks written by Spark or by executor
+puts keep that layout and appear only whole, other processes' appends
+show up on the next call, swapped or replaced files are never served,
+and an empty or missing directory reads as an empty table."""
 
 from __future__ import annotations
 
@@ -74,6 +76,64 @@ def test_one_chunk_read_decodes_one_row_group(conn, parquet_calls):
         assert method == "read_row_groups" and len(row_groups) == 1
         if not cold:  # keys and footers come from the catalog
             assert [c[0] for c in parquet_calls] == ["opened", "read_row_groups"]
+
+    # a chunk id committed again (the same content rewritten) has two
+    # payload rows in two files; a read decodes one of them
+    block = arr[0:2, 0:2, 0:2].copy()
+    conn.update_region("v", np.full((2, 2, 2), -1.0), (0, 0, 0))
+    conn.update_region("v", block, (0, 0, 0))
+    parquet_calls.clear()
+    assert (conn.read_region("v", ((0, 2), (0, 2), (0, 2))) == block).all()
+    ((method, row_groups),) = _payload_reads(parquet_calls)
+    assert method == "read_row_groups" and len(row_groups) == 1
+
+
+def test_distributed_write_keeps_one_chunk_per_row_group(conn, spark, parquet_calls):
+    """Chunks written by a Spark job use the same layout: one row per row
+    group, so a 1-chunk read after ``write_variable_from_df`` decodes one
+    payload."""
+    arr = np.arange(8 * 8, dtype=np.float64).reshape(8, 8)
+    tidy = spark.createDataFrame(
+        [(i, j, float(arr[i, j])) for i in range(8) for j in range(8)], "d0 long, d1 long, value double"
+    ).repartition(2)
+    conn.write_variable_from_df(tidy, "v", shape=(8, 8), chunk_shape=(2, 2))
+    d = conn._dirs["chunks"]
+    metas = [pq.ParquetFile(os.path.join(d, f)).metadata for f in os.listdir(d) if f.startswith("part-")]
+    assert sum(m.num_rows for m in metas) == 16
+    assert all(m.num_row_groups == m.num_rows for m in metas)
+    parquet_calls.clear()
+    assert (conn.read_region("v", ((2, 4), (4, 6))) == arr[2:4, 4:6]).all()
+    ((method, row_groups),) = _payload_reads(parquet_calls)
+    assert method == "read_row_groups" and len(row_groups) == 1
+
+
+def test_executor_chunk_writes_publish_by_rename(conn, monkeypatch):
+    """The records writer's task-side chunk put (and ``append_rows``,
+    which the MERGE rewrite uses) writes under a hidden name and renames:
+    no visible ``part-*`` file in ``chunks/`` is ever written to."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from mandoline_hbase_spark.sources.datasource import MandolineWriter
+
+    chunks_dir = conn._dirs["chunks"]
+    targets = []
+    orig = pq.write_table
+
+    def checked(table, where, *args, **kwargs):
+        if isinstance(where, str) and os.path.dirname(where) == chunks_dir:
+            targets.append(os.path.basename(where))
+            assert not os.path.basename(where).startswith("part-"), where
+        return orig(table, where, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", checked)
+    schema = StructType([StructField("k", LongType())])
+    writer = MandolineWriter({"path": conn.dataset_dir, "variable": "records"}, schema, overwrite=False)
+    msg = writer.write(iter([(1,), (2,)]))
+    storage.append_rows(chunks_dir, storage.CHUNKS_SCHEMA, [{"chunk_id": "c", "ref_delta": 0, "data": b"x"}])
+    assert len(targets) == 2 and all(t.startswith(".") for t in targets)
+    published = [f for f in os.listdir(chunks_dir) if f.startswith("part-")]
+    assert len(published) == 2
+    assert conn.chunk_store().read_chunks([msg.chunk_id, "c"])["c"] == b"x"
 
 
 def _append_in_child(chunks_dir: str, versions_dir: str) -> None:
@@ -258,11 +318,12 @@ def test_empty_or_missing_directory_reads_empty(tmp_path):
     empty.mkdir()
     (empty / "_SUCCESS").write_bytes(b"")  # skipped like pyarrow discovery skips it
     for d in (missing, str(empty)):
-        for flt in (None, {"chunk_id": "a"}, pc.field("ref_delta") > 0):
+        for flt in (None, {"chunk_id": "a"}):
             t = storage.scan(d, storage.CHUNKS_SCHEMA, filter=flt, columns=["data", "chunk_id"])
             assert t.num_rows == 0
             want = [storage.CHUNKS_SCHEMA.field("data"), storage.CHUNKS_SCHEMA.field("chunk_id")]
             assert t.schema == pa.schema(want)
+        assert storage.read_payloads(d, ["a"]) == {}
 
 
 def test_filter_forms_agree_with_dataset_scan(tmp_path):
@@ -291,23 +352,23 @@ def test_filter_forms_agree_with_dataset_scan(tmp_path):
         for cols in (None, ["ref_delta", "chunk_id"], ["data"]):
             got = storage.scan(d, storage.CHUNKS_SCHEMA, filter=flt, columns=cols)
             assert got.to_pylist() == dataset(expr, cols).to_pylist()
-    expr, cols = pc.field("ref_delta") >= 2, ["ref_delta", "chunk_id"]
-    got = storage.scan(d, storage.CHUNKS_SCHEMA, filter=expr, columns=cols)
-    assert got.to_pylist() == dataset(expr, cols).to_pylist()
-    # payload bytes are not keys: no filter on them, no expression scan projecting them
-    for flt, cols in [(pc.field("data").is_valid(), ["chunk_id"]), ({"data": b"x"}, ["chunk_id"]), (expr, ["data"])]:
-        with pytest.raises(ValueError):
-            storage.scan(d, storage.CHUNKS_SCHEMA, filter=flt, columns=cols)
+    # payload bytes are not keys, and a key filter is the only filter form
+    with pytest.raises(ValueError):
+        storage.scan(d, storage.CHUNKS_SCHEMA, filter={"data": b"x"}, columns=["chunk_id"])
+    with pytest.raises(TypeError):
+        storage.scan(d, storage.CHUNKS_SCHEMA, filter=pc.field("ref_delta") >= 2, columns=["chunk_id"])
 
-    # a subdirectory is beyond the catalog: the dataset scan reads it too
-    sub = os.path.join(d, "nested")
-    os.makedirs(sub)
-    storage.append_rows(sub, storage.CHUNKS_SCHEMA, [{"chunk_id": "c1", "ref_delta": 100, "data": b"n"}])
-    got = storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": "c1"}, columns=["ref_delta"])
-    assert sorted(got.column("ref_delta").to_pylist()) == sorted(
-        dataset(pc.field("chunk_id") == "c1", ["ref_delta"]).column("ref_delta").to_pylist()
-    )
-    assert 100 in got.column("ref_delta").to_pylist()
+    # one payload per id: the first payload row in file order
+    want = {}
+    for r in rows:
+        if r["data"] is not None:
+            want.setdefault(r["chunk_id"], r["data"])
+    assert storage.read_payloads(d, ["c0", "c1", "c2", "c3", "c4", "zz"]) == want
+
+    # the log holds files only: a subdirectory fails the read, naming it
+    os.makedirs(os.path.join(d, "nested"))
+    with pytest.raises(ValueError, match="nested"):
+        storage.scan(d, storage.CHUNKS_SCHEMA, filter={"chunk_id": "c1"}, columns=["ref_delta"])
 
 
 def test_concurrent_writers_and_readers_lose_no_update(conn, index_builds):

@@ -34,15 +34,20 @@ def test_manifest_loads_and_names_real_tests():
         assert set(name.split("[", 1)[0].split("::")) <= defs[f], nid
 
 
-def test_daily_sample_is_deterministic_and_rotates():
+def test_heavy_sample_is_deterministic_per_manifest_and_rotates(tmp_path):
     ids = [f"tests/test_x.py::t{i}" for i in range(40)]
-    a = _tiering.daily_sample(ids, day_ordinal=738000)
-    b = _tiering.daily_sample(ids, day_ordinal=738000)
-    assert a == b and len(a) == _tiering.HEAVY_SAMPLE_K
-    # across a fortnight the union covers far more than one day's sample
+    manifest = tmp_path / "heavy_tier.txt"
+    manifest.write_text("# heavy\n" + "\n".join(ids) + "\n")
+    seed = _tiering.manifest_seed(str(manifest))
+    assert seed == _tiering.manifest_seed(str(manifest))  # no date, no clock
+    a = _tiering.heavy_sample(ids, seed)
+    assert a == _tiering.heavy_sample(ids, seed) and len(a) == _tiering.HEAVY_SAMPLE_K
+    # every edit of the manifest is a new seed; over a dozen edits the
+    # samples cover far more than one sample's worth of tests
     union = set()
-    for d in range(14):
-        union |= _tiering.daily_sample(ids, day_ordinal=738000 + d)
+    for edit in range(12):
+        manifest.write_text(f"# heavy, edit {edit}\n" + "\n".join(ids) + "\n")
+        union |= _tiering.heavy_sample(ids, _tiering.manifest_seed(str(manifest)))
     assert len(union) > _tiering.HEAVY_SAMPLE_K * 2
 
 
@@ -63,6 +68,7 @@ def test_default_collection_deselects_heavy_but_keeps_a_sample():
     collected = {l for l in lines if l.startswith("tests/")}
     kept_heavy = collected & manifest
     assert len(kept_heavy) == _tiering.HEAVY_SAMPLE_K, sorted(kept_heavy)
+    assert kept_heavy == _tiering.heavy_sample(sorted(manifest), _tiering.manifest_seed())
     assert "deselected" in out.stdout
     # explicit node-id invocation is never filtered
     heavy_id = sorted(nid for nid in manifest if nid.startswith(probe_file))[0]
