@@ -37,7 +37,14 @@ import tempfile
 import uuid
 from typing import Callable
 
-__all__ = ["content_fingerprint", "served_artifact", "sweep_stale_artifacts"]
+__all__ = [
+    "content_fingerprint",
+    "memoized_artifact",
+    "served_artifact",
+    "sweep_stale_artifacts",
+]
+
+_READY: dict[tuple[str, str], str] = {}
 
 
 def content_fingerprint(src_path: str, params: dict) -> str:
@@ -98,6 +105,25 @@ def served_artifact(
             return final
         except OSError:
             return work  # lost every race: serve scratch
+
+
+def memoized_artifact(
+    name: str,
+    src_path: str,
+    params: dict,
+    build_fn: Callable[[str], None],
+    marker: str = "_built",
+) -> str:
+    """``served_artifact`` for a build of ``src_path`` with ``params``,
+    memoized per process on ``(name, content_fingerprint)``. A hit costs
+    one stat of the source; a source rewritten in this process has a new
+    fingerprint, so it is served a fresh build, never the old one. Pass
+    the same ``params`` dict to ``build_fn``."""
+    fingerprint = content_fingerprint(src_path, params)
+    key = (name, fingerprint)
+    if key not in _READY:
+        _READY[key] = served_artifact(name, fingerprint, build_fn, marker)
+    return _READY[key]
 
 
 def sweep_stale_artifacts(name: str, max_age_s: float = 86400.0) -> list[str]:

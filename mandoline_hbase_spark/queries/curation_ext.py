@@ -880,9 +880,6 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_stream_admitted — the STREAMING exact-dedup admission path under
 # the driver's value-level oracle.
 # --------------------------------------------------------------------------
-_STREAM_ADMITTED: dict[str, str] = {}
-
-
 @register(
     "dedup_stream_admitted",
     oracle="""
@@ -911,51 +908,43 @@ def dedup_stream_admitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.streaming import curation as scuration
 
     docs = load_table(spark, sf_dir, "documents")
-    artifact = _STREAM_ADMITTED.get(sf_dir)
-    if artifact is None:
 
-        def _build(work: str) -> None:
-            staging = os.path.join(work, "staging")
-            scuration.stage_ordered_batches(docs, staging, n_batches=4)
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(staging)
-            )
-            q = scuration.start_corpus_ingest(
-                stream,
-                os.path.join(work, "corpus"),
-                os.path.join(work, "ckpt"),
-                threshold=1.5,  # exact gate only: jaccard >= 1.5 never holds
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("admission stream did not finish")
-            # serve only the admitted docs; drop the staged corpus copy,
-            # the checkpoint, and the near-dup index roles (unused here)
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-            for role in ("bands", "feats"):
-                shutil.rmtree(
-                    os.path.join(work, "corpus", role), ignore_errors=True
-                )
-
-        artifact = served_artifact(
-            "mandoline-stream-admitted",
-            content_fingerprint(
-                os.path.join(sf_dir, "documents.parquet"),
-                {"layout": "stream-admit-exact-v1", "files": 4},
-            ),
-            _build,
+    def _build(work: str) -> None:
+        staging = os.path.join(work, "staging")
+        scuration.stage_ordered_batches(docs, staging, n_batches=4)
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staging)
         )
-        _STREAM_ADMITTED[sf_dir] = artifact
+        q = scuration.start_corpus_ingest(
+            stream,
+            os.path.join(work, "corpus"),
+            os.path.join(work, "ckpt"),
+            threshold=1.5,  # exact gate only: jaccard >= 1.5 never holds
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("admission stream did not finish")
+        # serve only the admitted docs; drop the staged corpus copy,
+        # the checkpoint, and the near-dup index roles (unused here)
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+        for role in ("bands", "feats"):
+            shutil.rmtree(
+                os.path.join(work, "corpus", role), ignore_errors=True
+            )
+
+    artifact = memoized_artifact(
+        "mandoline-stream-admitted",
+        os.path.join(sf_dir, "documents.parquet"),
+        {"layout": "stream-admit-exact-v1", "files": 4},
+        _build,
+    )
 
     admitted = scuration.read_corpus(
         spark, os.path.join(artifact, "corpus"), docs.schema

@@ -867,32 +867,24 @@ _MRL_ORACLE = """
     """
 
 
-_SERVED_MRL_INDEX: dict[str, str] = {}
-
-
 def _served_mrl_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Train-once MRL layout per corpus (operators/served.py lifecycle;
     mrl_meta.json = ready marker, written last)."""
     import os
 
     from mandoline_hbase_spark.operators import ann_index
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
 
-    index_dir = _SERVED_MRL_INDEX.get(sf_dir)
-    if index_dir is None:
-        build = dict(prefix_dims=16)
-        emb = load_table(spark, sf_dir, "embeddings")
-        index_dir = served_artifact(
-            "mandoline-mrl",
-            content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"), build),
-            lambda work: ann_index.materialize_mrl_index(emb, work, **build),
-            marker="mrl_meta.json",
-        )
-        _SERVED_MRL_INDEX[sf_dir] = index_dir
-    return index_dir
+    build = dict(prefix_dims=16)
+    return memoized_artifact(
+        "mandoline-mrl",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        build,
+        lambda work: ann_index.materialize_mrl_index(
+            load_table(spark, sf_dir, "embeddings"), work, **build
+        ),
+        marker="mrl_meta.json",
+    )
 
 
 @register(
@@ -1179,9 +1171,6 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_claim(approx, exact, bound=0.4)
 
 
-_SERVED_ANN_INDEX: dict[str, str] = {}
-
-
 def _served_ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """ONE materialized ANN index per corpus serves both the IVF and the
     PQ/ADC queries (the deployed shape: a single train-once artifact,
@@ -1193,29 +1182,21 @@ def _served_ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from mandoline_hbase_spark.operators import ann_index
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
+    from mandoline_hbase_spark.operators.served import memoized_artifact
+
+    build = dict(
+        dim=64, n_centroids=8, seed=7, include_pq=True, pq_m=8, pq_k=16,
+        include_sq=True,
     )
-
-    index_dir = _SERVED_ANN_INDEX.get(sf_dir)
-    if index_dir is None:
-        build = dict(
-            dim=64, n_centroids=8, seed=7, include_pq=True, pq_m=8, pq_k=16,
-            include_sq=True,
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        index_dir = served_artifact(
-            "mandoline-ann",
-            content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"), build),
-            lambda work: ann_index.materialize_ann_index(emb, work, **build),
-            marker="codebook.json",
-        )
-        _SERVED_ANN_INDEX[sf_dir] = index_dir
-    return index_dir
-
-
-_SERVED_FILTERED_ANN_INDEX: dict[str, str] = {}
+    return memoized_artifact(
+        "mandoline-ann",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        build,
+        lambda work: ann_index.materialize_ann_index(
+            load_table(spark, sf_dir, "embeddings"), work, **build
+        ),
+        marker="codebook.json",
+    )
 
 
 def _served_filtered_ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1228,26 +1209,21 @@ def _served_filtered_ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from mandoline_hbase_spark.operators import ann_index
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
 
-    index_dir = _SERVED_FILTERED_ANN_INDEX.get(sf_dir)
-    if index_dir is None:
-        build = dict(
-            dim=64, n_centroids=8, seed=7, include_pq=True, pq_m=8, pq_k=16,
-            include_sq=True, meta_cols=("label",),
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        index_dir = served_artifact(
-            "mandoline-ann-filtered",
-            content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"), build),
-            lambda work: ann_index.materialize_ann_index(emb, work, **build),
-            marker="codebook.json",
-        )
-        _SERVED_FILTERED_ANN_INDEX[sf_dir] = index_dir
-    return index_dir
+    build = dict(
+        dim=64, n_centroids=8, seed=7, include_pq=True, pq_m=8, pq_k=16,
+        include_sq=True, meta_cols=("label",),
+    )
+    return memoized_artifact(
+        "mandoline-ann-filtered",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        build,
+        lambda work: ann_index.materialize_ann_index(
+            load_table(spark, sf_dir, "embeddings"), work, **build
+        ),
+        marker="codebook.json",
+    )
 
 
 @register(
@@ -1864,9 +1840,6 @@ def search_eval_sq_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranking.retrieval_eval_report(run, truth, k=5)
 
 
-_STREAM_SERVED_ANN: dict[str, str] = {}
-
-
 @register(
     "sim_ivf_stream_served_topk",
     oracle="""
@@ -1906,55 +1879,44 @@ _STREAM_SERVED_ANN: dict[str, str] = {}
 def sim_ivf_stream_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.streaming import ann as sann
 
     build_params = dict(dim=64, n_centroids=8, seed=7)
-    artifact = _STREAM_SERVED_ANN.get(sf_dir)
-    if artifact is None:
 
-        def _build(work: str) -> None:
-            staging = os.path.join(work, "staging")
-            emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-            emb.repartition(4).write.mode("overwrite").parquet(staging)
-            index_dir = os.path.join(work, "index")
-            sann.init_ann_index(index_dir, **build_params)
-            stream = (
-                spark.readStream.schema(emb.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(staging)
-            )
-            q = sann.start_ann_maintenance(
-                stream, index_dir, os.path.join(work, "ckpt")
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("ANN maintenance stream did not finish")
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-
-        artifact = served_artifact(
-            "mandoline-ann-stream",
-            content_fingerprint(
-                os.path.join(sf_dir, "embeddings.parquet"),
-                {"layout": "stream-ann-v1", "files": 4, **build_params},
-            ),
-            _build,
+    def _build(work: str) -> None:
+        staging = os.path.join(work, "staging")
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        emb.repartition(4).write.mode("overwrite").parquet(staging)
+        index_dir = os.path.join(work, "index")
+        sann.init_ann_index(index_dir, **build_params)
+        stream = (
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staging)
         )
-        _STREAM_SERVED_ANN[sf_dir] = artifact
+        q = sann.start_ann_maintenance(
+            stream, index_dir, os.path.join(work, "ckpt")
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("ANN maintenance stream did not finish")
+        import shutil
+
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+
+    artifact = memoized_artifact(
+        "mandoline-ann-stream",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        {"layout": "stream-ann-v1", "files": 4, **build_params},
+        _build,
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return sann.ivf_search(
         spark, os.path.join(artifact, "index"), queries, k=5, n_probe=8
     )
-
-
-_EXACT_PRUNED_ANN: dict[str, str] = {}
 
 
 @register(
@@ -2003,37 +1965,27 @@ def sim_ivf_exact_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from mandoline_hbase_spark.operators import ann_index
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _EXACT_PRUNED_ANN.get(sf_dir)
-    if index_dir is None:
-        n = emb.count()
-        build = dict(
-            dim=64,
-            n_centroids=max(8, int(round(math.sqrt(n)))),
-            seed=7,
-            include_pq=False,
-            train_centroids=True,
-            train_iters=3,
-        )
-        index_dir = served_artifact(
-            "mandoline-ann-exact",
-            content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"), build),
-            lambda work: ann_index.materialize_ann_index(emb, work, **build),
-            marker="codebook.json",
-        )
-        _EXACT_PRUNED_ANN[sf_dir] = index_dir
+    build = dict(dim=64, seed=7, include_pq=False, train_centroids=True, train_iters=3)
+
+    def _build(work: str) -> None:
+        # sqrt(N) cells: the corpus is counted only when the index builds
+        n_centroids = max(8, int(round(math.sqrt(emb.count()))))
+        ann_index.materialize_ann_index(emb, work, n_centroids=n_centroids, **build)
+
+    index_dir = memoized_artifact(
+        "mandoline-ann-exact",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        {**build, "n_centroids": "max(8, round(sqrt(rows)))"},
+        _build,
+        marker="codebook.json",
+    )
     queries = emb.filter(F.col("vec_id") < 10)
     return ann_index.ivf_exact_topk_from_index(
         spark, index_dir, queries, k=5, n_probe=8
     )
-
-
-_SQRTN_SERVED_ANN: dict[str, str] = {}
 
 
 @register(
@@ -2075,45 +2027,37 @@ _SQRTN_SERVED_ANN: dict[str, str] = {}
 def sim_ivf_sqrtn_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.streaming import ann as sann
 
     build_params = dict(dim=64, n_centroids=8, seed=7)
-    artifact = _SQRTN_SERVED_ANN.get(sf_dir)
-    if artifact is None:
 
-        def _build(work: str) -> None:
-            index_dir = os.path.join(work, "index")
-            sann.init_ann_index(index_dir, **build_params)
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", "embedding"
-            )
-            sann.append_ann_batch(emb, 0, index_dir)
-            # the closed maintenance loop: max_share disabled (skew
-            # retrain is sim_ivf_stream/retrain tests' subject), the
-            # mean-cell-row bound alone decides — under 4096 vectors
-            # (oracle/bench scales) this is a no-op and full probe
-            # stays exact; above it the quantizer refits at ~sqrt(N)
-            sann.retrain_if_skewed(
-                spark,
-                index_dir,
-                max_share=1.1,
-                max_mean_cell_rows=512,
-                iters=3,
-            )
-
-        artifact = served_artifact(
-            "mandoline-ann-sqrtn",
-            content_fingerprint(
-                os.path.join(sf_dir, "embeddings.parquet"),
-                {"layout": "sqrtn-ann-v1", "mean_cell_rows": 512, **build_params},
-            ),
-            _build,
+    def _build(work: str) -> None:
+        index_dir = os.path.join(work, "index")
+        sann.init_ann_index(index_dir, **build_params)
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
         )
-        _SQRTN_SERVED_ANN[sf_dir] = artifact
+        sann.append_ann_batch(emb, 0, index_dir)
+        # the closed maintenance loop: max_share disabled (skew
+        # retrain is sim_ivf_stream/retrain tests' subject), the
+        # mean-cell-row bound alone decides — under 4096 vectors
+        # (oracle/bench scales) this is a no-op and full probe
+        # stays exact; above it the quantizer refits at ~sqrt(N)
+        sann.retrain_if_skewed(
+            spark,
+            index_dir,
+            max_share=1.1,
+            max_mean_cell_rows=512,
+            iters=3,
+        )
+
+    artifact = memoized_artifact(
+        "mandoline-ann-sqrtn",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        {"layout": "sqrtn-ann-v1", "mean_cell_rows": 512, **build_params},
+        _build,
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return sann.ivf_search(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from mandoline_hbase_spark.operators import search
 from mandoline_hbase_spark.queries.catalog import register
-from mandoline_hbase_spark.sources.tables import load_table
+from mandoline_hbase_spark.sources.tables import load_table, read_parquet
 
 # Query terms: one rare ('dup', df≈5% of docs) + two common — exercises
 # the idf spread. Fixed order defines the score summation order.
@@ -171,9 +171,6 @@ def search_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return search.ql_dirichlet_topk(docs, _BM25_TERMS, mu=2000.0, k=25)
 
 
-_SERVED_POSTINGS: dict[str, str] = {}
-
-
 @register(
     "bm25_served_topk",
     oracle=_DUCK_BM25,
@@ -192,39 +189,28 @@ _SERVED_POSTINGS: dict[str, str] = {}
 def bm25_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
+    from mandoline_hbase_spark.operators.served import memoized_artifact
+
+    def _build(work: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        tf, dl = search.postings(docs)
+        tf.write.mode("overwrite").parquet(os.path.join(work, "tf"))
+        dl.write.mode("overwrite").parquet(os.path.join(work, "dl"))
+
+    # content-fingerprinted cache slot + atomic rename claim — the
+    # same stale-proof / race-safe protocol as sim_ivf_served_topk,
+    # shared via operators/served.py
+    index_dir = memoized_artifact(
+        "mandoline-postings",
+        os.path.join(sf_dir, "documents.parquet"),
+        {"layout": "postings-v1"},
+        _build,
     )
-
-    index_dir = _SERVED_POSTINGS.get(sf_dir)
-    if index_dir is None:
-        # content-fingerprinted cache slot + atomic rename claim — the
-        # same stale-proof / race-safe protocol as sim_ivf_served_topk,
-        # shared via operators/served.py
-
-        def _build(work: str) -> None:
-            docs = load_table(spark, sf_dir, "documents")
-            tf, dl = search.postings(docs)
-            tf.write.mode("overwrite").parquet(os.path.join(work, "tf"))
-            dl.write.mode("overwrite").parquet(os.path.join(work, "dl"))
-
-        index_dir = served_artifact(
-            "mandoline-postings",
-            content_fingerprint(
-                os.path.join(sf_dir, "documents.parquet"), {"layout": "postings-v1"}
-            ),
-            _build,
-        )
-        _SERVED_POSTINGS[sf_dir] = index_dir
-    tf = spark.read.parquet(f"{index_dir}/tf")
-    dl = spark.read.parquet(f"{index_dir}/dl")
+    tf = read_parquet(spark, f"{index_dir}/tf")
+    dl = read_parquet(spark, f"{index_dir}/dl")
     return search.bm25_topk_from_postings(
         tf, dl, _BM25_TERMS, k=25, k1=_BM25_K1, b=_BM25_B
     )
-
-
-_STREAM_SERVED_POSTINGS: dict[str, str] = {}
 
 
 @register(
@@ -249,51 +235,42 @@ _STREAM_SERVED_POSTINGS: dict[str, str] = {}
 def bm25_stream_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.streaming import search as ssearch
 
-    artifact = _STREAM_SERVED_POSTINGS.get(sf_dir)
-    if artifact is None:
-
-        def _build(work: str) -> None:
-            # stage the corpus as several files so the maintenance run
-            # is genuinely incremental (one micro-batch per file), then
-            # drive the real foreachBatch loop to completion
-            staging = os.path.join(work, "staging")
-            docs = load_table(spark, sf_dir, "documents")
-            docs.repartition(4).write.mode("overwrite").parquet(staging)
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(staging)
-            )
-            q = ssearch.start_index_maintenance(
-                stream, os.path.join(work, "index"), os.path.join(work, "ckpt")
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("postings maintenance stream did not finish")
-            ssearch.compact_index(spark, os.path.join(work, "index"))
-            # only the index is served: keep the staged corpus copy and
-            # the stream checkpoint out of the committed artifact (at
-            # sf10 the staging alone is a second full documents table)
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-
-        artifact = served_artifact(
-            "mandoline-postings-stream",
-            content_fingerprint(
-                os.path.join(sf_dir, "documents.parquet"),
-                {"layout": "stream-postings-v2", "files": 4},
-            ),
-            _build,
+    def _build(work: str) -> None:
+        # stage the corpus as several files so the maintenance run
+        # is genuinely incremental (one micro-batch per file), then
+        # drive the real foreachBatch loop to completion
+        staging = os.path.join(work, "staging")
+        docs = load_table(spark, sf_dir, "documents")
+        docs.repartition(4).write.mode("overwrite").parquet(staging)
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staging)
         )
-        _STREAM_SERVED_POSTINGS[sf_dir] = artifact
+        q = ssearch.start_index_maintenance(
+            stream, os.path.join(work, "index"), os.path.join(work, "ckpt")
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("postings maintenance stream did not finish")
+        ssearch.compact_index(spark, os.path.join(work, "index"))
+        # only the index is served: keep the staged corpus copy and
+        # the stream checkpoint out of the committed artifact (at
+        # sf10 the staging alone is a second full documents table)
+        import shutil
+
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+
+    artifact = memoized_artifact(
+        "mandoline-postings-stream",
+        os.path.join(sf_dir, "documents.parquet"),
+        {"layout": "stream-postings-v2", "files": 4},
+        _build,
+    )
     return ssearch.bm25_search(
         spark,
         os.path.join(artifact, "index"),

@@ -963,9 +963,6 @@ def dq_benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lake_pruned_range_scan — the record-table zone-map pruning layer under
 # the driver's oracle (zero row loss value-checked; pruning as a claim).
 # --------------------------------------------------------------------------
-_LAKE_PRUNED: dict[str, str] = {}
-
-
 @register(
     "lake_pruned_range_scan",
     oracle="""
@@ -996,45 +993,37 @@ def lake_pruned_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from mandoline_hbase_spark import layout, mk_schema
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.sources import register_datasource
 
     register_datasource(spark)
-    ds_root = _LAKE_PRUNED.get(sf_dir)
-    if ds_root is None:
 
-        def _build(work: str) -> None:
-            events = load_table(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            schema = mk_schema(
-                {"root": "lake.pruning.catalog", "base_path": work},
-                spark=spark,
-            )
-            schema.create_dataset("events")
-            ds_dir = schema.connect("events").dataset_dir
-            (
-                events.repartition(4)
-                .write.format("mandoline")
-                .option("path", ds_dir)
-                .option("variable", "records")
-                .mode("append")
-                .save()
-            )
-            layout.cluster_records(spark, ds_dir, ["event_id"], n_chunks=16)
-
-        ds_root = served_artifact(
-            "mandoline-lake-pruning",
-            content_fingerprint(
-                os.path.join(sf_dir, "events.parquet"),
-                {"layout": "lex-event-id", "n_chunks": 16},
-            ),
-            _build,
+    def _build(work: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
         )
-        _LAKE_PRUNED[sf_dir] = ds_root
+        schema = mk_schema(
+            {"root": "lake.pruning.catalog", "base_path": work},
+            spark=spark,
+        )
+        schema.create_dataset("events")
+        ds_dir = schema.connect("events").dataset_dir
+        (
+            events.repartition(4)
+            .write.format("mandoline")
+            .option("path", ds_dir)
+            .option("variable", "records")
+            .mode("append")
+            .save()
+        )
+        layout.cluster_records(spark, ds_dir, ["event_id"], n_chunks=16)
+
+    ds_root = memoized_artifact(
+        "mandoline-lake-pruning",
+        os.path.join(sf_dir, "events.parquet"),
+        {"layout": "lex-event-id", "n_chunks": 16},
+        _build,
+    )
 
     schema = mk_schema(
         {"root": "lake.pruning.catalog", "base_path": ds_root}, spark=spark
@@ -1063,9 +1052,6 @@ def lake_pruned_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # lake_merge_cdf — MERGE + change-data-feed under the driver's oracle.
 # --------------------------------------------------------------------------
-_LAKE_MERGE: dict[str, str] = {}
-
-
 @register(
     "lake_merge_cdf",
     oracle="""
@@ -1201,62 +1187,54 @@ def _lake_merge_artifact(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
 
     from mandoline_hbase_spark import mk_schema
     from mandoline_hbase_spark.merge import merge_records
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.sources import register_datasource
 
     register_datasource(spark)
-    ds_root = _LAKE_MERGE.get(sf_dir)
-    if ds_root is None:
 
-        def _build(work: str) -> None:
-            events = load_table(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            schema = mk_schema(
-                {"root": "lake.merge.catalog", "base_path": work}, spark=spark
-            )
-            schema.create_dataset("events")
-            ds_dir = schema.connect("events").dataset_dir
-            (
-                events.repartition(4)
-                .write.format("mandoline")
-                .option("path", ds_dir)
-                .option("variable", "records")
-                .mode("append")
-                .save()
-            )
-            updates = events.filter(
-                (F.col("event_id") >= 100) & (F.col("event_id") <= 300)
-            ).withColumn("value", F.col("value") + F.lit(1000.0))
-            inserts = events.filter(F.col("event_id") < 50).withColumn(
-                "event_id", F.col("event_id") + F.lit(10_000_000)
-            )
-            summary = merge_records(
-                spark, ds_dir, updates.unionByName(inserts), ["event_id"]
-            )
-            # compact AFTER the merge: a layout-only rewrite must emit an
-            # EMPTY change feed (content addressing: rows merely moved)
-            from mandoline_hbase_spark import layout as _layout
-
-            _layout.compact_records(spark, ds_dir, target_rows=2000)
-            conn = schema.connect("events")
-            summary["compact_version"] = int(conn.latest_version_id())
-            with open(os.path.join(work, "merge.json"), "w") as f:
-                _json.dump(summary, f)
-
-        ds_root = served_artifact(
-            "mandoline-lake-merge",
-            content_fingerprint(
-                os.path.join(sf_dir, "events.parquet"),
-                {"merge": "update-100-300+insert-lt-50+compact", "v": 2},
-            ),
-            _build,
-            marker="merge.json",
+    def _build(work: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
         )
-        _LAKE_MERGE[sf_dir] = ds_root
+        schema = mk_schema(
+            {"root": "lake.merge.catalog", "base_path": work}, spark=spark
+        )
+        schema.create_dataset("events")
+        ds_dir = schema.connect("events").dataset_dir
+        (
+            events.repartition(4)
+            .write.format("mandoline")
+            .option("path", ds_dir)
+            .option("variable", "records")
+            .mode("append")
+            .save()
+        )
+        updates = events.filter(
+            (F.col("event_id") >= 100) & (F.col("event_id") <= 300)
+        ).withColumn("value", F.col("value") + F.lit(1000.0))
+        inserts = events.filter(F.col("event_id") < 50).withColumn(
+            "event_id", F.col("event_id") + F.lit(10_000_000)
+        )
+        summary = merge_records(
+            spark, ds_dir, updates.unionByName(inserts), ["event_id"]
+        )
+        # compact AFTER the merge: a layout-only rewrite must emit an
+        # EMPTY change feed (content addressing: rows merely moved)
+        from mandoline_hbase_spark import layout as _layout
+
+        _layout.compact_records(spark, ds_dir, target_rows=2000)
+        conn = schema.connect("events")
+        summary["compact_version"] = int(conn.latest_version_id())
+        with open(os.path.join(work, "merge.json"), "w") as f:
+            _json.dump(summary, f)
+
+    ds_root = memoized_artifact(
+        "mandoline-lake-merge",
+        os.path.join(sf_dir, "events.parquet"),
+        {"merge": "update-100-300+insert-lt-50+compact", "v": 2},
+        _build,
+        marker="merge.json",
+    )
 
     with open(os.path.join(ds_root, "merge.json")) as f:
         summary = _json.load(f)
@@ -1317,9 +1295,6 @@ def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # lake_cdc_replay — the CDC exactly-once guard under the driver's oracle.
 # --------------------------------------------------------------------------
-_LAKE_CDC: dict[str, str] = {}
-
-
 @register(
     "lake_cdc_replay",
     oracle="""
@@ -1361,92 +1336,84 @@ def lake_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from mandoline_hbase_spark import mk_schema
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.sources import register_datasource
     from mandoline_hbase_spark.streaming import cdc
 
     register_datasource(spark)
     app_id = "catalog-cdc"
-    ds_root = _LAKE_CDC.get(sf_dir)
-    if ds_root is None:
 
-        def _build(work: str) -> None:
-            events = load_table(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            schema = mk_schema(
-                {"root": "lake.cdc.catalog", "base_path": work}, spark=spark
-            )
-            schema.create_dataset("events")
-            ds_dir = schema.connect("events").dataset_dir
-            (
-                events.repartition(4)
-                .write.format("mandoline")
-                .option("path", ds_dir)
-                .option("variable", "records")
-                .mode("append")
-                .save()
-            )
-            b1 = (
-                events.filter(F.col("event_id") <= 9)
-                .withColumn("op", F.lit("d"))
-                .unionByName(
-                    events.filter(
-                        (F.col("event_id") >= 100) & (F.col("event_id") <= 200)
-                    )
-                    .withColumn("value", F.col("value") + F.lit(500.0))
-                    .withColumn("op", F.lit("u"))
-                )
-            )
-            s1 = cdc.apply_cdc_batch(
-                spark, ds_dir, b1, ["event_id"], batch_id=1, app_id=app_id
-            )
-            b2 = (
-                events.filter(
-                    (F.col("event_id") >= 300) & (F.col("event_id") <= 349)
-                )
-                .withColumn("event_id", F.col("event_id") + F.lit(20_000_000))
-                .withColumn("op", F.lit("i"))
-            )
-            s2 = cdc.apply_cdc_batch(
-                spark, ds_dir, b2, ["event_id"], batch_id=2, app_id=app_id
-            )
-            # the restart path: batch 2 arrives AGAIN with poisoned
-            # values; the committed marker must skip it entirely
-            last = cdc.last_applied_batch(ds_dir, app_id)
-            replay_skipped = last is not None and last >= 2
-            if not replay_skipped:  # guard broken -> poison the table
-                cdc.apply_cdc_batch(
-                    spark,
-                    ds_dir,
-                    b2.withColumn("value", F.col("value") + F.lit(999.0)),
-                    ["event_id"],
-                    batch_id=2,
-                    app_id=app_id,
-                )
-            summary = {
-                "n_deleted_b1": s1["deleted"],
-                "n_updated_b1": s1["updated"],
-                "n_inserted_b2": s2["inserted"],
-                "last_batch": cdc.last_applied_batch(ds_dir, app_id),
-                "replay_skipped": replay_skipped,
-            }
-            with open(os.path.join(work, "cdc.json"), "w") as f:
-                _json.dump(summary, f)
-
-        ds_root = served_artifact(
-            "mandoline-lake-cdc",
-            content_fingerprint(
-                os.path.join(sf_dir, "events.parquet"),
-                {"cdc": "d0-9+u100-200+i300-349@20M+poisoned-replay", "v": 1},
-            ),
-            _build,
-            marker="cdc.json",
+    def _build(work: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
         )
-        _LAKE_CDC[sf_dir] = ds_root
+        schema = mk_schema(
+            {"root": "lake.cdc.catalog", "base_path": work}, spark=spark
+        )
+        schema.create_dataset("events")
+        ds_dir = schema.connect("events").dataset_dir
+        (
+            events.repartition(4)
+            .write.format("mandoline")
+            .option("path", ds_dir)
+            .option("variable", "records")
+            .mode("append")
+            .save()
+        )
+        b1 = (
+            events.filter(F.col("event_id") <= 9)
+            .withColumn("op", F.lit("d"))
+            .unionByName(
+                events.filter(
+                    (F.col("event_id") >= 100) & (F.col("event_id") <= 200)
+                )
+                .withColumn("value", F.col("value") + F.lit(500.0))
+                .withColumn("op", F.lit("u"))
+            )
+        )
+        s1 = cdc.apply_cdc_batch(
+            spark, ds_dir, b1, ["event_id"], batch_id=1, app_id=app_id
+        )
+        b2 = (
+            events.filter(
+                (F.col("event_id") >= 300) & (F.col("event_id") <= 349)
+            )
+            .withColumn("event_id", F.col("event_id") + F.lit(20_000_000))
+            .withColumn("op", F.lit("i"))
+        )
+        s2 = cdc.apply_cdc_batch(
+            spark, ds_dir, b2, ["event_id"], batch_id=2, app_id=app_id
+        )
+        # the restart path: batch 2 arrives AGAIN with poisoned
+        # values; the committed marker must skip it entirely
+        last = cdc.last_applied_batch(ds_dir, app_id)
+        replay_skipped = last is not None and last >= 2
+        if not replay_skipped:  # guard broken -> poison the table
+            cdc.apply_cdc_batch(
+                spark,
+                ds_dir,
+                b2.withColumn("value", F.col("value") + F.lit(999.0)),
+                ["event_id"],
+                batch_id=2,
+                app_id=app_id,
+            )
+        summary = {
+            "n_deleted_b1": s1["deleted"],
+            "n_updated_b1": s1["updated"],
+            "n_inserted_b2": s2["inserted"],
+            "last_batch": cdc.last_applied_batch(ds_dir, app_id),
+            "replay_skipped": replay_skipped,
+        }
+        with open(os.path.join(work, "cdc.json"), "w") as f:
+            _json.dump(summary, f)
+
+    ds_root = memoized_artifact(
+        "mandoline-lake-cdc",
+        os.path.join(sf_dir, "events.parquet"),
+        {"cdc": "d0-9+u100-200+i300-349@20M+poisoned-replay", "v": 1},
+        _build,
+        marker="cdc.json",
+    )
 
     with open(os.path.join(ds_root, "cdc.json")) as f:
         summary = _json.load(f)
@@ -1477,9 +1444,6 @@ def lake_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # lake_schema_evolution — add-column evolution under the driver's oracle.
 # --------------------------------------------------------------------------
-_LAKE_EVO: dict[str, str] = {}
-
-
 @register(
     "lake_schema_evolution",
     oracle="""
@@ -1507,58 +1471,50 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from mandoline_hbase_spark import mk_schema
-    from mandoline_hbase_spark.operators.served import (
-        content_fingerprint,
-        served_artifact,
-    )
+    from mandoline_hbase_spark.operators.served import memoized_artifact
     from mandoline_hbase_spark.sources import register_datasource
 
     register_datasource(spark)
-    ds_root = _LAKE_EVO.get(sf_dir)
-    if ds_root is None:
 
-        def _build(work: str) -> None:
-            events = load_table(spark, sf_dir, "events").select(
-                "event_id", "ts", "user_id", "event_type", "value"
-            )
-            schema = mk_schema(
-                {"root": "lake.evo.catalog", "base_path": work}, spark=spark
-            )
-            schema.create_dataset("events")
-            ds_dir = schema.connect("events").dataset_dir
-            (
-                events.repartition(4)
-                .write.format("mandoline")
-                .option("path", ds_dir)
-                .option("variable", "records")
-                .mode("append")
-                .save()
-            )
-            widened = (
-                events.filter(F.col("event_id") < 100)
-                .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
-                .withColumn("score", F.col("value") + F.lit(0.25))
-            )
-            (
-                widened.write.format("mandoline")
-                .option("path", ds_dir)
-                .option("variable", "records")
-                .mode("append")
-                .save()
-            )
-            # the ready marker: evolution committed
-            open(os.path.join(work, "evolved.marker"), "w").write("ok")
-
-        ds_root = served_artifact(
-            "mandoline-lake-evo",
-            content_fingerprint(
-                os.path.join(sf_dir, "events.parquet"),
-                {"evo": "add-score-lt-100", "v": 1},
-            ),
-            _build,
-            marker="evolved.marker",
+    def _build(work: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
         )
-        _LAKE_EVO[sf_dir] = ds_root
+        schema = mk_schema(
+            {"root": "lake.evo.catalog", "base_path": work}, spark=spark
+        )
+        schema.create_dataset("events")
+        ds_dir = schema.connect("events").dataset_dir
+        (
+            events.repartition(4)
+            .write.format("mandoline")
+            .option("path", ds_dir)
+            .option("variable", "records")
+            .mode("append")
+            .save()
+        )
+        widened = (
+            events.filter(F.col("event_id") < 100)
+            .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
+            .withColumn("score", F.col("value") + F.lit(0.25))
+        )
+        (
+            widened.write.format("mandoline")
+            .option("path", ds_dir)
+            .option("variable", "records")
+            .mode("append")
+            .save()
+        )
+        # the ready marker: evolution committed
+        open(os.path.join(work, "evolved.marker"), "w").write("ok")
+
+    ds_root = memoized_artifact(
+        "mandoline-lake-evo",
+        os.path.join(sf_dir, "events.parquet"),
+        {"evo": "add-score-lt-100", "v": 1},
+        _build,
+        marker="evolved.marker",
+    )
 
     schema = mk_schema(
         {"root": "lake.evo.catalog", "base_path": ds_root}, spark=spark

@@ -69,6 +69,14 @@ def get_spark(
         # this long-lived-driver shape; 45s costs one minor pause and
         # keeps storage memory honest.
         .config("spark.cleaner.periodicGC.interval", "45s")
+        # PySpark's DataFrame call-site capture costs about five py4j
+        # round trips on every F.*/Column call (a query build makes
+        # ~1,500 of them), and buys only the Python call site in error
+        # messages' query context, which nothing here reads. To get it
+        # back, pass extra_conf={"spark.python.sql.dataFrameDebugging.
+        # enabled": "true"} on the FIRST get_spark of the process:
+        # PySpark reads the flag once, at the first DataFrame call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
