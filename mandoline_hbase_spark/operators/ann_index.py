@@ -23,10 +23,16 @@ Index layout under ``index_dir`` (all parquet, executor-written):
   codebook), kilobytes; loaded driver-side at serve time and shipped
   as literals/broadcasts exactly like the fit-inline forms.
 
-Serving reuses the fit-inline operators' scoring expressions, so
-``ivf_topk_from_index`` equals ``similarity.ivf_topk`` bit-for-bit for
-the same seed/params, and ``pq_topk_from_index`` equals
-``similarity.pq_topk`` for the same codebook (both asserted by tests).
+Each codec has ONE candidate stage in ``similarity``, and the served
+and fit-inline forms differ only in where its inputs come from: IVF
+assigns with ``assign_cells``, probes with ``_probe_cells`` and scans
+with ``_probe_scan``; SQ runs ``sq_shortlist_rerank``; PQ runs
+``pq_query_tables`` + ``adc_shortlist_rerank``; all rank with
+``cosine_rank_topk``. So ``ivf_topk_from_index``, ``sq_topk_from_index``
+and ``pq_topk_from_index`` equal ``similarity.ivf_topk``, ``sq_topk``
+and ``pq_topk`` bit-for-bit for the same seed/params/codebook by
+construction (asserted by default-tier tests), not because two
+implementations happen to agree.
 """
 
 from __future__ import annotations
@@ -40,9 +46,11 @@ from pyspark.sql import functions as F
 from mandoline_hbase_spark.operators import similarity
 from mandoline_hbase_spark.operators.similarity import (
     _as_double,
-    _cell_scores,
     _centroids,
+    _probe_cells,
+    _probe_scan,
     _spread,
+    assign_cells,
 )
 
 
@@ -90,8 +98,8 @@ def materialize_ann_index(
         # random unit centroids give huge Voronoi radii, so the
         # triangle-inequality cell bounds ivf_exact_topk_from_index
         # prunes with are near-vacuous; a few spherical Lloyd rounds
-        # over a bounded DETERMINISTIC sample (id-hash order, numpy,
-        # driver-side — same sampling idiom as streaming/ann's retrain)
+        # over a bounded DETERMINISTIC sample (unit_sample — the one
+        # streaming/ann's retrain also fits on; numpy, driver-side)
         # tighten cells to the corpus's actual direction clusters.
         # Default OFF: the untrained form keeps the documented
         # bit-for-bit parity with similarity.ivf_topk for the same
@@ -105,18 +113,13 @@ def materialize_ann_index(
             emb_df, m=pq_m, k=pq_k, sample_n=pq_sample_n, id_col=id_col, vec_col=vec_col
         )
 
-    assigned = (
-        _spread(emb_df, id_col)
-        .select(
+    assigned = assign_cells(
+        _spread(emb_df, id_col).select(
             F.col(id_col),
             _as_double(vec_col).alias("embedding"),
             *[F.col(c) for c in meta_cols],
-        )
-        .withColumn("cells", _cell_scores(F.col("embedding"), cents))
-        .withColumn(
-            "cell", (F.array_position("cells", F.array_max("cells")) - 1).cast("int")
-        )
-        .drop("cells")
+        ),
+        cents,
     )
     (
         # repartition on the partition columns first: ONE file per
@@ -202,38 +205,6 @@ def load_ann_meta(index_dir: str) -> dict:
         return json.load(f)
 
 
-def _probe_cells(queries_df: DataFrame, cents, n_probe: int, id_col: str, vec_col: str):
-    """Driver-side probe-cell computation: the query set is the
-    broadcast-bounded side (same contract as pq_topk's lookup tables),
-    so collecting it is O(queries). Returns (rows, probed_cell_set,
-    id_type) with rows = (query_id, qvec, cell).
-
-    The dot products are SEQUENTIAL left-folds — the same summation
-    order as the JVM ``aggregate(zip_with(...))`` expression that
-    assigned the corpus cells and that ``similarity.ivf_topk`` uses to
-    probe — so near-tie cell scores order identically and the served
-    form's bit-for-bit parity claim holds. (A BLAS matvec may sum in a
-    different order and flip a ~1-ulp tie.) Query ids keep their
-    schema type; no integer assumption."""
-    id_type = queries_df.schema[id_col].dataType.simpleString()
-    rows, probed = [], set()
-    for r in queries_df.select(id_col, vec_col).collect():
-        qv = [float(x) for x in r[1]]
-        scores = []
-        for row in cents:
-            acc = 0.0
-            for a, b in zip(qv, row):
-                acc += a * b
-            scores.append(acc)
-        # ties broken by lower cell index, matching the fit-inline
-        # form's array_sort on (-score, idx)
-        order = sorted(range(len(scores)), key=lambda i: (-scores[i], i))[:n_probe]
-        for c in order:
-            rows.append((r[0], qv, int(c)))
-            probed.add(int(c))
-    return rows, sorted(probed), id_type
-
-
 def _where_in(df: DataFrame, filters: dict | None) -> DataFrame:
     """Apply ``filters`` (metadata column -> value or list of values) as
     LITERAL ``isin`` predicates: over partition columns they prune
@@ -243,31 +214,6 @@ def _where_in(df: DataFrame, filters: dict | None) -> DataFrame:
         vals = list(vals) if isinstance(vals, (list, tuple, set)) else [vals]
         df = df.filter(F.col(col).isin(vals))
     return df
-
-
-def _probe_scan(
-    spark: SparkSession, cells: DataFrame, rows, id_type: str, id_name: str
-) -> DataFrame:
-    """The candidate stage of every served IVF form (static, filtered,
-    exact-pruned, stream-maintained): the probe ``rows``
-    ``(query_id, qvec, cell)`` from :func:`_probe_cells` broadcast-join
-    ``cells`` under a LITERAL ``cell IN (...)`` over the probed cells
-    (partition pruning), minus self-pairs. Returns the
-    ``(query_id, qvec, neighbor_id, cvec)`` candidates
-    ``similarity.cosine_rank_topk`` scores."""
-    if not rows:
-        raise ValueError("queries_df is empty")
-    probes = spark.createDataFrame(
-        rows, f"query_id {id_type}, qvec array<double>, cell int"
-    )
-    corpus = cells.filter(
-        F.col("cell").isin(sorted({r[2] for r in rows}))  # literal -> pruning
-    ).select(
-        F.col(id_name).alias("neighbor_id"), F.col("embedding").alias("cvec"), "cell"
-    )
-    return corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
 
 
 def ivf_topk_from_index(
@@ -303,9 +249,7 @@ def ivf_topk_from_index(
         queries_df, meta["centroids"], n_probe, id_col, vec_col
     )
     cells = _where_in(spark.read.parquet(os.path.join(index_dir, "cells")), filters)
-    return similarity.cosine_rank_topk(
-        _probe_scan(spark, cells, rows, id_type, meta["id_col"]), k
-    )
+    return similarity.cosine_rank_topk(_probe_scan(cells, rows, id_type, meta["id_col"]), k)
 
 
 def pq_topk_from_index(
@@ -420,23 +364,12 @@ def sq_topk_from_index(
     codes = _where_in(spark.read.parquet(os.path.join(index_dir, "sq")), filters).select(
         F.col(meta["id_col"]).alias("neighbor_id"), F.col("q_vec").alias("ccode")
     )
-    qcodes = similarity.quantize_int8(queries_df, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("q_vec").alias("qcode")
-    )
-    qvecs = queries_df.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
-    )
-    q = qcodes.join(qvecs, "query_id")
-    cands = (
-        codes.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("idot", similarity.int_dot(F.col("qcode"), F.col("ccode")))
-        .select("query_id", "qvec", "neighbor_id", "idot")
-    )
-    short = similarity._per_query_topk(cands, "idot", shortlist).drop("rank", "idot")
     vectors = _where_in(
         spark.read.parquet(os.path.join(index_dir, "cells")), filters
     ).select(F.col(meta["id_col"]).alias("neighbor_id"), F.col("embedding").alias("cvec"))
-    return similarity.cosine_rank_topk(short.join(vectors, "neighbor_id"), k)
+    return similarity.sq_shortlist_rerank(
+        codes, vectors, queries_df, k, shortlist, id_col, vec_col
+    )
 
 
 def materialize_mrl_index(
@@ -523,33 +456,40 @@ def matryoshka_topk_from_index(
     )
 
 
+def unit_sample(df: DataFrame, k: int, id_col: str, vec_col: str):
+    """The bounded DETERMINISTIC corpus sample every centroid fit uses
+    (``_sample_kmeans`` here, ``streaming/ann.retrain_ann_index``): the
+    first ``max(64*k, 1024)`` vectors in id-hash order (spread across
+    the corpus, stable across partitionings), nonzero ones made unit, as
+    one ``(n, dim)`` numpy array — empty when no nonzero vector exists."""
+    import numpy as np
+
+    rows = (
+        df.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        .limit(max(64 * k, 1024))
+        .collect()
+    )
+    vecs = (np.asarray(r[1], dtype=np.float64) for r in rows)
+    return np.asarray([v / nv for v in vecs if (nv := float(np.linalg.norm(v))) > 0])
+
+
 def _sample_kmeans(
     emb_df: DataFrame,
     cents,
     iters: int = 3,
-    sample_n: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Spherical Lloyd refinement over a deterministic corpus sample,
-    entirely in numpy on the driver (the sample is bounded; no extra
-    Spark passes). Sampling is id-hash ordered — stable across
-    partitionings — and empty cells keep their previous centroid, so
-    the result is deterministic for a given corpus + seed centroids."""
+    """Spherical Lloyd refinement over the :func:`unit_sample`, entirely
+    in numpy on the driver (the sample is bounded; no extra Spark
+    passes). Empty cells keep their previous centroid, so the result is
+    deterministic for a given corpus + seed centroids; a corpus with no
+    nonzero vector returns ``cents`` unchanged."""
     import numpy as np
 
     k = len(cents)
-    n = sample_n or max(64 * k, 1024)
-    sample = [
-        np.asarray(r[1], dtype=np.float64)
-        for r in emb_df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(int(n))
-        .collect()
-    ]
-    unit = np.asarray(
-        [v / nv for v in sample if (nv := float(np.linalg.norm(v))) > 0]
-    )
+    unit = unit_sample(emb_df, k, id_col, vec_col)
     if len(unit) == 0:
         return cents
     c = np.asarray(cents, dtype=np.float64)
@@ -655,7 +595,7 @@ def ivf_exact_topk_from_index(
     cents = meta["centroids"]
     rows, _, id_type = _probe_cells(queries_df, cents, n_probe, id_col, vec_col)
     cells = spark.read.parquet(os.path.join(index_dir, "cells"))
-    phase1 = _probe_scan(spark, cells, rows, id_type, meta["id_col"])
+    phase1 = _probe_scan(cells, rows, id_type, meta["id_col"])
     # per-query probed set + query vectors from the probe rows
     probed_by_q: dict = {}
     qvec_by_q: dict = {}
@@ -746,5 +686,5 @@ def ivf_exact_topk_from_index(
     ]
     if not extra_rows:
         return similarity.cosine_rank_topk(phase1, k)
-    phase2 = _probe_scan(spark, cells, extra_rows, id_type, meta["id_col"])
+    phase2 = _probe_scan(cells, extra_rows, id_type, meta["id_col"])
     return similarity.cosine_rank_topk(phase1.unionByName(phase2), k)

@@ -142,8 +142,6 @@ def lsh_topk(
     the bucket, so each task touches buckets' worth of vectors instead
     of the corpus.
     """
-    from pyspark.sql import Window
-
     corpus_sig = lsh_signatures(
         _spread(emb_df, id_col), dim, n_planes, seed, id_col, vec_col
     ).select(
@@ -178,14 +176,12 @@ def lsh_topk(
         )
         .drop("qbucket")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("sim", cosine_sim(_as_double("qvec"), _as_double("cvec")))
+        .select(
+            "query_id", _as_double("qvec").alias("qvec"),
+            "neighbor_id", _as_double("cvec").alias("cvec"),
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("sim", 6).alias("sim"))
-    )
+    return cosine_rank_topk(cands, k)
 
 
 def _centroids(dim: int, n_centroids: int, seed: int = 7) -> np.ndarray:
@@ -218,6 +214,75 @@ def _cell_scores(vec_col, cents: np.ndarray):
     )
 
 
+def assign_cells(df: DataFrame, cents) -> DataFrame:
+    """Add the IVF ``cell`` of every row's ``embedding`` (an
+    ``array<double>`` column): the argmax dot product against the
+    centroid literals, ties to the lower cell index (``array_position``
+    finds the first maximum). The one assignment rule of the fit-inline
+    corpus, the materialized ``cells/`` table, every streamed batch and
+    every retrain pass."""
+    return (
+        df.withColumn("cells", _cell_scores(F.col("embedding"), cents))
+        .withColumn(
+            "cell", (F.array_position("cells", F.array_max("cells")) - 1).cast("int")
+        )
+        .drop("cells")
+    )
+
+
+def _probe_cells(queries_df: DataFrame, cents, n_probe: int, id_col: str, vec_col: str):
+    """The IVF probe rule of every form (fit-inline, served, filtered,
+    exact-pruned, IVF-PQ, stream-maintained): each query's top-``n_probe``
+    cells by dot product, ties to the lower cell index. Computed on the
+    driver because the query set is the broadcast-bounded side (same
+    contract as ``pq_query_tables``), so collecting it is O(queries).
+    Returns (rows, probed_cell_set, id_type) with rows =
+    (query_id, qvec, cell).
+
+    The dot products are SEQUENTIAL left-folds, the summation order of
+    the JVM ``aggregate(zip_with(...))`` in :func:`assign_cells`, so a
+    corpus vector used as a query probes its own cell first. (A BLAS
+    matvec may sum in a different order and flip a ~1-ulp tie.) Query
+    ids keep their schema type; no integer assumption."""
+    id_type = queries_df.schema[id_col].dataType.simpleString()
+    rows, probed = [], set()
+    for r in queries_df.select(id_col, vec_col).collect():
+        qv = [float(x) for x in r[1]]
+        scores = []
+        for row in cents:
+            acc = 0.0
+            for a, b in zip(qv, row):
+                acc += a * b
+            scores.append(acc)
+        order = sorted(range(len(scores)), key=lambda i: (-scores[i], i))[:n_probe]
+        for c in order:
+            rows.append((r[0], qv, int(c)))
+            probed.add(int(c))
+    return rows, sorted(probed), id_type
+
+
+def _probe_scan(cells: DataFrame, rows, id_type: str, id_name: str) -> DataFrame:
+    """The IVF candidate stage: the probe ``rows`` ``(query_id, qvec,
+    cell)`` from :func:`_probe_cells` broadcast-join ``cells`` (an
+    ``(id_name, embedding, cell)`` frame: the inline assignment, the
+    materialized ``cells/`` table or the stream-maintained batch dirs)
+    under a LITERAL ``cell IN (...)`` over the probed cells (partition
+    pruning on a materialized table), minus self-pairs. Returns the
+    ``(query_id, qvec, neighbor_id, cvec)`` candidates
+    :func:`cosine_rank_topk` scores; an empty ``rows`` gives none."""
+    probes = cells.sparkSession.createDataFrame(
+        rows, f"query_id {id_type}, qvec array<double>, cell int"
+    )
+    corpus = cells.filter(
+        F.col("cell").isin(sorted({r[2] for r in rows}))  # literal -> pruning
+    ).select(
+        F.col(id_name).alias("neighbor_id"), F.col("embedding").alias("cvec"), "cell"
+    )
+    return corpus.join(F.broadcast(probes), "cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+
+
 def ivf_topk(
     emb_df: DataFrame,
     queries_df: DataFrame,
@@ -232,52 +297,39 @@ def ivf_topk(
     """IVF-style ANN: coarse-quantize the corpus into centroid cells, probe
     the query's top-``n_probe`` cells, exact-rerank candidates.
 
-    Corpus side: one argmax assignment per vector (map-only) — at scale
-    this is the partitioning/bucketing key, so cell scans are pruned
-    reads. Query side: explode ``n_probe`` cells per query, bucket-join,
-    rerank. Recall rises with n_probe; n_probe = n_centroids degrades
-    gracefully to exact brute force.
+    Corpus side: one argmax assignment per vector (map-only,
+    :func:`assign_cells`) — at scale this is the partitioning/bucketing
+    key, so cell scans are pruned reads (``ann_index``). Query side:
+    :func:`_probe_cells`, then the :func:`_probe_scan` bucket join and
+    :func:`cosine_rank_topk` — the stages every served form runs, so the
+    forms differ only in where the assigned vectors come from. Recall
+    rises with n_probe; n_probe = n_centroids degrades gracefully to
+    exact brute force.
     """
     cents = _centroids(dim, n_centroids, seed)
-    corpus = (
-        _spread(emb_df, id_col)
-        .select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cvec"))
-        .withColumn("cells", _cell_scores(F.col("cvec"), cents))
-        .withColumn("cell", (F.array_position("cells", F.array_max("cells")) - 1).cast("int"))
-        .drop("cells")
+    cells = assign_cells(
+        _spread(emb_df, id_col).select(
+            F.col(id_col), _as_double(vec_col).alias("embedding")
+        ),
+        cents,
     )
-    probes = (
-        queries_df.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec"))
-        .withColumn("cells", _cell_scores(F.col("qvec"), cents))
-        .withColumn(
-            "probe_cells",
-            F.slice(
-                F.expr(
-                    "transform(array_sort(zip_with(cells, sequence(0, size(cells)-1),"
-                    " (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"
-                ),
-                1,
-                n_probe,
-            ),
-        )
-        .select("query_id", "qvec", F.explode("probe_cells").alias("cell"))
-    )
-    cands = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return cosine_rank_topk(cands, k)
+    rows, _, id_type = _probe_cells(queries_df, cents, n_probe, id_col, vec_col)
+    return cosine_rank_topk(_probe_scan(cells, rows, id_type, id_col), k)
 
 
 def cosine_rank_topk(cands: DataFrame, k: int) -> DataFrame:
     """The exact-rerank tail of every ANN form — exact cosine over
     candidate pairs, then the per-query rank window with the (sim desc,
     neighbor asc) tie-break and round-6 score. ONE definition shared by
-    the fit-inline (``ivf_topk``, ``sq_topk``), served
-    (``ann_index.{ivf,sq}_topk_from_index``, filtered or not, and
-    ``ivf_exact_topk_from_index``), stream-maintained
-    (``streaming/ann.ivf_search``) and PQ-rerank
-    (``adc_shortlist_rerank``) forms, so a tie-break or rounding fix
-    applies to all of them by construction.
+    the IVF candidate stage (:func:`_probe_scan`: ``ivf_topk``,
+    ``ann_index.ivf_topk_from_index``, filtered or not,
+    ``ann_index.ivf_exact_topk_from_index`` and
+    ``streaming/ann.ivf_search``), the SQ shortlist
+    (:func:`sq_shortlist_rerank`: ``sq_topk``,
+    ``ann_index.sq_topk_from_index``), the PQ shortlist
+    (:func:`adc_shortlist_rerank`: ``pq_topk``,
+    ``ann_index.pq_topk_from_index``) and ``lsh_topk``, so a tie-break
+    or rounding fix applies to all of them by construction.
     ``cands``: ``(query_id, qvec, neighbor_id, cvec)`` rows. The
     ``rank <= k`` filter rewrites to WindowGroupLimit (map-side partial
     top-k per query, never a full per-query sort)."""
@@ -502,6 +554,30 @@ def sq_topk(
     codes = quantize_int8(emb_df, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("q_vec").alias("ccode")
     )
+    vectors = _spread(emb_df, id_col).select(
+        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cvec")
+    )
+    return sq_shortlist_rerank(codes, vectors, queries_df, k, shortlist, id_col, vec_col)
+
+
+def sq_shortlist_rerank(
+    codes: DataFrame,
+    vectors: DataFrame,
+    queries_df: DataFrame,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The SQ8 candidate stage, the SQ twin of :func:`adc_shortlist_rerank`:
+    quantize the queries (``quantize_int8``), shortlist ``shortlist``
+    candidates per query by the exact BIGINT ``int_dot`` (ties to the
+    lower id), then the exact-cosine rerank of :func:`cosine_rank_topk`.
+    Used by the fit-inline (``sq_topk``) and served
+    (``ann_index.sq_topk_from_index``) forms, which differ only in where
+    ``codes`` ``(neighbor_id, ccode)`` and ``vectors``
+    ``(neighbor_id, cvec)`` come from; ``vectors`` is read for the
+    shortlisted ids only (id-keyed join)."""
     qcodes = quantize_int8(queries_df, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("q_vec").alias("qcode")
     )
@@ -515,9 +591,6 @@ def sq_topk(
         .select("query_id", "qvec", "neighbor_id", "idot")
     )
     short = _per_query_topk(cands, "idot", shortlist).drop("rank", "idot")
-    vectors = _spread(emb_df, id_col).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cvec")
-    )
     return cosine_rank_topk(short.join(vectors, "neighbor_id"), k)
 
 

@@ -85,6 +85,12 @@ def merge_iteration_stats(final: dict, iterations: list[dict]) -> dict:
     return out
 
 
+def _no_expr_ids(s: str) -> str:
+    """``s`` without expression ids (``#123``): they differ on every
+    planning, so a regenerated audit then diffs only what changed."""
+    return re.sub(r"#\d+", "", s)
+
+
 def plan_stats(df: DataFrame) -> dict[str, Any]:
     """Structural counts for a DataFrame's physical plan."""
     plan = _plan_string(df)
@@ -123,8 +129,8 @@ def plan_stats(df: DataFrame) -> dict[str, Any]:
         + plan.count("MapInPandas"),
         "codegen_spans": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
         "file_scans": len(scans),
-        "scan_columns": [s for s in scans],
-        "pushed_filters": [p for p in pushed if p],
+        "scan_columns": [_no_expr_ids(s) for s in scans],
+        "pushed_filters": [_no_expr_ids(p) for p in pushed if p],
         "take_ordered": plan.count("TakeOrderedAndProject"),
     }
 

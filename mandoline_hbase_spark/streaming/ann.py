@@ -25,9 +25,9 @@ Layout under ``index_dir``:
   ``cells-g001/``, ``cells-g002/`` …): one deterministically-named
   directory per micro-batch, each internally partitioned by ``cell``;
   replays overwrite their own directory (idempotent, the
-  streaming/search.py discipline). Readers glob ``batch-*`` with a
-  ``basePath`` so the ``cell=N`` partition column survives — and cell
-  pruning still prunes, per batch directory.
+  streaming/search.py discipline). Readers list the ``batch-*`` dirs
+  and read each with its own ``basePath`` so the ``cell=N`` partition
+  column survives — and cell pruning still prunes, per batch directory.
 - Compaction (``compact_ann_index``) folds batch dirs into one
   consolidated batch, same crash-convergence contract as
   ``streaming/search.compact_index``: a crash between the rename and
@@ -41,9 +41,12 @@ Layout under ``index_dir``:
   disk (a racing reader may still be serving from one — never rmtree
   a served dir); ``gc_ann_generations`` removes them after a quiesce.
 
-Serving (``ivf_search``) reuses the probe computation, pruned cell scan
-and scoring of the static path, so stream-maintained results equal a fit-inline
-``similarity.ivf_topk`` over the union corpus — asserted by tests.
+Batch appends, retrains and serving (``ivf_search``) run the IVF stages
+the static and fit-inline forms run (``similarity.assign_cells``,
+``_probe_cells``, ``_probe_scan``, ``cosine_rank_topk``); the stream
+index is only one more source of assigned vectors. So stream-maintained
+results equal a fit-inline ``similarity.ivf_topk`` over the union corpus
+by construction — asserted by a default-tier test.
 """
 
 from __future__ import annotations
@@ -57,13 +60,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mandoline_hbase_spark.lease import maintenance_lease
-from mandoline_hbase_spark.operators.ann_index import _probe_cells, _probe_scan
+from mandoline_hbase_spark.operators.ann_index import unit_sample
 from mandoline_hbase_spark.operators.similarity import (
     _as_double,
-    _cell_scores,
     _centroids,
+    _probe_cells,
+    _probe_scan,
+    assign_cells,
     cosine_rank_topk,
 )
+from mandoline_hbase_spark.streaming.search import batch_dirs
 
 
 def init_ann_index(
@@ -113,20 +119,6 @@ def _batch_dir(index_dir: str, batch_id: int, meta: dict) -> str:
     return os.path.join(_cells_root(index_dir, meta), f"batch-{int(batch_id):010d}")
 
 
-def _assign_cells(df: DataFrame, cents, id_col: str, vec_col: str) -> DataFrame:
-    """(id, embedding, cell) with the serving path's exact assignment
-    expression: max dot product against the centroid literals, ties to
-    the lower cell index (array_position finds the first maximum)."""
-    return (
-        df.select(F.col(id_col), _as_double(vec_col).alias("embedding"))
-        .withColumn("cells", _cell_scores(F.col("embedding"), cents))
-        .withColumn(
-            "cell", (F.array_position("cells", F.array_max("cells")) - 1).cast("int")
-        )
-        .drop("cells")
-    )
-
-
 def append_ann_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -160,7 +152,12 @@ def append_ann_batch(
     meta = _load_meta(index_dir)
     for _ in range(5):
         cents = np.asarray(meta["centroids"], dtype=np.float64)
-        assigned = _assign_cells(batch_df, cents, meta["id_col"], vec_col)
+        assigned = assign_cells(
+            batch_df.select(
+                F.col(meta["id_col"]), _as_double(vec_col).alias("embedding")
+            ),
+            cents,
+        )
         (
             assigned.repartition(int(meta["n_centroids"]), F.col("cell"))
             .write.mode("overwrite")
@@ -214,16 +211,7 @@ def read_cells(
 
     if meta is None:
         meta = _load_meta(index_dir)
-    root = _cells_root(index_dir, meta)
-    sources = (
-        sorted(
-            e.path
-            for e in os.scandir(root)
-            if e.is_dir() and e.name.startswith("batch-")
-        )
-        if os.path.isdir(root)
-        else []
-    )
+    sources = batch_dirs(_cells_root(index_dir, meta))
     if not sources:
         return spark.createDataFrame(
             [],
@@ -268,13 +256,7 @@ def compact_ann_index(
     ):
         meta = _load_meta(index_dir)
         root = _cells_root(index_dir, meta)
-        if not os.path.isdir(root):
-            return 0
-        sources = sorted(
-            e.path
-            for e in os.scandir(root)
-            if e.is_dir() and e.name.startswith("batch-")
-        )
+        sources = batch_dirs(root)
         if len(sources) <= 1:
             return len(sources)
         df = read_cells(spark, index_dir, dedup=True, meta=meta)
@@ -429,21 +411,10 @@ def retrain_ann_index(
         dim = int(meta["dim"])
         gen = 1 + int(meta.get("generation", 0))
 
-        # -- init: k-means++ over a bounded deterministic sample ---------
-        # (ordered by id hash: spread across the corpus, stable across
-        # partitionings; the rng seed folds in the generation so a
-        # retried retrain re-derives identical centroids)
-        sample_n = max(64 * k, 1024)
-        sample = [
-            np.asarray(r["embedding"], dtype=np.float64)
-            for r in df.select(id_col, "embedding")
-            .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-            .limit(sample_n)
-            .collect()
-        ]
-        unit = np.asarray(
-            [v / nv for v in sample if (nv := float(np.linalg.norm(v))) > 0]
-        )
+        # -- init: k-means++ over the bounded deterministic unit_sample --
+        # (the rng seed folds in the generation so a retried retrain
+        # re-derives identical centroids)
+        unit = unit_sample(df, k, id_col, "embedding")
         if len(unit) == 0:
             raise ValueError("cannot retrain: every indexed vector is zero")
         rng = np.random.default_rng(int(meta["seed"]) + 7919 * gen)
@@ -471,7 +442,7 @@ def retrain_ann_index(
             vnorm > 0, F.transform("embedding", lambda x: x / vnorm)
         )  # zero vectors -> null, ignored by avg
         for _ in range(int(iters)):
-            assigned = _assign_cells(df, cents, id_col, "embedding")
+            assigned = assign_cells(df.select(id_col, "embedding"), cents)
             rows = (
                 assigned.withColumn("_unit", unit_vec)
                 .groupBy("cell")
@@ -494,7 +465,7 @@ def retrain_ann_index(
         # directory scan: a crashed retrain's junk root has this same
         # number and is simply overwritten by the deterministic retry
         new_root = os.path.join(index_dir, f"cells-g{gen:03d}")
-        assigned = _assign_cells(df, cents, id_col, "embedding")
+        assigned = assign_cells(df.select(id_col, "embedding"), cents)
         per_cell = assigned.groupBy("cell").agg(
             F.greatest(
                 F.lit(1), F.ceil(F.count(F.lit(1)) / F.lit(int(max(1, target_rows))))
@@ -709,10 +680,11 @@ def ivf_search(
     vec_col: str = "embedding",
     dedup: bool = False,
 ) -> DataFrame:
-    """Serve an IVF query from the stream-maintained index — identical
-    probe computation and scoring to the static served path, so results
-    equal ``similarity.ivf_topk`` over the union corpus. The cell
-    predicate prunes ``cell=N`` partitions inside every batch dir.
+    """Serve an IVF query from the stream-maintained index — the IVF
+    candidate stage of every form (``similarity._probe_cells`` +
+    ``_probe_scan``) over the batch dirs, so results equal
+    ``similarity.ivf_topk`` over the union corpus. The cell predicate
+    prunes ``cell=N`` partitions inside every batch dir.
 
     The codebook pointer is consumed EXACTLY ONCE (the loaded ``meta``
     feeds both the probe computation and the cells read), so a retrain
@@ -723,4 +695,4 @@ def ivf_search(
         queries_df, meta["centroids"], n_probe, meta["id_col"], vec_col
     )
     cells = read_cells(spark, index_dir, dedup=dedup, meta=meta)
-    return cosine_rank_topk(_probe_scan(spark, cells, rows, id_type, meta["id_col"]), k)
+    return cosine_rank_topk(_probe_scan(cells, rows, id_type, meta["id_col"]), k)

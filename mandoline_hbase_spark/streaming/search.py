@@ -52,6 +52,19 @@ def _batch_dir(index_dir: str, role: str, batch_id: int) -> str:
     return os.path.join(index_dir, role, f"batch-{int(batch_id):010d}")
 
 
+def batch_dirs(root: str) -> list[str]:
+    """The sorted ``batch-*`` directories under ``root`` (none when
+    ``root`` is missing); staging dirs are dot-prefixed and never
+    listed. Readers pass these as explicit paths: a glob path makes
+    Spark's ``FileStreamSink.hasMetadata`` fail (and log a stack trace)
+    on every read."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        e.path for e in os.scandir(root) if e.is_dir() and e.name.startswith("batch-")
+    )
+
+
 def append_index_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -113,9 +126,9 @@ def read_index(
     rollback) never needs it."""
     out = []
     for role, ddl in (("tf", _tf_ddl(id_col)), ("dl", _dl_ddl(id_col))):
-        root = os.path.join(index_dir, role)
-        if os.path.isdir(root) and any(os.scandir(root)):
-            df = spark.read.schema(ddl).parquet(os.path.join(root, "batch-*"))
+        paths = batch_dirs(os.path.join(index_dir, role))
+        if paths:
+            df = spark.read.schema(ddl).parquet(*paths)
         else:
             df = spark.createDataFrame([], ddl)
         out.append(df.dropDuplicates() if dedup else df)
@@ -178,24 +191,17 @@ def compact_index(
         stats = {}
         for role in ("tf", "dl"):
             root = os.path.join(index_dir, role)
-            if not os.path.isdir(root):
-                stats[role] = 0
-                continue
-            sources = sorted(
-                e.path
-                for e in os.scandir(root)
-                if e.is_dir() and e.name.startswith("batch-")
-            )
+            sources = batch_dirs(root)
             if len(sources) <= 1:
                 stats[role] = len(sources)
                 continue
             df = spark.read.parquet(*sources).dropDuplicates()
             n = df.count()
             k = max(1, math.ceil(n / max(1, target_rows)))
-            # "batch-compacted-N" matches read_index's batch-* glob but can
-            # never collide with a stream batch dir (digits only); N bumps
-            # past any earlier compaction. Staged dot-prefixed (invisible
-            # to the glob), then atomically renamed BEFORE sources are
+            # "batch-compacted-N" is listed by batch_dirs but can never
+            # collide with a stream batch dir (digits only); N bumps past
+            # any earlier compaction. Staged dot-prefixed (invisible to
+            # batch_dirs), then atomically renamed BEFORE sources are
             # removed — a crash in between leaves duplicates, which the
             # next compaction's dropDuplicates folds away.
             gen = 1 + max(

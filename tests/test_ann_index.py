@@ -43,6 +43,27 @@ def test_served_ivf_equals_fit_inline(spark, built):
     assert got == want and got
 
 
+@pytest.mark.parametrize("form", ["ivf_topk", "ivf_topk_from_index", "ivf_search"])
+def test_empty_query_set_gives_empty_frame(spark, built, tmp_path, form):
+    """Every IVF form shares one probe stage, which builds its probe
+    frame from the DDL: no queries means an empty answer, not an error."""
+    from mandoline_hbase_spark.streaming import ann as sann
+
+    emb, index_dir, _ = built
+    none = emb.filter(F.col("vec_id") < 0)
+    if form == "ivf_topk":
+        out = similarity.ivf_topk(emb, none, dim=64, k=5, n_centroids=8, n_probe=3, seed=7)
+    elif form == "ivf_topk_from_index":
+        out = ann_index.ivf_topk_from_index(spark, index_dir, none, k=5, n_probe=3)
+    else:
+        stream_dir = str(tmp_path / "stream")
+        sann.init_ann_index(stream_dir, dim=64, n_centroids=8, seed=7)
+        sann.append_ann_batch(emb.filter(F.col("vec_id") < 30), 0, stream_dir)
+        out = sann.ivf_search(spark, stream_dir, none, k=5, n_probe=3)
+    assert out.columns == ["query_id", "rank", "neighbor_id", "sim"]
+    assert out.collect() == []
+
+
 def test_served_ivf_scan_is_partition_pruned(spark, built):
     """The probe set becomes a LITERAL cell IN (...) predicate, so the
     cells/ scan prunes non-probed partitions at planning time — the
